@@ -168,15 +168,22 @@ def _train_coarse_gemm(
     x32 = np.ascontiguousarray(sample, dtype=np.float32)
     chunk = max(1, 16_000_000 // max(k, 1))  # (chunk, k) f32 scores ≈ 64 MB
     codes = np.empty(n, dtype=np.int64)
+
+    def assign(s: int) -> None:
+        e = min(s + chunk, n)
+        sc = x32[s:e] @ c32.T
+        sc *= -2.0
+        sc += csq[None, :]
+        codes[s:e] = np.argmin(sc, axis=1)
+
+    from fastpyvectordb_spark.ann.ivfpq import _get_pool
+
     for _ in range(max_iter):
         c32 = cents.astype(np.float32)
         csq = np.einsum("ij,ij->i", c32, c32)
-        for s in range(0, n, chunk):
-            e = min(s + chunk, n)
-            sc = x32[s:e] @ c32.T
-            sc *= -2.0
-            sc += csq[None, :]
-            codes[s:e] = np.argmin(sc, axis=1)
+        # chunks write disjoint codes[s:e] with the same GEMM shapes as
+        # a serial loop, so pooling leaves the codes bit-identical
+        list(_get_pool().map(assign, range(0, n, chunk)))
         cnt = np.bincount(codes, minlength=k)
         acc = np.stack(
             [
@@ -485,10 +492,14 @@ def ivf_search_local_one(
     over the concatenated candidates instead of per-list cuts + a
     merge buffer. Returns ``(ids, dists)`` — ids from ``packed.ids``,
     dists float64 UNROUNDED — ordered by (dist, id). Bit-identical to
-    the batch path at nq==1 (identical BLAS call shapes, and top-k by
-    (dist, id) over all candidates equals the (dist, id) merge of
-    tie-aware per-list top-ks — pinned by a stash-comparison run and
-    the single-vs-batch tests). The serving hot path (REST ANN route,
+    the batch path at nq==1 for one BLAS build and thread count
+    (identical BLAS call shapes, and top-k by (dist, id) over all
+    candidates equals the (dist, id) merge of tie-aware per-list
+    top-ks — pinned by a stash-comparison run and the single-vs-batch
+    tests). Across thread counts identity does not hold: with OpenBLAS
+    0.3.23 on a 4-core Xeon, a ``(1, 128) @ (128, n)`` GEMM differs by
+    up to 5e-6 between 4 threads and 1 for n from 100 to 700.
+    The serving hot path (REST ANN route,
     ``Collection.search_ann``) calls this directly to skip two
     DataFrame constructions per request."""
     nprobe = _resolve_nprobe(nprobe, packed.centroids.shape[0])
@@ -628,26 +639,22 @@ def ivf_search_local(
 
     # The per-list scan loop has two regimes, decided by who owns the
     # cores (round 11, measured best-of-7 on a quiet host):
-    #  - BLAS pinned to 1 thread (executor python workers — session.py
-    #    sets OPENBLAS/OMP/MKL_NUM_THREADS=1 because every core already
-    #    runs a Spark task): a Python-level pool over the probed lists
-    #    restores parallelism; GEMM/fixup/argpartition all release the
-    #    GIL and per-list math is schedule-independent (bit-identical
-    #    to serial).
-    #  - BLAS multi-threaded (the DRIVER serving path): OpenBLAS
-    #    already fans each GEMM across the cores, and a 16-thread pool
-    #    on top oversubscribes — measured 3.4-7× SLOWER than serial
-    #    (316 lists/100q: 33 ms serial vs 169 ms pooled; 316/1024q:
-    #    85 ms vs 219 ms). Serial-with-parallel-BLAS is the fast path.
+    #  - BLAS on 1 thread (executor python workers and the driver —
+    #    session.get_spark pins both): a Python-level pool over the
+    #    probed lists restores parallelism; GEMM/fixup/argpartition all
+    #    release the GIL and per-list math is schedule-independent
+    #    (bit-identical to serial).
+    #  - BLAS multi-threaded (or unknown): OpenBLAS already fans each
+    #    GEMM across the cores, and a 16-thread pool on top
+    #    oversubscribes — measured 3.4-7× SLOWER than serial (316
+    #    lists/100q: 33 ms serial vs 169 ms pooled; 316/1024q: 85 ms
+    #    vs 219 ms).
     import os as _os
 
+    from fastpyvectordb_spark.session import blas_threads
+
     uniq = [int(x) for x in np.unique(probe)]
-    blas_pinned = any(
-        _os.environ.get(v) == "1"
-        for v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
-                  "MKL_NUM_THREADS")
-    )
-    if blas_pinned:
+    if blas_threads() == 1:
         nt = max(1, min(16, (_os.cpu_count() or 2) // 2, len(uniq)))
     else:
         nt = 1

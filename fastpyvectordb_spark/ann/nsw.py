@@ -541,10 +541,10 @@ def nsw_search_local(
         # identical arithmetic to the graph kernel, so the merge is
         # precision-consistent. Same over-select-then-exact policy as
         # exact_search_packed. Query blocks fan across a thread pool
-        # (GEMM / argpartition / gathers all release the GIL): this
-        # container's OpenBLAS caps at 2 threads per GEMM, so block
-        # threading — the _gemm_topk_chunked pattern — is what restores
-        # the multi-core speedup driver-side. Per-row math is
+        # (GEMM / argpartition / gathers all release the GIL): the
+        # driver's OpenBLAS runs one thread (session.get_spark), so
+        # block threading — the _gemm_topk_chunked pattern — is what
+        # gives the multi-core speedup driver-side. Per-row math is
         # block-size-independent, so results are bit-identical to the
         # old single-threaded 256-row chunks.
         vm32, sqall32 = _ensure_f32(packed)

@@ -1461,7 +1461,9 @@ class Collection:
             ),
             F.lit(event_type).alias("event_type"),
             F.lit(os.path.basename(self.path)).alias("collection"),
-            F.col("id").alias("doc_id"),
+            # string like every other event writer: the stream schema
+            # is ``doc_id string`` whatever the collection's id type
+            F.col("id").cast("string").alias("doc_id"),
             F.current_timestamp().alias("ts"),
         )
         ev.write.mode("append").parquet(

@@ -244,11 +244,11 @@ def _gemm_topk_chunked(
     ``argpartition`` row-contiguous.
 
     ``n_threads > 1`` fans *query blocks* across a thread pool (GEMM
-    and argpartition release the GIL). This container's OpenBLAS is
-    built with MAX_THREADS=2, so BLAS cannot parallelize a single GEMM
-    itself — query-block threading restores the multi-core speedup
-    driver-side. Executor-side callers must keep the default 1: Spark
-    already runs one task per core.
+    and argpartition release the GIL). ``session.get_spark`` runs the
+    driver's OpenBLAS on one thread, so query-block threading is what
+    gives a driver-side GEMM its multi-core speedup. Executor-side
+    callers must keep the default 1: Spark already runs one task per
+    core.
     """
     import numpy as np
 

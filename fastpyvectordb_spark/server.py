@@ -26,6 +26,7 @@ import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from fastpyvectordb_spark.catalog import VectorDB
+from fastpyvectordb_spark.session import blas_threads
 
 _INTERNAL = ("id", "embedding")
 
@@ -173,6 +174,9 @@ class _Handler(BaseHTTPRequestHandler):
                 "status": "ok",
                 "collections": len(self.db.list_collections()),
                 "engine": "fastpyvectordb_spark",
+                # the driver's parallelism regime: 1 = request threads
+                # and explicit pools only; None = BLAS is not OpenBLAS
+                "blas_threads": blas_threads(),
             },
         )
 

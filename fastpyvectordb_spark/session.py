@@ -8,10 +8,59 @@ pandas-UDF exchange), sensible shuffle parallelism.
 
 from __future__ import annotations
 
+import ctypes
+import functools
+import glob
 import logging
 import os
 
 from pyspark.sql import SparkSession
+
+# (setter, getter) symbol pairs of the OpenBLAS builds NumPy wheels
+# ship: ILP64 with the 64_ suffix, plain LP64, and scipy-openblas
+_OPENBLAS_API = (
+    ("openblas_set_num_threads64_", "openblas_get_num_threads64_"),
+    ("openblas_set_num_threads", "openblas_get_num_threads"),
+    ("scipy_openblas_set_num_threads64_", "scipy_openblas_get_num_threads64_"),
+)
+
+
+@functools.cache
+def _openblas():
+    """``(set_num_threads, get_num_threads)`` of the OpenBLAS NumPy
+    loaded, or None when NumPy runs on another BLAS."""
+    import numpy
+
+    try:
+        with open("/proc/self/maps") as f:
+            paths = {ln.split()[-1] for ln in f if "openblas" in ln.lower()}
+    except OSError:  # no procfs: the wheel's bundled copy
+        libs = os.path.join(os.path.dirname(numpy.__path__[0]), "numpy.libs")
+        paths = set(glob.glob(os.path.join(libs, "*openblas*")))
+    for path in sorted(p for p in paths if os.path.isabs(p)):
+        lib = ctypes.CDLL(path)
+        for set_name, get_name in _OPENBLAS_API:
+            if hasattr(lib, set_name) and hasattr(lib, get_name):
+                setter, getter = getattr(lib, set_name), getattr(lib, get_name)
+                setter.argtypes, setter.restype = [ctypes.c_int], None
+                getter.argtypes, getter.restype = [], ctypes.c_int
+                return setter, getter
+    return None
+
+
+def blas_threads() -> int | None:
+    """Threads the driver's OpenBLAS fans one call across (None when
+    NumPy does not use OpenBLAS)."""
+    api = _openblas()
+    return None if api is None else api[1]()
+
+
+def pin_blas_to_one_thread() -> None:
+    """Run OpenBLAS single-threaded in this process (a no-op without
+    OpenBLAS); :func:`blas_threads` reports the result."""
+    api = _openblas()
+    if api is not None:
+        api[0](1)
 
 
 def get_spark(
@@ -46,10 +95,18 @@ def get_spark(
     # every core already runs a Spark task, so a multi-threaded
     # OpenBLAS inside each of the 32 workers oversubscribes the box
     # ~32x (and OpenBLAS spin-waits, starving the JVM long after the
-    # GEMM finishes). Driver-side BLAS stays multi-threaded for the
-    # local-GEMM fast path.
+    # GEMM finishes).
     for var, val in blas_pin.items():
         builder = builder.config(f"spark.executorEnv.{var}", val)
+    # The driver gets the same policy. Its BLAS calls are per-request
+    # matvecs and small GEMMs: a multi-threaded OpenBLAS wakes every
+    # worker for each one, and the workers then spin-wait between
+    # requests, burning the cores that request threads and the JVM's
+    # commit jobs need. Driver parallelism comes from concurrent
+    # request threads (NumPy releases the GIL inside BLAS) and the
+    # explicit pools instead. NumPy is already imported here, so the
+    # env vars above would come too late: set it through the library.
+    pin_blas_to_one_thread()
     # escape hatch for one-off heavy runs ("key=value;key=value") —
     # e.g. tools/scale_spotcheck.py sets an aggressive
     # spark.cleaner.periodicGC.interval so multi-phase shuffle files

@@ -1087,3 +1087,130 @@ def test_pq_assign_matches_naive_reference():
             ref[s:e, m] = b.argmin(1)
 
     assert np.array_equal(_pq_assign_all(x3, cbs), ref)
+
+
+def test_get_pool_first_call_race_shares_one_pool(monkeypatch):
+    """Threads racing the first ``_get_pool`` call must all get the
+    same executor — a check-then-set without a lock lets each build
+    its own and leak the losers' idle threads."""
+    import concurrent.futures
+    import sys
+    import threading
+    import time
+
+    from fastpyvectordb_spark.ann import ivfpq
+
+    real = concurrent.futures.ThreadPoolExecutor
+    made = []
+
+    def slow_executor(*args, **kwargs):
+        time.sleep(0.05)  # widen the check-then-set window
+        pool = real(*args, **kwargs)
+        made.append(pool)
+        return pool
+
+    monkeypatch.setattr(ivfpq, "_POOL", None)
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", slow_executor)
+    n_threads = 16
+    barrier = threading.Barrier(n_threads)
+    got = [None] * n_threads
+
+    def first_call(i):
+        barrier.wait(timeout=10)
+        got[i] = ivfpq._get_pool()
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=first_call, args=(i,))
+            for i in range(n_threads)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old_interval)
+        for pool in made:
+            pool.shutdown(wait=False)
+    assert len(made) == 1
+    assert all(p is made[0] for p in got)
+
+
+def test_coarse_gemm_pooled_chunks_match_serial_lloyd():
+    """The large-k coarse trainer assigns its GEMM chunks on the shared
+    pool; chunks write disjoint code slices with the serial loop's
+    GEMM shapes, so centroids are bit-identical to the serial Lloyd."""
+    from fastpyvectordb_spark.ann.ivf import _train_coarse_gemm
+
+    rng = np.random.RandomState(11)
+    n, d, k, iters, seed = 12_000, 8, 4000, 3, 3
+    sample = rng.randn(n, d)
+
+    # serial reference: the same Lloyd with a plain chunk loop
+    r = np.random.RandomState(seed)
+    cents = sample[r.choice(n, size=k, replace=False)].astype(np.float64)
+    x32 = np.ascontiguousarray(sample, dtype=np.float32)
+    chunk = 16_000_000 // k
+    assert n > 2 * chunk  # several chunks, so the pool has work to split
+    codes = np.empty(n, dtype=np.int64)
+    for _ in range(iters):
+        c32 = cents.astype(np.float32)
+        csq = np.einsum("ij,ij->i", c32, c32)
+        for s in range(0, n, chunk):
+            sc = x32[s:s + chunk] @ c32.T
+            sc *= -2.0
+            sc += csq[None, :]
+            codes[s:s + chunk] = np.argmin(sc, axis=1)
+        cnt = np.bincount(codes, minlength=k)
+        acc = np.stack(
+            [np.bincount(codes, weights=sample[:, j], minlength=k)
+             for j in range(d)],
+            axis=1,
+        )
+        nz = cnt > 0
+        cents[nz] = acc[nz] / cnt[nz][:, None]
+
+    got = _train_coarse_gemm(sample, k, iters, seed)
+    assert np.array_equal(got, cents)
+
+
+def test_ivf_list_scan_pooled_matches_serial(monkeypatch):
+    """The batched IVF scan pools its per-list GEMMs when BLAS runs one
+    thread and stays serial otherwise; per-list math is
+    schedule-independent, so both regimes return identical frames."""
+    import pandas as pd
+
+    from fastpyvectordb_spark import session
+    from fastpyvectordb_spark.ann.ivf import IVFPacked, ivf_search_local
+
+    rng = np.random.RandomState(3)
+    n, d, n_lists = 3000, 16, 16
+    centroids = rng.randn(n_lists, d)
+    lists = np.sort(rng.randint(0, n_lists, size=n))
+    vmat = (centroids[lists] + 0.3 * rng.randn(n, d)).astype(np.float32)
+    sqnorms = np.einsum("ij,ij->i", vmat, vmat)
+    packed = IVFPacked(
+        centroids=centroids,
+        vmat=vmat,
+        ids=rng.permutation(n).astype(np.int64),
+        offsets=np.searchsorted(lists, np.arange(n_lists + 1)),
+        norms=np.sqrt(sqnorms).astype(np.float32) + np.float32(1e-10),
+        sqnorms=sqnorms.astype(np.float32),
+    )
+    qpdf = pd.DataFrame(
+        {
+            "query_id": np.arange(64),
+            "query_vec": list(rng.randn(64, d).astype(np.float32)),
+        }
+    )
+    for metric in ("cosine", "l2", "ip"):
+        out = {}
+        for threads in (4, 1):  # 4 → serial loop, 1 → pooled lists
+            monkeypatch.setattr(session, "blas_threads", lambda t=threads: t)
+            out[threads] = ivf_search_local(
+                packed, qpdf, k=10, nprobe=4, metric=metric
+            )
+        pd.testing.assert_frame_equal(out[4], out[1])

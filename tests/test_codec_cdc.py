@@ -88,3 +88,29 @@ def test_change_feed_streams(spark, tmp_path):
     q.awaitTermination(60)
     rows = spark.table("cdc_stream").collect()
     assert len(rows) == 1 and rows[0]["event_type"] == "insert"
+
+
+def test_change_feed_integer_ids(spark, tmp_path):
+    """Every event writer stores ``doc_id`` as a string: an integer-id
+    collection whose events come from both the Spark writer (first
+    upsert) and the pyarrow stager (small insert) must read back as one
+    schema, batch and streaming."""
+    db = VectorDB(spark, str(tmp_path / "idb"))
+    c = db.create_collection("ints", dimensions=4)
+    schema = "id long, embedding array<float>"
+    c.upsert(spark.createDataFrame([(1, [1.0] * 4), (2, [2.0] * 4)], schema))
+    c.insert_batch(spark.createDataFrame([(3, [3.0] * 4)], schema))
+    ev = c.events_df()
+    assert dict(ev.dtypes)["doc_id"] == "string"
+    assert sorted(r["doc_id"] for r in ev.collect()) == ["1", "2", "3"]
+    q = (
+        c.events_stream()
+        .writeStream.format("memory")
+        .queryName("cdc_int_stream")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(60)
+    rows = spark.table("cdc_int_stream").collect()
+    assert sorted(r["doc_id"] for r in rows) == ["1", "2", "3"]

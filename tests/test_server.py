@@ -42,6 +42,9 @@ def _req(base, method, path, payload=None):
 def test_rest_lifecycle(api):
     status, health = _req(api, "GET", "/health")
     assert status == 200 and health["status"] == "ok"
+    from fastpyvectordb_spark.session import blas_threads
+
+    assert health["blas_threads"] == blas_threads()
 
     status, info = _req(
         api, "POST", "/collections",
