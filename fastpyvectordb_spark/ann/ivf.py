@@ -166,7 +166,12 @@ def _train_coarse_gemm(
     rng = np.random.RandomState(seed)
     cents = sample[rng.choice(n, size=k, replace=False)].astype(np.float64)
     x32 = np.ascontiguousarray(sample, dtype=np.float32)
-    chunk = max(1, 16_000_000 // max(k, 1))  # (chunk, k) f32 scores ≈ 64 MB
+    from fastpyvectordb_spark.session import driver_pool, driver_pool_workers
+
+    # every pool worker holds one (chunk, k) f32 score matrix: the
+    # workers split a 16M-float budget, so together they peak at
+    # ≈ 64 MB of scores whatever the core count
+    chunk = max(1, 16_000_000 // (max(k, 1) * driver_pool_workers()))
     codes = np.empty(n, dtype=np.int64)
 
     def assign(s: int) -> None:
@@ -176,14 +181,12 @@ def _train_coarse_gemm(
         sc += csq[None, :]
         codes[s:e] = np.argmin(sc, axis=1)
 
-    from fastpyvectordb_spark.ann.ivfpq import _get_pool
-
     for _ in range(max_iter):
         c32 = cents.astype(np.float32)
         csq = np.einsum("ij,ij->i", c32, c32)
         # chunks write disjoint codes[s:e] with the same GEMM shapes as
         # a serial loop, so pooling leaves the codes bit-identical
-        list(_get_pool().map(assign, range(0, n, chunk)))
+        list(driver_pool().map(assign, range(0, n, chunk)))
         cnt = np.bincount(codes, minlength=k)
         acc = np.stack(
             [
@@ -546,6 +549,11 @@ def ivf_search_local_one(
     return i_all[order], d_all[0, order].astype(np.float64)
 
 
+# mean multiply-adds per probed list above which the batched local
+# scan pools its lists (see ivf_search_local)
+_POOL_LIST_MIN_WORK = 1 << 21
+
+
 def ivf_search_local(
     packed: IVFPacked,
     queries_pdf,
@@ -637,28 +645,29 @@ def ivf_search_local(
         out_d[qidx[:, None], cols] = d[rows, p]
         out_i[qidx[:, None], cols] = packed.ids[s:e][p]
 
-    # The per-list scan loop has two regimes, decided by who owns the
-    # cores (round 11, measured best-of-7 on a quiet host):
-    #  - BLAS on 1 thread (executor python workers and the driver —
-    #    session.get_spark pins both): a Python-level pool over the
-    #    probed lists restores parallelism; GEMM/fixup/argpartition all
-    #    release the GIL and per-list math is schedule-independent
-    #    (bit-identical to serial).
-    #  - BLAS multi-threaded (or unknown): OpenBLAS already fans each
-    #    GEMM across the cores, and a 16-thread pool on top
-    #    oversubscribes — measured 3.4-7× SLOWER than serial (316
-    #    lists/100q: 33 ms serial vs 169 ms pooled; 316/1024q: 85 ms
-    #    vs 219 ms).
+    # The per-list scan pools over the probed lists only when BLAS runs
+    # one thread (the driver, see session.get_spark) AND the mean
+    # per-list GEMM is large. GEMM/fixup/argpartition release the GIL
+    # and per-list math is schedule-independent (bit-identical to
+    # serial), but each list also pays GIL-bound indexing: with small
+    # lists the pool only adds contention. Measured on a 4-core Xeon,
+    # 100K×128 rows, nprobe 8, one BLAS thread: 64 lists/256 queries
+    # (6.4M multiply-adds per list) 113 ms serial vs 62 ms on 4
+    # threads; 316 lists/256 queries (0.26M) 64 ms serial vs 119 ms on 4.
+    # With a multi-threaded BLAS a pool on top oversubscribes (round
+    # 11: 3.4-7× slower than serial).
     import os as _os
 
     from fastpyvectordb_spark.session import blas_threads
 
     uniq = [int(x) for x in np.unique(probe)]
-    if blas_threads() == 1:
-        nt = max(1, min(16, (_os.cpu_count() or 2) // 2, len(uniq)))
+    sizes = np.diff(packed.offsets)
+    list_work = sizes[probe].sum() * qn.shape[1] / max(len(uniq), 1)
+    if blas_threads() == 1 and list_work >= _POOL_LIST_MIN_WORK:
+        nt = max(1, min(16, _os.cpu_count() or 1, len(uniq)))
     else:
         nt = 1
-    if nt <= 1 or nq * nprobe < 64:
+    if nt <= 1:
         for lid in uniq:
             scan_list(lid)
     else:
@@ -701,13 +710,13 @@ def exact_search_packed(
     """
     if packed.vmat.shape[0] == 0:  # empty index: the kk cut raises
         return []
-    from fastpyvectordb_spark.operators.knn import topk_rows_tied
+    from fastpyvectordb_spark.operators.knn import matvec, topk_rows_tied
 
     eps = 1e-10
     q = np.asarray(query_vec, dtype=np.float32)
     if metric == "cosine":
         q = q / (np.linalg.norm(q) + eps)
-    d = packed.vmat @ q  # (N,)
+    d = matvec(packed.vmat, q)  # (N,)
     # over-select so boundary distance ties resolve by id inside the
     # candidate set; the (dist, id)-exact sampled cut (topk_rows_tied,
     # round 9) replaces the bare argpartition — same candidate-superset
@@ -815,7 +824,8 @@ def exact_search_packed_batch(
         qn = qmat
     nq = len(qids)
     kk = min(k, len(packed.ids))
-    nt = max(1, min(16, (os.cpu_count() or 2) // 2, nq // 32))
+    # the query-block rule of operators.knn.knn_batch_auto
+    nt = max(1, min(16, os.cpu_count() or 1, nq // 8))
     d_sel, i_sel = _gemm_topk_chunked(
         qn, packed.vmat, packed.ids, kk, metric, n_threads=nt
     )

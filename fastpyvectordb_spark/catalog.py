@@ -2724,6 +2724,8 @@ class Collection:
         pack once and hand the SAME object here (server.py does)."""
         import numpy as np
 
+        from fastpyvectordb_spark.operators.knn import matvec
+
         if len(query_vec) != self.config.dimensions:
             raise ValueError(
                 f"query dimension {len(query_vec)} != {self.config.dimensions}"
@@ -2740,12 +2742,12 @@ class Collection:
         q = np.asarray(list(query_vec), dtype=np.float32)
         if metric == "cosine":
             qn = q / (np.linalg.norm(q) + eps)
-            d = 1.0 - (vmat @ qn) / pack["norms"]
+            d = 1.0 - matvec(vmat, qn) / pack["norms"]
         elif metric == "l2":
-            d = pack["sqnorms"] - 2.0 * (vmat @ q) + np.float32(q @ q)
+            d = pack["sqnorms"] - 2.0 * matvec(vmat, q) + np.float32(q @ q)
             d = np.sqrt(np.maximum(d, 0.0))
         else:  # ip
-            d = -(vmat @ q)
+            d = -matvec(vmat, q)
         cand = min(max(4 * k, 64), d.shape[0])
         p = np.argpartition(d, cand - 1)[:cand]
         if metric == "l2":

@@ -13,6 +13,7 @@ import functools
 import glob
 import logging
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -61,6 +62,46 @@ def pin_blas_to_one_thread() -> None:
     api = _openblas()
     if api is not None:
         api[0](1)
+
+
+_POOL = None  # (pid, executor) — one global, so readers see both at once
+_POOL_LOCK = threading.Lock()
+
+
+def driver_pool_workers() -> int:
+    """Worker count of :func:`driver_pool` (callers size per-worker
+    buffers and block counts by it)."""
+    return min(8, os.cpu_count() or 1)
+
+
+def driver_pool():
+    """ONE persistent thread pool per process for driver-side NumPy
+    kernels: the PQ subspace maps, the coarse GEMM Lloyd and large
+    single-query matvecs. With BLAS on one thread this pool is where
+    those kernels get their cores (NumPy releases the GIL inside
+    them); idle workers block on a queue instead of spinning. A
+    persistent pool, because creating one per call cost ~2 s per PQ
+    train (173 pools, 1,321 thread spawns). Lazy, created under a
+    lock so threads racing the first call share one pool, and
+    PID-guarded so a forked PySpark worker never inherits dead
+    threads. Tasks on it must not wait on further pool work: with
+    every worker waiting, nothing runs the queued tasks."""
+    global _POOL
+    pool = _POOL
+    if pool is None or pool[0] != os.getpid():
+        with _POOL_LOCK:
+            pool = _POOL
+            if pool is None or pool[0] != os.getpid():
+                from concurrent.futures import ThreadPoolExecutor
+
+                pool = _POOL = (
+                    os.getpid(),
+                    ThreadPoolExecutor(
+                        max_workers=driver_pool_workers(),
+                        thread_name_prefix="driver-pool",
+                    ),
+                )
+    return pool[1]
 
 
 def get_spark(

@@ -1089,61 +1089,12 @@ def test_pq_assign_matches_naive_reference():
     assert np.array_equal(_pq_assign_all(x3, cbs), ref)
 
 
-def test_get_pool_first_call_race_shares_one_pool(monkeypatch):
-    """Threads racing the first ``_get_pool`` call must all get the
-    same executor — a check-then-set without a lock lets each build
-    its own and leak the losers' idle threads."""
-    import concurrent.futures
-    import sys
-    import threading
-    import time
-
-    from fastpyvectordb_spark.ann import ivfpq
-
-    real = concurrent.futures.ThreadPoolExecutor
-    made = []
-
-    def slow_executor(*args, **kwargs):
-        time.sleep(0.05)  # widen the check-then-set window
-        pool = real(*args, **kwargs)
-        made.append(pool)
-        return pool
-
-    monkeypatch.setattr(ivfpq, "_POOL", None)
-    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", slow_executor)
-    n_threads = 16
-    barrier = threading.Barrier(n_threads)
-    got = [None] * n_threads
-
-    def first_call(i):
-        barrier.wait(timeout=10)
-        got[i] = ivfpq._get_pool()
-
-    old_interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        threads = [
-            threading.Thread(target=first_call, args=(i,))
-            for i in range(n_threads)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=30)
-        assert not any(t.is_alive() for t in threads)
-    finally:
-        sys.setswitchinterval(old_interval)
-        for pool in made:
-            pool.shutdown(wait=False)
-    assert len(made) == 1
-    assert all(p is made[0] for p in got)
-
-
 def test_coarse_gemm_pooled_chunks_match_serial_lloyd():
     """The large-k coarse trainer assigns its GEMM chunks on the shared
     pool; chunks write disjoint code slices with the serial loop's
     GEMM shapes, so centroids are bit-identical to the serial Lloyd."""
     from fastpyvectordb_spark.ann.ivf import _train_coarse_gemm
+    from fastpyvectordb_spark.session import driver_pool_workers
 
     rng = np.random.RandomState(11)
     n, d, k, iters, seed = 12_000, 8, 4000, 3, 3
@@ -1153,7 +1104,7 @@ def test_coarse_gemm_pooled_chunks_match_serial_lloyd():
     r = np.random.RandomState(seed)
     cents = sample[r.choice(n, size=k, replace=False)].astype(np.float64)
     x32 = np.ascontiguousarray(sample, dtype=np.float32)
-    chunk = 16_000_000 // k
+    chunk = 16_000_000 // (k * driver_pool_workers())
     assert n > 2 * chunk  # several chunks, so the pool has work to split
     codes = np.empty(n, dtype=np.int64)
     for _ in range(iters):
@@ -1179,12 +1130,16 @@ def test_coarse_gemm_pooled_chunks_match_serial_lloyd():
 
 def test_ivf_list_scan_pooled_matches_serial(monkeypatch):
     """The batched IVF scan pools its per-list GEMMs when BLAS runs one
-    thread and stays serial otherwise; per-list math is
-    schedule-independent, so both regimes return identical frames."""
+    thread (here with the list-size floor lifted) and stays serial
+    otherwise; per-list math is schedule-independent, so both regimes
+    return identical frames."""
     import pandas as pd
 
     from fastpyvectordb_spark import session
+    from fastpyvectordb_spark.ann import ivf
     from fastpyvectordb_spark.ann.ivf import IVFPacked, ivf_search_local
+
+    monkeypatch.setattr(ivf, "_POOL_LIST_MIN_WORK", 0)
 
     rng = np.random.RandomState(3)
     n, d, n_lists = 3000, 16, 16

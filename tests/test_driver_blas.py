@@ -73,3 +73,66 @@ def test_resident_search_leaves_no_spinning_threads(spark, tmp_path):
         if tid != me
     }
     assert max(busy.values(), default=0.0) <= 0.2, busy
+
+
+def test_driver_pool_first_call_race_shares_one_pool(monkeypatch):
+    """Threads racing the first ``driver_pool`` call must all get the
+    same executor — a check-then-set without a lock lets each build
+    its own and leak the losers' idle threads."""
+    import concurrent.futures
+    import sys
+
+    from fastpyvectordb_spark import session
+
+    real = concurrent.futures.ThreadPoolExecutor
+    made = []
+
+    def slow_executor(*args, **kwargs):
+        time.sleep(0.05)  # widen the check-then-set window
+        pool = real(*args, **kwargs)
+        made.append(pool)
+        return pool
+
+    monkeypatch.setattr(session, "_POOL", None)
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", slow_executor)
+    n_threads = 16
+    barrier = threading.Barrier(n_threads)
+    got = [None] * n_threads
+
+    def first_call(i):
+        barrier.wait(timeout=10)
+        got[i] = session.driver_pool()
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=first_call, args=(i,))
+            for i in range(n_threads)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old_interval)
+        for pool in made:
+            pool.shutdown(wait=False)
+    assert len(made) == 1
+    assert all(p is made[0] for p in got)
+
+
+def test_pooled_matvec_is_bit_identical(monkeypatch, spark):
+    """Row blocks of a pooled matvec start on multiples of
+    ``_MATVEC_BLOCK_ROWS``, so every row takes the kernel path it takes
+    in one whole-matrix call: equal bits for every shape, including
+    row counts that leave a short tail block."""
+    from fastpyvectordb_spark.operators import knn
+
+    monkeypatch.setattr(knn, "_MATVEC_POOL_MIN_FLOATS", 0)
+    rng = np.random.RandomState(5)
+    for n, d in ((2048, 8), (9001, 17), (30_001, 64), (12_289, 128)):
+        v = rng.randn(n, d).astype(np.float32)
+        q = rng.randn(d).astype(np.float32)
+        assert np.array_equal(knn.matvec(v, q), v @ q), (n, d)
