@@ -664,7 +664,7 @@ def main() -> None:
     # SECOND calibration, taken immediately before the local-kernel
     # block: the start-of-run probe is minutes old by now and this
     # host's bandwidth swings >100x within a run (round-6 session
-    # measured the SAME nsw kernel at 18,200 and 830 QPS two hours
+    # measured the SAME local kernel at 18,200 and 830 QPS two hours
     # apart, code and data identical — mem bw 37 vs 7 GB/s). The
     # norm_per_gflops/gbps blocks use THIS temporally-adjacent probe
     # for the local rows so round-over-round deltas attribute to code,
@@ -724,8 +724,7 @@ def main() -> None:
 
     qps_row("ivf_local_qps", "q_knn_ivf_local_100k", n_queries)
     # the SERVING DEFAULT row (README §Serving): the packed path graded
-    # against the reference's hnswlib 5,773 QPS number is IVF — NSW is
-    # the recall/build-parity family, recorded separately below
+    # against the reference's hnswlib 5,773 QPS number is IVF
     extras["serving_local_qps"] = extras["ivf_local_qps"]
 
     # single-query exact scan in the in-memory regime (reference "BLAS
@@ -943,134 +942,6 @@ def main() -> None:
         e = set(exact.loc[exact.query_id == qid, "vec_id"])
         hits += len(a & e)
     extras["ivf_batch_recall_at_k"] = round(hits / (len(sample) * K), 4)
-
-    # Partition-local IVF-Flat artifacts (§7-M8c): the HNSW-parity
-    # single-query path — ONE map-side job + TakeOrdered merge, exact
-    # distances on probed lists
-    from fastpyvectordb_spark.ann.partitioned import (
-        open_index,
-        partitioned_build,
-        partitioned_search_batch,
-        partitioned_search_indexed,
-        save_index,
-    )
-
-    t0 = time.perf_counter()
-    part_idx = partitioned_build(big, n_parts=32, n_lists=32).localCheckpoint()
-    _part_path = tempfile.mkdtemp() + "/partidx"
-    save_index(part_idx, _part_path)
-    part_stubs = open_index(spark, _part_path)
-    extras["partitioned_build_sec"] = round(time.perf_counter() - t0, 3)
-    # warm: first query loads each task's artifact into the worker cache
-    partitioned_search_indexed(part_stubs, qvec_big, k=K, nprobe=8).collect()
-
-    @bench("q_knn_partitioned_100k", repeats=3)
-    def _():
-        rows = partitioned_search_indexed(
-            part_stubs, qvec_big, k=K, nprobe=8
-        ).collect()
-        assert len(rows) == K
-
-    extras["partitioned_single_query_sec"] = timings["q_knn_partitioned_100k"]
-
-    @bench("q_knn_partitioned_batch_100k")
-    def _():
-        n = partitioned_search_batch(part_idx, qpdf_big, k=K, nprobe=8).count()
-        assert n == n_queries * K
-
-    qps_row("partitioned_batch_qps", "q_knn_partitioned_batch_100k", n_queries)
-
-    # EXACT batch over the cached artifacts (nprobe = n_lists): the
-    # per-partition matrices stay resident in the python workers, so
-    # unlike knn_batch_gemm no call re-ships 26 MB of vectors through
-    # Arrow — the cached twin of the reference's in-memory batch scan
-    from fastpyvectordb_spark.ann.partitioned import (
-        partitioned_search_indexed_batch,
-    )
-
-    partitioned_search_indexed_batch(
-        part_stubs, qpdf_big, k=K, nprobe=32
-    ).count()  # warm
-
-    @bench("q_knn_batch_cached_100k")
-    def _():
-        n = partitioned_search_indexed_batch(
-            part_stubs, qpdf_big, k=K, nprobe=32
-        ).count()
-        assert n == n_queries * K
-
-    qps_row("cached_exact_batch_qps", "q_knn_batch_cached_100k", n_queries)
-    p_approx = partitioned_search_batch(
-        part_idx, sample, k=K, nprobe=8, metric="cosine"
-    ).toPandas()
-    hits = 0
-    for qid in sample["query_id"]:
-        a = set(p_approx.loc[p_approx.query_id == qid, "vec_id"])
-        e = set(exact.loc[exact.query_id == qid, "vec_id"])
-        hits += len(a & e)
-    extras["partitioned_recall_at_k"] = round(hits / (len(sample) * K), 4)
-
-    # NSW graph index (hnswlib's family, built natively per partition):
-    # greedy beam search — ~ef·m_max·log n distance evals per partition
-    # instead of a scan; the structure that matters at 10^5+-row
-    # partitions
-    from fastpyvectordb_spark.ann.nsw import nsw_build, nsw_search
-
-    t0 = time.perf_counter()
-    # ef_construction=32: with the round-4 diversity-heuristic linking
-    # (+ pruned-connection backfill) recall vs exact is 0.998+ at this
-    # beam — wider beams buy nothing and cost ~20% build wall
-    nsw_idx = nsw_build(
-        big, n_parts=32, m=12, m_max=24, ef_construction=32
-    ).localCheckpoint()
-    extras["nsw_build_sec"] = round(time.perf_counter() - t0, 3)
-    nsw_search(nsw_idx, qvec_big, k=K, ef=96).collect()  # warm
-
-    @bench("q_knn_nsw_100k", repeats=2)
-    def _():
-        rows = nsw_search(nsw_idx, qvec_big, k=K, ef=96).collect()
-        assert len(rows) == K
-
-    qps_row("nsw_qps", "q_knn_nsw_100k", 1)
-
-    # packed local twin (round 4): partitions concatenate into one node
-    # array, a query batch runs as parts×queries lockstep lanes — the
-    # in-memory serving regime the reference gets from hnswlib
-    # (5,773 QPS baseline row)
-    from fastpyvectordb_spark.ann.nsw import nsw_pack, nsw_search_local
-
-    nsw_packed = nsw_pack(nsw_idx)
-
-    # graph recall over the FULL 64-query sample via the packed graph
-    # path (graph_min_nodes=0 forces traversal — the GEMM fallback
-    # would trivially report 1.0; the w=1 parity test pins this path
-    # bit-identical to the distributed per-partition search, and
-    # expand_width only ADDS expansions). 4× less noisy and far
-    # cheaper than driver-looped distributed queries.
-    gres = nsw_search_local(
-        nsw_packed, sample, k=K, ef=96, graph_min_nodes=0, expand_width=8
-    )
-    hits = 0
-    for qid in sample["query_id"]:
-        a = set(gres.loc[gres.query_id == qid, "vec_id"])
-        e = set(exact.loc[exact.query_id == qid, "vec_id"])
-        hits += len(a & e)
-    extras["nsw_recall_at_k"] = round(hits / (len(sample) * K), 4)
-    nsw_search_local(nsw_packed, qpdf_big.head(8), k=K, ef=96)  # warm
-
-    @bench("q_knn_nsw_local_100k", repeats=3)
-    def _():
-        res = nsw_search_local(nsw_packed, qpdf_big, k=K, ef=96)
-        assert res["query_id"].nunique() == n_queries
-
-    qps_row("nsw_local_qps", "q_knn_nsw_local_100k", n_queries)
-    lhits = 0
-    lres = nsw_search_local(nsw_packed, sample, k=K, ef=96)
-    for qid in sample["query_id"]:
-        a = set(lres.loc[lres.query_id == qid, "vec_id"])
-        e = set(exact.loc[exact.query_id == qid, "vec_id"])
-        lhits += len(a & e)
-    extras["nsw_local_recall_at_k"] = round(lhits / (len(sample) * K), 4)
 
     # -- text / fusion ------------------------------------------------
     from fastpyvectordb_spark.operators.bm25 import BM25Index
@@ -1445,8 +1316,7 @@ def main() -> None:
         "exact_local_qps", "exact_batch_local_qps", "gemm_100k_qps",
         "auto_100k_qps", "ivf_local_qps", "ivf_batch_qps", "bq_local_qps",
         "sq_local_qps", "pq_local_qps", "ivfpq_local_qps",
-        "hybrid_local_qps", "bm25_local_qps", "nsw_local_qps",
-        "nsw_qps", "partitioned_batch_qps", "server_search_qps",
+        "hybrid_local_qps", "bm25_local_qps", "server_search_qps",
         "server_search_ann_qps", "server_search_c8_qps",
         "collection_ann_batch_qps",
     ]
@@ -1594,8 +1464,7 @@ def compact_tape(total, sf, timings, extras, budget: int = 1995) -> str:
             or k in (
                 "neardup_kept_block_frac", "neardup_routed",
                 "neardup_routed_sec", "ann_cluster_optimize_sec",
-                "ivf_build_sec", "partitioned_build_sec",
-                "nsw_build_sec", "collection_ann_build_sec",
+                "ivf_build_sec", "collection_ann_build_sec",
             )
         )
     ]

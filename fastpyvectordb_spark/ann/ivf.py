@@ -807,11 +807,12 @@ def exact_search_packed_batch(
     ``operators.knn.knn_batch_auto``. Returns pandas
     ``(query_id, rank, <id_col>, dist)`` with identical values/order to
     the distributed exact plan."""
-    import os
-
     import pandas as pd
 
-    from fastpyvectordb_spark.operators.knn import _gemm_topk_chunked
+    from fastpyvectordb_spark.operators.knn import (
+        _gemm_topk_chunked,
+        query_blocks,
+    )
 
     eps = 1e-10
     qids = queries_pdf["query_id"].to_numpy()
@@ -824,10 +825,9 @@ def exact_search_packed_batch(
         qn = qmat
     nq = len(qids)
     kk = min(k, len(packed.ids))
-    # the query-block rule of operators.knn.knn_batch_auto
-    nt = max(1, min(16, os.cpu_count() or 1, nq // 8))
     d_sel, i_sel = _gemm_topk_chunked(
-        qn, packed.vmat, packed.ids, kk, metric, n_threads=nt
+        qn, packed.vmat, packed.ids, kk, metric,
+        n_threads=query_blocks(nq, 8),
     )
     order = np.lexsort((i_sel, d_sel), axis=1)
     d_sorted = np.take_along_axis(d_sel, order, axis=1)

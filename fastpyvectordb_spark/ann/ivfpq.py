@@ -910,42 +910,17 @@ def ivfpq_search_local(
     k: int = 10,
     nprobe: int | None = None,
     id_col: str = "vec_id",
-    n_threads: int | None = None,
 ) -> pd.DataFrame:
     """Driver-local twin of :func:`ivfpq_search_batch` (ADC, no
     refine): per probed list one flat LUT gather over that list's code
     slice, vectorized global merge. Identical probe selection and
     float64 accumulation order → identical values/ordering to the
-    distributed plan. ``n_threads > 1`` fans independent query blocks
-    across a pool (NumPy gathers release the GIL) — driver-side serving
-    only; executor-side callers keep 1 (Spark runs one task per core)."""
+    distributed plan. Runs on the calling thread: NumPy fancy-index
+    gathers hold the GIL, so fanning query blocks over threads
+    measured slower."""
     from fastpyvectordb_spark.ann.ivf import _resolve_nprobe
 
     nprobe = _resolve_nprobe(nprobe, packed.centroids.shape[0])
-    if n_threads is None:
-        # NumPy fancy-index gathers hold the GIL (unlike BLAS GEMM), so
-        # threading buys nothing for ADC — measured slower. Kept as an
-        # explicit opt-in for codebases with a GIL-releasing gather.
-        n_threads = 1
-    if n_threads > 1 and len(queries_pdf) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        n_threads = min(n_threads, len(queries_pdf))
-        span = -(-len(queries_pdf) // n_threads)
-        blocks = [
-            queries_pdf.iloc[lo:lo + span]
-            for lo in range(0, len(queries_pdf), span)
-        ]
-        with ThreadPoolExecutor(max_workers=n_threads) as pool:
-            parts = list(
-                pool.map(
-                    lambda b: ivfpq_search_local(
-                        packed, b, k=k, nprobe=nprobe, id_col=id_col
-                    ),
-                    blocks,
-                )
-            )
-        return pd.concat(parts, ignore_index=True)
     qids = queries_pdf["query_id"].to_numpy()
     qmat = np.stack(
         [np.asarray(v, dtype=np.float64) for v in queries_pdf["query_vec"]]

@@ -271,6 +271,17 @@ def matvec(vmat, q):
     return out
 
 
+def query_blocks(nq: int, per_block: int) -> int:
+    """Thread count for a driver-side batch kernel that fans query
+    blocks over a pool: one block per core (at most 16), each with at
+    least ``per_block`` queries. Driver BLAS runs one thread
+    (``session.get_spark``), so query blocks are the parallelism; each
+    query's result is independent of the block it lands in."""
+    import os
+
+    return max(1, min(16, os.cpu_count() or 1, nq // per_block))
+
+
 def _gemm_topk_chunked(
     qn, vmat, ids, k, metric, chunk_floats=8_000_000, n_threads=1
 ):
@@ -505,14 +516,10 @@ def knn_batch_auto(
         qn = qmat
     kk = min(k, len(ids))
     nq = len(qids)
-    import os
-
-    # driver BLAS runs one thread, so query blocks are the parallelism:
-    # one per core, ≥ 8 queries each (4-core Xeon, 100K×128: 32
-    # queries 69 → 55 ms at 4 blocks; 256 queries 369 → 128 ms)
-    nt = max(1, min(16, os.cpu_count() or 1, nq // 8))
+    # ≥ 8 queries per block (4-core Xeon, 100K×128: 32 queries
+    # 69 → 55 ms at 4 blocks; 256 queries 369 → 128 ms)
     d_sel, i_sel = _gemm_topk_chunked(
-        qn, vmat, ids, kk, metric, n_threads=nt
+        qn, vmat, ids, kk, metric, n_threads=query_blocks(nq, 8)
     )  # (Q, kk)
     # per-query (dist, id) sort, vectorized across all queries at once
     order = np.lexsort((i_sel, d_sel), axis=1)  # (Q, kk)

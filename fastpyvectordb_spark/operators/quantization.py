@@ -649,9 +649,9 @@ def sq_search_local(
                 out_d[s + j] = d[order]
                 out_i[s + j] = ids[cidx[order]]
 
-    import os
+    from fastpyvectordb_spark.operators.knn import query_blocks
 
-    n_threads = max(1, min(16, (os.cpu_count() or 2) // 2, nq // chunk))
+    n_threads = query_blocks(nq, chunk)
     if n_threads <= 1:
         run_queries(0, nq)
     else:
@@ -754,9 +754,9 @@ def pq_adc_search_local(
                 out_d[s + j] = d[order]
                 out_i[s + j] = ids[cidx[order]]
 
-    import os
+    from fastpyvectordb_spark.operators.knn import query_blocks
 
-    n_threads = max(1, min(16, (os.cpu_count() or 2) // 2, nq // chunk))
+    n_threads = query_blocks(nq, chunk)
     if n_threads <= 1:
         run_queries(0, nq)
     else:

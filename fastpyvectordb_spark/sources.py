@@ -263,7 +263,7 @@ def import_reference_collection(
     (``vectordb.py:300-325``): ``config.json`` + ``vectors.npy`` +
     ``metadata.json`` in one directory. ``index.bin`` (hnswlib) is
     intentionally ignored — indexes are derived data; rebuild with
-    ``ann.ivf``/``ann.nsw`` after import."""
+    ``Collection.build_ann_index`` (IVF, ``ann.ivf``) after import."""
     import numpy as np
 
     with open(os.path.join(src_dir, "config.json")) as f:

@@ -36,20 +36,25 @@ def register(name: str, oracle: str | None = None):
 # The driver samples a capped prefix (50 names) of this list each round.
 # Every query has at least one driver-green row, so ordering is
 # STALENESS-based (VERDICT r5 item #2, re-affirmed each round; the r12
-# rotation is VERDICT r11 item #6): the two dedup queries whose live
+# rotation is VERDICT r11 item #6): the two IVF queries that replaced
+# the retired partitioned and NSW suite queries lead (never yet
+# driver-verified), then the two dedup queries whose live
 # plans changed in r11 (shuffle-hash hints) but which the r11 driver
 # did not re-sample lead, then ann_ivfpq_knn (its trainer kernel was
 # rewritten in r12 — bit-identical, but re-verify it anyway), then the
-# 32 names last driver-verified in round 9 (the stalest green rows —
+# 31 names last driver-verified in round 9 (the stalest green rows —
 # everything after the r11 sample's 50-prefix cut), then r10-verified
 # names to fill the 50 prefix. The 50 names the r11 driver just
 # re-verified go last.
 _PRIORITY = [
+    # IVF batch and resident-pack queries (replaced the retired
+    # partitioned and NSW suite queries)
+    "ann_ivf_batch_knn", "ann_ivf_local_knn",
     # r11-code-touched, last driver-verified r10 (VERDICT r11 #6)
     "dedup_embedding_topk", "dedup_embedding_lsh_threshold",
     # r12-code-touched (OPQ trainer rewrite, bit-identity-tested)
     "ann_ivfpq_knn",
-    # last driver-verified round 9 (oldest green rows — 32 names)
+    # last driver-verified round 9 (oldest green rows — 31 names)
     "agg_late_ship_priority", "agg_nation_market_share",
     "agg_priority_class_by_linestatus", "agg_priority_line_counts",
     "agg_product_profit_q9", "agg_promo_revenue_ratio",
@@ -58,7 +63,7 @@ _PRIORITY = [
     "cypher_match_where", "cypher_nation_customer_counts",
     "cypher_node_props", "cypher_region_chain_counts",
     "dedup_substring_spans",
-    "ann_lsh_knn", "ann_nsw_knn",
+    "ann_lsh_knn",
     "events_conversion_funnel",
     "events_gap_percentiles", "events_ohlc_hourly",
     "events_retention_cohorts", "events_transition_bigrams",
@@ -88,7 +93,7 @@ _PRIORITY = [
     "hybrid_search_batch", "graph_find_nodes", "graph_neighbors",
     # freshest: re-verified by the r11 driver (CORRECTNESS_r11 green)
     "gv_edge_similarity",
-    "graph_traverse", "graph_bfs_levels", "ann_partitioned_knn",
+    "graph_traverse", "graph_bfs_levels",
     "graph_shortest_path",
     "graph_degree_topk", "graph_stats", "graph_hyperedge_membership",
     "graph_part_copurchase_topk", "gv_semantic_expansion",

@@ -2,28 +2,36 @@
 DuckDB oracles.
 
 Each query runs its ANN operator at full probe width (``nprobe =
-n_lists`` / all LSH buckets / full-ef beam), where the probed search is
+n_lists`` / all LSH buckets / full refine), where the probed search is
 provably equal to the exact scan (tests/test_ann.py,
 tests/test_collection_ann.py pin this), so the driver can hash-compare
 it against the exact-kNN SQL twin. The APPROXIMATE operating points
-(reduced nprobe/multiprobe/ef) stay recall-gated in tests/test_ann.py,
+(reduced nprobe/multiprobe/refine) stay recall-gated in tests/test_ann.py,
 mirroring the reference's own methodology (quantization.py:691-703) —
 the driver row proves the operator's plumbing and exact limit, pytest
 proves its recall/speed trade-off.
 
-Index structures that serve float32-packed artifacts (partitioned,
-NSW) or quantized codes (IVF-PQ) over-fetch candidates and exact-rerank
-through :func:`operators.knn.knn` — the reference's own coarse→rerank
-shape (K9) — so every emitted distance is the same rounded Catalyst
-expression the green ``knn_*`` oracles already match bit-for-bit.
+Searches that rank float32 artifacts (the IVF batch kernel and the
+driver-resident IVF pack) or quantized codes (IVF-PQ) over-fetch
+candidates and exact-rerank through :func:`operators.knn.knn` — the
+reference's own coarse→rerank shape (K9) — so every emitted distance
+is the same rounded Catalyst expression the green ``knn_*`` oracles
+already match bit-for-bit.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fastpyvectordb_spark.ann.ivf import ivf_build, ivf_search
+from fastpyvectordb_spark.ann.ivf import (
+    ivf_build,
+    ivf_pack,
+    ivf_search,
+    ivf_search_batch,
+    ivf_search_local,
+)
 from fastpyvectordb_spark.ann.lsh import add_signatures, hyperplanes, lsh_knn
 from fastpyvectordb_spark.functions.distances import duckdb_distance
 from fastpyvectordb_spark.operators.knn import knn
@@ -50,6 +58,10 @@ LIMIT {K}
 
 def _qvec(emb: DataFrame):
     return emb.filter(F.col("vec_id") == 0).head()["embedding"]
+
+
+def _qpdf(qvec) -> pd.DataFrame:
+    return pd.DataFrame({"query_id": [0], "query_vec": [list(qvec)]})
 
 
 def _rerank(emb: DataFrame, cand: DataFrame, qvec, metric: str = "cosine"):
@@ -115,40 +127,30 @@ def ann_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _rerank(emb, cand, qvec, metric="l2")
 
 
-@register("ann_partitioned_knn", _exact_oracle("cosine"))
-def ann_partitioned_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-local IVF-Flat at nprobe = n_lists (every list of
-    every partition artifact scanned — the exhaustive limit of §7-M8c)
-    feeding the exact rerank; the float32 artifact matrix only ranks
-    CANDIDATES, the emitted distances are exact. Reduced-probe recall
-    (≥0.95) is gated in tests/test_ann.py."""
-    from fastpyvectordb_spark.ann.partitioned import (
-        partitioned_build, partitioned_search,
-    )
-
+@register("ann_ivf_batch_knn", _exact_oracle("cosine"))
+def ann_ivf_batch_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF(16 lists) batch search (one GEMM per probed list over the
+    list-colocated table, global (dist, id) merge) at nprobe = n_lists
+    feeding the exact rerank: every list is scanned, so the float32
+    candidates contain the true top-k and the emitted distances are
+    exact. Reduced-probe recall is gated in tests/test_ann.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = _qvec(emb)
-    index = partitioned_build(emb, n_parts=8, n_lists=16)
-    cand = partitioned_search(index, qvec, k=FETCH, nprobe=16)
+    index = ivf_build(emb, n_lists=16).colocate()
+    cand = ivf_search_batch(index, _qpdf(qvec), k=FETCH, nprobe=16)
     return _rerank(emb, cand, qvec)
 
 
-@register("ann_nsw_knn", _exact_oracle("cosine"))
-def ann_nsw_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NSW graph search (the reference's hnswlib family, built natively
-    per partition) at full-ef: the beam budget exceeds every
-    partition's node count, so the traversal visits each connected
-    graph exhaustively (incremental NSW insertion keeps each partition
-    graph connected) and the candidate set contains the true top-k;
-    the exact rerank emits oracle-comparable distances. Production ef
-    recall (≥0.95) is gated in tests/test_ann.py."""
-    from fastpyvectordb_spark.ann.nsw import nsw_build, nsw_search
-
+@register("ann_ivf_local_knn", _exact_oracle("cosine"))
+def ann_ivf_local_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF(16 lists) search over the driver-resident pack (the serving
+    kernel behind ``Collection.search_ann``) at nprobe = n_lists: its
+    float32 candidate ids feed the exact rerank, so the emitted
+    distances are oracle-comparable. Reduced-probe recall is gated in
+    tests/test_ann.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = _qvec(emb)
-    # full-ef = total row count: ≥ every partition's node count, and
-    # the beam arrays stay node-count-sized rather than a huge constant
-    n = emb.count()
-    index = nsw_build(emb, n_parts=8, m=8, m_max=16, ef_construction=32)
-    cand = nsw_search(index, qvec, k=FETCH, ef=n)
+    packed = ivf_pack(ivf_build(emb, n_lists=16))
+    res = ivf_search_local(packed, _qpdf(qvec), k=FETCH, nprobe=16)
+    cand = spark.createDataFrame(res[["vec_id"]])
     return _rerank(emb, cand, qvec)

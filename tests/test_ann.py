@@ -421,291 +421,19 @@ def test_ivf_add_assigns_like_build(embeddings):
 
 
 @pytest.mark.slow
-def test_partitioned_index_recall(embeddings):
-    """Partition-local IVF-Flat artifacts (§7-M8c): recall ≥0.95 on
-    the weakly-clustered fixture at a 62% probe fraction (this corpus
-    is the hard regime — the bench's clustered 100K corpus reaches the
-    same recall at ~25%). Distances are exact, so recall loss is only
-    unprobed lists."""
-    from fastpyvectordb_spark.ann.partitioned import (
-        partitioned_build, partitioned_search,
-    )
-
-    idx = partitioned_build(embeddings, n_parts=8, n_lists=16).localCheckpoint()
-    recalls = []
-    for qid in range(8):
-        qvec = embeddings.filter(F.col("vec_id") == qid).head()["embedding"]
-        approx = [
-            r["vec_id"]
-            for r in partitioned_search(idx, qvec, k=10, nprobe=10).collect()
-        ]
-        recalls.append(_recall(approx, _exact(embeddings, qvec)))
-    mean = float(np.mean(recalls))
-    assert mean >= 0.95, f"partitioned mean recall@10 {mean} ({recalls})"
-
-
-def test_partitioned_index_save_load_and_batch(embeddings, spark, tmp_path):
-    import pandas as pd
-
-    from fastpyvectordb_spark.ann.partitioned import (
-        load_index, partitioned_build, partitioned_search,
-        partitioned_search_batch, save_index,
-    )
-
-    idx = partitioned_build(embeddings, n_parts=4, n_lists=8).localCheckpoint()
-    path = str(tmp_path / "partidx")
-    save_index(idx, path)
-    idx2 = load_index(spark, path)
-
-    qrows = embeddings.filter(F.col("vec_id") < 3).orderBy("vec_id").collect()
-    qpdf = pd.DataFrame(
-        {
-            "query_id": [r["vec_id"] for r in qrows],
-            "query_vec": [list(r["embedding"]) for r in qrows],
-        }
-    )
-    batch = partitioned_search_batch(idx2, qpdf, k=10, nprobe=8).toPandas()
-    assert len(batch) == 3 * 10
-    for r in qrows:
-        single = partitioned_search(
-            idx, r["embedding"], k=10, nprobe=8
-        ).toPandas()
-        got = batch.loc[batch.query_id == r["vec_id"]].sort_values("rank")
-        assert list(got["vec_id"]) == list(single["vec_id"])
-
-
-def test_partitioned_indexed_serving_matches_in_df(embeddings, spark, tmp_path):
-    """The disk-backed cached serving path (open_index +
-    partitioned_search_indexed) must return exactly what the
-    in-DataFrame search returns — same artifacts, same scan."""
-    from fastpyvectordb_spark.ann.partitioned import (
-        open_index, partitioned_build, partitioned_search,
-        partitioned_search_indexed, save_index,
-    )
-
-    idx = partitioned_build(embeddings, n_parts=4, n_lists=8).localCheckpoint()
-    path = str(tmp_path / "servidx")
-    save_index(idx, path)
-    stubs = open_index(spark, path)
-    for qid in (0, 3):
-        qvec = embeddings.filter(F.col("vec_id") == qid).head()["embedding"]
-        a = partitioned_search(idx, qvec, k=10, nprobe=6).toPandas()
-        b = partitioned_search_indexed(stubs, qvec, k=10, nprobe=6).toPandas()
-        assert list(a["vec_id"]) == list(b["vec_id"])
-        assert np.allclose(a["dist"], b["dist"])
-
-
-@pytest.mark.slow
-def test_partitioned_indexed_batch_full_probe_is_exact(embeddings, spark, tmp_path):
-    """nprobe >= n_lists turns the cached-artifact batch scanner into
-    an EXACT batch kNN — results must match the exact operator."""
-    import pandas as pd
-
-    from fastpyvectordb_spark.ann.partitioned import (
-        open_index, partitioned_build, partitioned_search_indexed_batch,
-        save_index,
-    )
-
-    idx = partitioned_build(embeddings, n_parts=4, n_lists=8).localCheckpoint()
-    path = str(tmp_path / "exactidx")
-    save_index(idx, path)
-    stubs = open_index(spark, path)
-    qrows = embeddings.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
-    qpdf = pd.DataFrame(
-        {
-            "query_id": [r["vec_id"] for r in qrows],
-            "query_vec": [list(r["embedding"]) for r in qrows],
-        }
-    )
-    got = partitioned_search_indexed_batch(stubs, qpdf, k=10, nprobe=8).toPandas()
-    for r in qrows:
-        mine = got.loc[got.query_id == r["vec_id"]].sort_values("rank")
-        assert list(mine["vec_id"]) == _exact(embeddings, r["embedding"])
-
-
-@pytest.mark.slow
-def test_nsw_graph_recall(embeddings):
-    """NSW graph artifacts (the reference's hnswlib family, built
-    natively per partition): beam search must reach ≥0.95 recall on
-    the weakly-clustered fixture."""
-    from fastpyvectordb_spark.ann.nsw import nsw_build, nsw_search
-
-    idx = nsw_build(
-        embeddings, n_parts=4, m=8, m_max=16, ef_construction=32
-    ).localCheckpoint()
-    recalls = []
-    for qid in range(8):
-        qvec = embeddings.filter(F.col("vec_id") == qid).head()["embedding"]
-        approx = [
-            r["vec_id"] for r in nsw_search(idx, qvec, k=10, ef=48).collect()
-        ]
-        recalls.append(_recall(approx, _exact(embeddings, qvec)))
-    mean = float(np.mean(recalls))
-    assert mean >= 0.95, f"NSW mean recall@10 {mean} ({recalls})"
-
-
-def test_nsw_build_is_deterministic(embeddings):
-    from fastpyvectordb_spark.ann.nsw import nsw_build, nsw_search
-
-    a = nsw_build(embeddings, n_parts=2, m=6, m_max=12).localCheckpoint()
-    b = nsw_build(embeddings, n_parts=2, m=6, m_max=12).localCheckpoint()
-    qvec = embeddings.filter(F.col("vec_id") == 3).head()["embedding"]
-    ra = [(r["vec_id"], r["dist"]) for r in nsw_search(a, qvec, k=5).collect()]
-    rb = [(r["vec_id"], r["dist"]) for r in nsw_search(b, qvec, k=5).collect()]
-    assert ra == rb
-
-
-@pytest.mark.slow
-def test_nsw_local_twin_matches_distributed(embeddings):
-    """Round 4: the packed local twin (concatenated components,
-    parts×queries lockstep lanes) must return the same (id, dist) sets
-    as the distributed per-partition search on the same index."""
-    from fastpyvectordb_spark.ann.nsw import (
-        nsw_build,
-        nsw_pack,
-        nsw_search,
-        nsw_search_local,
-    )
-
-    idx = nsw_build(
-        embeddings, n_parts=4, m=8, m_max=16, ef_construction=32
-    ).localCheckpoint()
-    packed = nsw_pack(idx)
-    import pandas as pd
-
-    qrows = embeddings.filter(F.col("vec_id") < 6).orderBy("vec_id").collect()
-    qpdf = pd.DataFrame(
-        {
-            "query_id": [r["vec_id"] for r in qrows],
-            "query_vec": [list(r["embedding"]) for r in qrows],
-        }
-    )
-    # graph path forced (graph_min_nodes=0) and expand_width=1: must
-    # reproduce the distributed per-partition traversal bit-for-bit
-    local = nsw_search_local(
-        packed, qpdf, k=10, ef=48, graph_min_nodes=0, expand_width=1
-    )
-    for r in qrows:
-        dist_rows = [
-            (x["vec_id"], x["dist"])
-            for x in nsw_search(idx, r["embedding"], k=10, ef=48).collect()
-        ]
-        mine = local.loc[local.query_id == r["vec_id"]].sort_values("rank")
-        local_rows = list(zip(mine["vec_id"], mine["dist"]))
-        assert local_rows == dist_rows, (r["vec_id"], local_rows, dist_rows)
-
-
-def test_nsw_local_twin_empty_and_single(spark):
-    from fastpyvectordb_spark.ann.nsw import nsw_build, nsw_pack, nsw_search_local
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    packed = nsw_pack(nsw_build(empty, n_parts=2))
-    import numpy as np
-
-    out = nsw_search_local(packed, np.zeros((2, 4)), k=3)
-    assert out.empty
-    one = spark.createDataFrame(
-        [(7, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    packed1 = nsw_pack(nsw_build(one, n_parts=2).localCheckpoint())
-    out1 = nsw_search_local(packed1, np.asarray([[1.0, 0.0, 0.0, 0.0]]), k=3)
-    assert list(out1["vec_id"]) == [7] and abs(out1["dist"].iloc[0]) < 1e-6
-
-
-@pytest.mark.slow
-def test_nsw_local_twin_adaptive_gemm_exact(embeddings):
-    """Default serving path: components under the graph cutover score
-    by exact GEMM — results must equal the exact kNN operator."""
-    from fastpyvectordb_spark.ann.nsw import nsw_build, nsw_pack, nsw_search_local
-
-    idx = nsw_build(
-        embeddings, n_parts=4, m=8, m_max=16, ef_construction=32
-    ).localCheckpoint()
-    packed = nsw_pack(idx)
-    import pandas as pd
-
-    qrows = embeddings.filter(F.col("vec_id") < 5).orderBy("vec_id").collect()
-    qpdf = pd.DataFrame(
-        {
-            "query_id": [r["vec_id"] for r in qrows],
-            "query_vec": [list(r["embedding"]) for r in qrows],
-        }
-    )
-    local = nsw_search_local(packed, qpdf, k=10, ef=48)  # all parts tiny → GEMM
-    for r in qrows:
-        mine = local.loc[local.query_id == r["vec_id"]].sort_values("rank")
-        assert list(mine["vec_id"]) == _exact(embeddings, r["embedding"])
-
-
-def test_nsw_expand_width_recall_not_worse(embeddings):
-    """expand_width>1 only adds expansions past the stop rule — recall
-    vs exact must be >= the width-1 kernel's."""
-    import numpy as np
-
-    from fastpyvectordb_spark.ann import nsw as N
-
-    rng = np.random.default_rng(2)
-    x = rng.normal(size=(800, 16))
-    x /= np.linalg.norm(x, axis=1, keepdims=True)
-    nb, deg, ent = N._build_graph(x, m=8, m_max=16, ef_construction=32, seed=3)
-    Q = rng.normal(size=(30, 16))
-    Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-    truth = np.argsort(((x[None] - Q[:, None]) ** 2).sum(-1), axis=1)[:, :10]
-    rec = {}
-    for w in (1, 8):
-        bi, _ = N._greedy_search_batch(
-            x, nb, deg, np.full(30, ent, np.int64), Q, ef=48, expand_width=w
-        )
-        rec[w] = sum(
-            len(set(bi[i, :10]) & set(truth[i])) for i in range(30)
-        )
-    assert rec[8] >= rec[1] >= 0.9 * 300
-
-
-def test_nsw_gemm_merge_caps_candidates_at_accumulated_cols():
-    """ADVICE r5: k large enough that cand exceeds the columns
-    accumulated after the first chunk merge (cand > 2*chv) must cap,
-    not crash in np.argpartition — and still return the exact top-k."""
-    import numpy as np
-
-    from fastpyvectordb_spark.ann.nsw import NSWPacked, nsw_search_local
-
-    rng = np.random.default_rng(7)
-    n, d, k = 40_960, 8, 9_000  # cand = 4k = 36_000 > 2*chv = 32_768
-    vmat = rng.normal(size=(n, d))
-    packed = NSWPacked(
-        ids=np.arange(n, dtype=np.int64),
-        vmat=vmat,
-        neighbors=np.full((n, 4), -1, dtype=np.int64),
-        offsets=np.asarray([0, n], dtype=np.int64),
-        entries=np.asarray([0], dtype=np.int64),
-        metric="l2",
-    )
-    q = rng.normal(size=(2, d))
-    out = nsw_search_local(packed, q, k=k, round_digits=None)
-    assert len(out) == 2 * k
-    for qi in range(2):
-        mine = out.loc[out.query_id == qi].sort_values("rank")
-        exact = np.sum((vmat - q[qi]) ** 2, axis=1)
-        order = np.argsort(exact, kind="stable")[:k]
-        assert list(mine["vec_id"]) == list(order)
-
-
-@pytest.mark.slow
 def test_serving_default_recall_equivalence(spark):
-    """README §Serving (round-6 decision): IVF is the serving default
-    graded against the reference's hnswlib row; NSW stays the
-    recall/build-parity family. Equivalence contract, on the bench's
-    own data distribution (the smooth sinusoidal manifold bench.py
-    synthesizes) at pruned probe knobs (4 of 16 lists — the bench's
-    8/64 gets the same recall from 12× larger absolute candidate
-    pools, gated there by ivf_batch_recall_at_k — and ef=96):
-    BOTH paths hit the exact top-k — grading the serving row on IVF
-    never trades recall away."""
+    """README §Serving: IVF is the serving default graded against the
+    reference's hnswlib row. On the bench's own data distribution (the
+    smooth sinusoidal manifold bench.py synthesizes) at a pruned probe
+    width (4 of 16 lists — the bench's 8/64 gets the same recall from
+    12× larger absolute candidate pools, gated there by
+    ivf_batch_recall_at_k) the serving kernel must hit the exact top-k
+    at least as well as the retired NSW graph family did on this
+    fixture (recall 1.0 at ef=96): serving on IVF never trades recall
+    away."""
     import pandas as pd
 
     from fastpyvectordb_spark.ann.ivf import ivf_build, ivf_pack, ivf_search_local
-    from fastpyvectordb_spark.ann.nsw import nsw_build, nsw_pack, nsw_search_local
 
     n, dims, k = 8_000, 16, 10
     data = (
@@ -733,22 +461,13 @@ def test_serving_default_recall_equivalence(spark):
     exact = {r["vec_id"]: _exact(data, r["embedding"], k=k) for r in qrows}
 
     ivf = ivf_build(data, n_lists=16, max_iter=20)
-    ires = ivf_search_local(ivf_pack(ivf), qpdf, k=k, nprobe=4, metric="cosine")
-    nsw = nsw_pack(
-        nsw_build(data, n_parts=8, m=12, m_max=24, ef_construction=32).localCheckpoint()
-    )
-    nres = nsw_search_local(nsw, qpdf, k=k, ef=96)
-
-    def recall(res):
-        hits = 0
-        for qid, want in exact.items():
-            got = list(res.loc[res.query_id == qid].sort_values("rank")["vec_id"])
-            hits += len(set(got) & set(want))
-        return hits / (len(exact) * k)
-
-    r_ivf, r_nsw = recall(ires), recall(nres)
-    # serving default must not be the lower-recall path
-    assert r_nsw >= 0.95 and r_ivf >= r_nsw - 1e-9, (r_ivf, r_nsw)
+    res = ivf_search_local(ivf_pack(ivf), qpdf, k=k, nprobe=4, metric="cosine")
+    hits = 0
+    for qid, want in exact.items():
+        got = list(res.loc[res.query_id == qid].sort_values("rank")["vec_id"])
+        hits += len(set(got) & set(want))
+    recall = hits / (len(exact) * k)
+    assert recall == 1.0, recall
 
 
 @pytest.mark.slow
@@ -814,9 +533,9 @@ def test_gemm_and_ivfpq_batch_string_ids(spark):
 def test_suite_exhaustive_ann_queries_match_exact(spark):
     """VERDICT r6 #3: the driver-facing ann_* suite queries run each
     ANN operator at its exhaustive limit (nprobe = n_lists, all LSH
-    buckets, full refine, full-ef) — every one must reproduce the
-    exact kNN result value-for-value, which is what lets them carry an
-    exact-kNN DuckDB oracle in CORRECTNESS_r07."""
+    buckets, full refine) — every one must reproduce the exact kNN
+    result value-for-value, which is what lets them carry an exact-kNN
+    DuckDB oracle in CORRECTNESS_r07."""
     from tests.conftest import SF_DIR
 
     from fastpyvectordb_spark.operators.knn import knn
@@ -834,8 +553,8 @@ def test_suite_exhaustive_ann_queries_match_exact(spark):
     for name, want in [
         ("ann_ivf_knn", exact_cos),
         ("ann_lsh_knn", exact_cos),
-        ("ann_partitioned_knn", exact_cos),
-        ("ann_nsw_knn", exact_cos),
+        ("ann_ivf_batch_knn", exact_cos),
+        ("ann_ivf_local_knn", exact_cos),
         ("ann_ivfpq_knn", exact_l2),
     ]:
         got = rows(getattr(suite_ann, name)(spark, SF_DIR))

@@ -27,20 +27,19 @@ def bench_mod():
     return m
 
 
-# the 51 bench timing rows — contract keys, never removed or renamed
+# the 46 bench timing rows — contract keys, never renamed; a row
+# retires only together with its operator, named in CHANGES.md
 _ROWS = """q_bm25_batch q_bm25_build q_bm25_local q_bm25_query
 q_bq_hamming_local_100k q_collection_ann_batch q_dedup_embedding_topk
 q_dedup_minhash_lsh q_dedup_substring_spans q_dml_delete_1k
 q_dml_delete_1k_fast q_dml_ingest_collection_100k q_dml_upsert_1k
 q_dml_upsert_point q_events_window q_graph_bfs q_hybrid_batch
 q_hybrid_fusion q_hybrid_fusion_indexed q_hybrid_local q_ingest_100k
-q_knn_batch_auto q_knn_batch_auto_100k q_knn_batch_cached_100k
-q_knn_batch_gemm q_knn_batch_gemm_100k q_knn_exact q_knn_exact_100k
+q_knn_batch_auto q_knn_batch_auto_100k q_knn_batch_gemm
+q_knn_batch_gemm_100k q_knn_exact q_knn_exact_100k
 q_knn_exact_batch_local_100k q_knn_exact_local_100k q_knn_filtered
 q_knn_ivf_100k q_knn_ivf_batch_100k q_knn_ivf_local_100k
-q_knn_ivfpq_batch_100k q_knn_ivfpq_local_100k q_knn_nsw_100k
-q_knn_nsw_local_100k q_knn_partitioned_100k q_knn_partitioned_batch_100k
-q_pipeline_clean_corpus q_pq_adc_local_100k q_pricing_summary
+q_knn_ivfpq_batch_100k q_knn_ivfpq_local_100k q_pipeline_clean_corpus q_pq_adc_local_100k q_pricing_summary
 q_rag_chunk_embed q_server_get_300 q_server_search_300
 q_server_search_ann_300 q_server_search_c8 q_sq_scan_local_100k
 q_text_word_entropy q_top_orders""".split()
@@ -64,8 +63,7 @@ def _extras_like_r11():
     extras["reran"] = ["row"] * 22
     extras.update(
         ivfpq_build_sec=121.3, ivf_build_sec=9.1,
-        collection_ann_build_sec=14.2, partitioned_build_sec=22.0,
-        nsw_build_sec=30.1, ann_cluster_optimize_sec=5.5,
+        collection_ann_build_sec=14.2, ann_cluster_optimize_sec=5.5,
         neardup_routed_sec=10.2, neardup_kept_block_frac=0.4,
         neardup_routed=True,
     )
@@ -78,7 +76,7 @@ def test_all_queries_survive_at_bench_shape(bench_mod):
     d = json.loads(line)
     assert len(line) <= 2000
     assert len(d["queries"]) == len(timings), (
-        "all 51 per-query timings must fit the tail window at the "
+        "all 46 per-query timings must fit the tail window at the "
         "bench shape"
     )
     # mandatory, non-derivable extras always present

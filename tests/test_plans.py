@@ -95,24 +95,6 @@ def test_suite_registration_contract():
     assert len(q) >= 127
 
 
-def test_partitioned_search_is_map_side_plus_takeordered(spark):
-    """The partition-local ANN single-query plan must be one map-side
-    stage + TakeOrderedAndProject — NO exchange of artifact rows."""
-    from fastpyvectordb_spark.ann.partitioned import (
-        partitioned_build, partitioned_search,
-    )
-
-    emb = load_table(spark, SF, "embeddings")
-    qvec = emb.filter(F.col("vec_id") == 0).head()["embedding"]
-    idx = partitioned_build(emb, n_parts=4, n_lists=8).localCheckpoint()
-    plan = partitioned_search(idx, qvec, k=5, nprobe=4)
-    rep = plan_report(plan)
-    assert rep.exchanges == 0, rep.summary()
-    from fastpyvectordb_spark.plans.advisor import physical_plan
-
-    assert "TakeOrderedAndProject" in physical_plan(plan)
-
-
 def test_dv_read_uses_broadcast_join(spark, tmp_path):
     """The deletion-vector filter must broadcast the (tiny) DV side —
     a shuffled join against kill files would be a scale bug."""

@@ -25,7 +25,7 @@ DEFAULT_QUERIES = [
     "gv_traverse_rerank",
     "ann_ivf_knn",
     "ann_ivfpq_knn",
-    "ann_partitioned_knn",
+    "ann_ivf_batch_knn",
     "dedup_embedding_lsh_threshold",
 ]
 
