@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass, field
@@ -38,7 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fastpyvectordb_spark.filters import Filter, from_dict
-from fastpyvectordb_spark.operators.knn import knn as knn_op
 
 _POINTER = "_current"
 _FILES = "_files"  # shared immutable data-file pool (manifest layout)
@@ -68,6 +68,66 @@ _BLOOM_OPTS = {
 # is ~50 ms. Above the threshold the distributed single-job commit
 # takes over — at 20k rows the collect is ~10 MB, safely bounded.
 _LOCAL_DML_MAX_ROWS = 20_000
+
+# A version's CDC event files wait here until its commit has flipped the
+# pointer; the commit tail (or a later roll-forward) then publishes them.
+_EVENTS_STAGED = "_events_staged"
+
+
+def _write_kills(dv_dir: str, ids, seq: int, prefix: str = "") -> str:
+    """Write one deletion-vector file into ``dv_dir``: an ``(id,
+    kill_seq)`` row per id, all killed at ``seq``. Returns its path. A
+    plain function, so executor-side closures call it too."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    ids = [str(i) for i in ids]
+    os.makedirs(dv_dir, exist_ok=True)
+    path = os.path.join(
+        dv_dir, f"{prefix}kills_{seq}_{uuid.uuid4().hex[:8]}.parquet"
+    )
+    papq.write_table(
+        pa.table(
+            {
+                "id": pa.array(ids, pa.string()),
+                "kill_seq": pa.array([seq] * len(ids), pa.int64()),
+            }
+        ),
+        path,
+    )
+    return path
+
+
+def _write_events(ev_dir: str, ids, event_type: str, collection: str) -> None:
+    """Write one CDC event file (the ``_events`` feed schema) for
+    ``ids`` into ``ev_dir``, a version's staging dir. Executor-side
+    closures call it too; :meth:`Collection._emit` is the Spark twin
+    for batches too large to collect."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    ids = [str(i) for i in ids]
+    n = len(ids)
+    tok = uuid.uuid4().hex[:8]
+    os.makedirs(ev_dir, exist_ok=True)
+    papq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([f"{tok}-{i}" for i in ids], pa.string()),
+                "event_type": pa.array([event_type] * n, pa.string()),
+                "collection": pa.array([collection] * n, pa.string()),
+                "doc_id": pa.array(ids, pa.string()),
+                "ts": pa.array(
+                    [datetime.now(timezone.utc)] * n,
+                    pa.timestamp("us", tz="UTC"),
+                ),
+            }
+        ),
+        os.path.join(ev_dir, f"ev_{tok}.parquet"),
+    )
+
 
 class _RowIndex:
     """dict-like id→row lookup over the serving pack's SORTED id array
@@ -190,6 +250,7 @@ class Collection:
             with open(tmp, "w") as f:
                 f.write(config.to_json())
             os.rename(tmp, cfg)
+        self._roll_forward()
 
     # -- storage ------------------------------------------------------
 
@@ -251,7 +312,7 @@ class Collection:
             files: list[str] = []
             dv: list[str] = []
             for root, dirs, fns in os.walk(vdir):
-                dirs[:] = [d for d in dirs if d != "_events_staged"]
+                dirs[:] = [d for d in dirs if d != _EVENTS_STAGED]
                 rel = os.path.relpath(root, self.path)
                 sink = dv if os.path.basename(root) == "_dv" else files
                 for fn in fns:
@@ -280,48 +341,30 @@ class Collection:
     def _stage_dir(self, version: str) -> str:
         return os.path.join(self.path, "_stage", version)
 
-    def _pool_stage(self, stage: str, version: str) -> list[str]:
-        """Move a staged Spark write's data files into the shared pool
-        under ``{version}-``-prefixed unique names (same-filesystem
-        renames — O(new files)). Pool files are invisible until a
-        committed manifest references them, so a crash here leaves only
-        orphans for vacuum."""
-        import shutil
+    def _pool_dir(self, sub: str) -> str:
+        """Pool subdir ``sub`` (``_bucket=N`` or ``_dv``), created on
+        demand. Pool files are invisible until a committed manifest
+        references them, so a crash after writing one leaves only an
+        orphan for vacuum."""
+        d = os.path.join(self._pool_root(), sub)
+        os.makedirs(d, exist_ok=True)
+        return d
 
-        adds: list[str] = []
-        if not os.path.isdir(stage):
-            return adds
-        for entry in sorted(os.listdir(stage)):
-            if not entry.startswith("_bucket="):
-                continue
-            src = os.path.join(stage, entry)
-            dstd = os.path.join(self._pool_root(), entry)
-            os.makedirs(dstd, exist_ok=True)
-            for fn in sorted(os.listdir(src)):
-                if fn.endswith(".parquet"):
-                    dst = os.path.join(dstd, f"{version}-{fn}")
-                    os.rename(os.path.join(src, fn), dst)
-                    adds.append(os.path.relpath(dst, self.path))
-        shutil.rmtree(stage, ignore_errors=True)
-        return adds
-
-    def _pool_dv(self, vdir: str, version: str) -> list[str]:
-        """Move kill files staged under ``<vdir>/_dv`` (written by the
-        driver or by the commit job's own tasks) into the DV pool."""
-        import shutil
-
-        src = os.path.join(vdir, "_dv")
-        out: list[str] = []
-        if not os.path.isdir(src):
-            return out
-        dstd = os.path.join(self._pool_root(), "_dv")
-        os.makedirs(dstd, exist_ok=True)
-        for fn in sorted(os.listdir(src)):
+    def _pool_move(self, src: str, sub: str, version: str) -> list[str]:
+        """Rename ``src``'s parquet files into pool dir ``sub`` under
+        ``{version}-``-prefixed unique names (same-filesystem renames,
+        O(new files)); return their collection-relative paths."""
+        try:
+            names = sorted(os.listdir(src))
+        except FileNotFoundError:
+            return []
+        dstd = self._pool_dir(sub)
+        out = []
+        for fn in names:
             if fn.endswith(".parquet"):
                 dst = os.path.join(dstd, f"{version}-{fn}")
                 os.rename(os.path.join(src, fn), dst)
                 out.append(os.path.relpath(dst, self.path))
-        shutil.rmtree(src, ignore_errors=True)
         return out
 
     def _base_state(self, base_version: str | None) -> tuple[list[str], list[str]]:
@@ -338,23 +381,24 @@ class Collection:
             return cached
         files, dv = self._resolve(base_version)
         tok = f"mig{uuid.uuid4().hex[:8]}"
-        pooled_files: list[str] = []
-        pooled_dv: list[str] = []
-        for rel in files:
-            b = self._bucket_of_path(rel)
-            dstd = os.path.join(self._pool_root(), f"_bucket={b}")
-            os.makedirs(dstd, exist_ok=True)
-            dst = os.path.join(dstd, f"{tok}-{os.path.basename(rel)}")
-            os.link(os.path.join(self.path, rel), dst)
-            pooled_files.append(os.path.relpath(dst, self.path))
-        for rel in dv:
-            dstd = os.path.join(self._pool_root(), "_dv")
-            os.makedirs(dstd, exist_ok=True)
-            dst = os.path.join(dstd, f"{tok}-{os.path.basename(rel)}")
-            os.link(os.path.join(self.path, rel), dst)
-            pooled_dv.append(os.path.relpath(dst, self.path))
-        self._mig_cache[base_version] = (pooled_files, pooled_dv)
-        return pooled_files, pooled_dv
+
+        def link(rels, sub_of):
+            out = []
+            for rel in rels:
+                dst = os.path.join(
+                    self._pool_dir(sub_of(rel)),
+                    f"{tok}-{os.path.basename(rel)}",
+                )
+                os.link(os.path.join(self.path, rel), dst)
+                out.append(os.path.relpath(dst, self.path))
+            return out
+
+        pooled = (
+            link(files, lambda rel: f"_bucket={self._bucket_of_path(rel)}"),
+            link(dv, lambda rel: "_dv"),
+        )
+        self._mig_cache[base_version] = pooled
+        return pooled
 
     def _compact_dv(self, dv: list[str], version: str) -> list[str]:
         """Fold accumulated kill files into one (tiny id lists — a
@@ -369,10 +413,8 @@ class Collection:
                 for f in dv
             ]
         )
-        dstd = os.path.join(self._pool_root(), "_dv")
-        os.makedirs(dstd, exist_ok=True)
         name = f"{version}-kills_compacted_{uuid.uuid4().hex[:8]}.parquet"
-        dst = os.path.join(dstd, name)
+        dst = os.path.join(self._pool_dir("_dv"), name)
         papq.write_table(merged, dst)
         return [os.path.relpath(dst, self.path)]
 
@@ -381,13 +423,14 @@ class Collection:
         version: str,
         base_version: str | None,
         adds: list[str],
-        removes: list[str],
         dv_adds: list[str],
     ) -> None:
         """Record the new version: a delta against its base, or a full
         checkpoint every ``_CHECKPOINT_EVERY`` commits / on legacy
         migration / when the DV set needs compaction. The manifest is
-        written atomically (tmp + rename) inside the version dir."""
+        written atomically (tmp + rename) inside the version dir. No
+        commit removes files from its base (a rewrite is a checkpoint
+        with ``base_version=None``), so ``removes`` is always empty."""
         vdir = os.path.join(self.path, version)
         os.makedirs(vdir, exist_ok=True)
         bm = self._load_manifest(base_version) if base_version else None
@@ -396,7 +439,7 @@ class Collection:
             resolved = (list(adds), list(dv_adds))
         else:
             bf, bdv = self._base_state(base_version)
-            files = [f for f in bf if f not in set(removes)] + adds
+            files = list(bf) + adds
             dv = list(bdv) + dv_adds
             compact = len(dv) > _DV_COMPACT_AT
             if compact:
@@ -407,7 +450,7 @@ class Collection:
                     "base": base_version,
                     "depth": bm["depth"] + 1,
                     "adds": adds,
-                    "removes": removes,
+                    "removes": [],
                     "dv_adds": dv_adds,
                     "dv_removes": [],
                 }
@@ -546,10 +589,10 @@ class Collection:
     # commit OLDER than kill_seq; upsert = kill + append, delete =
     # kill only. Rows carry a ``_seq`` commit stamp; the read side
     # keeps a row iff no kill exists or row._seq >= kill_seq. DV files
-    # live in ``<version>/_dv/`` (underscore-prefixed → invisible to
-    # the snapshot's own parquet read), are hard-linked forward from
-    # version to version, and vanish on any full rewrite (optimize /
-    # legacy migrate), which is the compaction that folds them in.
+    # live in the pool's ``_dv`` dir, carried forward from version to
+    # version as manifest references, and vanish on any full rewrite
+    # (optimize / legacy migrate), which is the compaction that folds
+    # them in.
 
     def _seq_next(self) -> int:
         return len(self.history()) + 1
@@ -571,34 +614,6 @@ class Collection:
             for f in sorted(os.listdir(dvp))
             if f.endswith(".parquet")
         ]
-
-    def _write_kills(self, vdir: str, ids, seq: int) -> None:
-        """Append one kill file. ``ids`` is a Python list (written
-        driver-side via pyarrow — no Spark job) or a one-column
-        DataFrame (small Spark write)."""
-        dst = os.path.join(vdir, "_dv")
-        os.makedirs(dst, exist_ok=True)
-        if isinstance(ids, DataFrame):
-            (
-                ids.select(
-                    F.col("id").cast("string").alias("id"),
-                    F.lit(seq).cast("long").alias("kill_seq"),
-                )
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(dst)
-            )
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as papq
-
-        t = pa.table(
-            {
-                "id": pa.array([str(i) for i in ids], pa.string()),
-                "kill_seq": pa.array([seq] * len(ids), pa.int64()),
-            }
-        )
-        papq.write_table(t, os.path.join(dst, f"kills_{seq}_{uuid.uuid4().hex[:8]}.parquet"))
 
     def _apply_dv(
         self, df: DataFrame, p: str, keep_seq: bool = False
@@ -682,25 +697,131 @@ class Collection:
 
         return _held()
 
+    # -- the commit protocol ------------------------------------------
+    #
+    # Every pointer move ends in ONE tail, :meth:`_commit_tail`:
+    #   1. gate     optional pre-publish check of the staged bytes;
+    #   2. pool     staged data files and kill files move into ``_files``;
+    #   3. manifest ``<version>/manifest.json`` (tmp + rename);
+    #   4. schema   prime or carry the version's merged read schema;
+    #   5. flip     OCC check, pointer flip and ``_versions`` append under
+    #               the commit lock (:meth:`_finish_commit`);
+    #   6. publish  staged CDC events move into ``_events``.
+    # Verbs differ only in what they stage first: Spark writes into
+    # ``_stage/<version>``, driver-side pyarrow files straight into the
+    # pool, kill and event files into ``<version>/_dv`` and
+    # ``<version>/_events_staged``. Before step 5 nothing is visible: an
+    # abort (:meth:`_abort`) drops the stage and version dirs, and a
+    # crash leaves orphans no reader sees. From step 5 on the version is
+    # committed, and a crash before step 6 finishes is rolled forward by
+    # the next open (:meth:`_roll_forward`).
+
+    def _new_version(self) -> tuple[str, str]:
+        """A fresh version name and its (not yet created) dir."""
+        version = f"v_{uuid.uuid4().hex[:12]}"
+        return version, os.path.join(self.path, version)
+
+    def _abort(self, version: str) -> None:
+        """Drop an uncommitted version: its stage dir and version dir."""
+        shutil.rmtree(self._stage_dir(version), ignore_errors=True)
+        shutil.rmtree(os.path.join(self.path, version), ignore_errors=True)
+
+    def _write_stage(self, out: DataFrame, version: str) -> str:
+        """Write ``out`` (with its ``_bucket`` column) into the version's
+        stage dir: the commit's one Spark write job. A failed write
+        aborts the version; validation errors raised inside the write
+        tasks (:meth:`_wrap_side_effects`) surface as ``ValueError``."""
+        import re
+
+        stage = self._stage_dir(version)
+        try:
+            out.write.options(**_BLOOM_OPTS).mode("overwrite").partitionBy(
+                "_bucket"
+            ).parquet(stage)
+        except Exception as ex:
+            self._abort(version)
+            m = re.search(
+                r"(dimension mismatch|null id in batch"
+                r"|duplicate id in upsert batch)[^\"\n]*",
+                str(ex),
+            )
+            if m:
+                raise ValueError(m.group(0)) from ex
+            raise
+        return stage
+
+    def _commit_tail(
+        self,
+        version: str,
+        op: str,
+        base: str | None,
+        *,
+        stage: str | None = None,
+        adds: Sequence[str] = (),
+        dv_adds: Sequence[str] = (),
+        written: DataFrame | None = None,
+        rewrite: bool = False,
+        gate=None,
+    ) -> None:
+        """Commit ``version`` on top of ``base`` (steps 1-6 above).
+
+        ``stage`` is the version's Spark stage dir; ``adds``/``dv_adds``
+        are files the caller already wrote into the pool. ``written`` is
+        the DataFrame whose schema the new files carry (None: the schema
+        is the base's). ``rewrite`` marks a full snapshot rewrite: the
+        manifest is a fresh checkpoint, though ``base`` still guards the
+        flip. ``gate(stage, vdir)`` may raise to abort before anything
+        is pooled or pointed at."""
+        vdir = os.path.join(self.path, version)
+        if gate is not None:
+            try:
+                gate(stage, vdir)
+            except Exception:
+                self._abort(version)
+                raise
+        adds = list(adds)
+        if stage is not None:
+            for entry in sorted(os.listdir(stage)):
+                if entry.startswith("_bucket="):
+                    adds += self._pool_move(
+                        os.path.join(stage, entry), entry, version
+                    )
+            shutil.rmtree(stage, ignore_errors=True)
+        dv_src = os.path.join(vdir, "_dv")
+        moved = self._pool_move(dv_src, "_dv", version)
+        if moved:
+            shutil.rmtree(dv_src, ignore_errors=True)
+        dv_adds = list(dv_adds) + moved
+        self._write_manifest(version, None if rewrite else base, adds, dv_adds)
+        base_p = os.path.join(self.path, base) if base else None
+        if written is not None:
+            self._prime_schema(vdir, written, base=None if rewrite else base_p)
+        elif base_p in self._schema_cache:
+            self._schema_cache[vdir] = self._schema_cache[base_p]
+        self._finish_commit(version, op, base=base, pooled=adds + dv_adds)
+        self._publish_staged_events(vdir)
+
     def _finish_commit(
         self,
         version: str,
         op: str,
         base: str | None = None,
         pooled: list[str] | None = None,
+        check: bool = True,
     ) -> None:
-        """Atomically point the collection at ``version``.
+        """Atomically point the collection at ``version`` and log it —
+        the only pointer flip and ``_versions`` append of every commit
+        (step 5 of :meth:`_commit_tail`; :meth:`restore` too).
 
         ``base`` is the snapshot version the commit was BUILT against
         (optimistic concurrency, Delta-style): if another writer
-        flipped the pointer since, this commit's hard links and kill
-        files describe a stale base — the orphaned version dir is
-        removed and :class:`CommitConflictError` raised so the caller
-        can re-read and retry. Conflict detection is coarse (any
-        intervening commit conflicts); at 100 TB the lock window is
-        the pointer flip only — milliseconds — not the data write."""
-        import time
-
+        flipped the pointer since, this commit's manifest and kill
+        files describe a stale base — the orphaned version is aborted,
+        its pooled files unlinked, and :class:`CommitConflictError`
+        raised so the caller can re-read and retry. Conflict detection
+        is coarse (any intervening commit conflicts); at 100 TB the
+        lock window is the pointer flip only — milliseconds — not the
+        data write. ``check=False`` (restore) flips unconditionally."""
         with self._commit_lock():
             cur = self._current_version()
             # base=None means the commit was built against an EMPTY
@@ -708,12 +829,8 @@ class Collection:
             # flipped the pointer is just as much a conflict as a
             # base mismatch (otherwise the second flip silently drops
             # the first batch).
-            if cur is not None and cur != base:
-                import shutil
-
-                shutil.rmtree(
-                    os.path.join(self.path, version), ignore_errors=True
-                )
+            if check and cur is not None and cur != base:
+                self._abort(version)
                 # this commit's pool files reference a stale base —
                 # unlink them so the conflict leaves no orphans
                 for rel in pooled or []:
@@ -728,9 +845,66 @@ class Collection:
                     f"this {op} was building; re-read and retry"
                 )
             self._flip_pointer(version)
-            with open(os.path.join(self.path, "_versions"), "a") as f:
-                f.write(json.dumps({"version": version, "op": op,
-                                    "ts": time.time()}) + "\n")
+            self._log_version(version, op)
+
+    def _log_version(self, version: str, op: str) -> None:
+        """Append one ``_versions`` line; the caller holds the lock."""
+        import time
+
+        with open(os.path.join(self.path, "_versions"), "a") as f:
+            f.write(json.dumps({"version": version, "op": op,
+                                "ts": time.time()}) + "\n")
+
+    def _publish_staged_events(self, vdir: str) -> None:
+        """Move a committed version's staged CDC event files into the
+        live ``_events`` feed (step 6). Same-filesystem renames, each
+        atomic, so stream readers only ever see whole files. Two
+        processes may publish the same version (a writer and a
+        roll-forward): each file moves once, the loser's rename finds
+        it gone."""
+        staged = os.path.join(vdir, _EVENTS_STAGED)
+        try:
+            names = os.listdir(staged)
+        except FileNotFoundError:
+            return
+        ev_dir = os.path.join(self.path, "_events")
+        os.makedirs(ev_dir, exist_ok=True)
+        for fn in names:
+            if fn.endswith(".parquet"):
+                try:
+                    os.rename(
+                        os.path.join(staged, fn), os.path.join(ev_dir, fn)
+                    )
+                except FileNotFoundError:
+                    pass
+        shutil.rmtree(staged, ignore_errors=True)
+
+    def _roll_forward(self) -> None:
+        """Finish what a crash left of committed versions; runs on open
+        and before :meth:`vacuum` drops version dirs. A version is
+        committed once the pointer has named it: everything in
+        ``_versions`` plus the current pointer, which a crash between
+        the flip and the log append leaves unlogged. That missing line
+        is appended (as op ``roll_forward``) so :meth:`_seq_next` never
+        hands its seq out twice — under the commit lock, and skipped
+        while a live writer holds it. Then every committed version's
+        staged events are published. Uncommitted version dirs are left
+        alone: a concurrent writer may still own them."""
+        cur = self._current_version()
+        hist = self.history()
+        if cur is not None and (not hist or hist[-1]["version"] != cur):
+            try:
+                with self._commit_lock(timeout=0):
+                    hist = self.history()
+                    if self._current_version() == cur and (
+                        not hist or hist[-1]["version"] != cur
+                    ):
+                        self._log_version(cur, "roll_forward")
+            except TimeoutError:
+                pass
+        committed = {h["version"] for h in hist} | ({cur} if cur else set())
+        for v in sorted(committed):
+            self._publish_staged_events(os.path.join(self.path, v))
 
     def _commit(
         self,
@@ -742,16 +916,17 @@ class Collection:
         """Full-snapshot commit, partitioned by id-hash bucket so later
         DML can rewrite only touched buckets (Delta's file pruning).
         A full rewrite contains only live rows, so no deletion vectors
-        carry over — this is also the DV compaction point.
+        carry over — this is also the DV compaction point, and the
+        commit that migrates a legacy non-bucketed snapshot.
 
         ``files_per_bucket`` splits each bucket across that many write
         tasks (deterministic id-hash sub-split) — optimize() sizes it
         so compaction yields ~target_file_bytes files instead of
         n_buckets giant ones; plain DML commits keep the default of one
-        task per bucket."""
+        task per bucket. ``pre_publish(stage, vdir)`` is the tail's
+        gate: it validates the staged bytes and stages CDC events."""
         base = self._current_version()
-        version = f"v_{uuid.uuid4().hex[:12]}"
-        vdir = os.path.join(self.path, version)
+        version, _ = self._new_version()
         df = df.withColumn("_seq", F.lit(self._seq_next()).cast("long"))
         fpb = max(1, int(files_per_bucket))
         d = df.withColumn("_bucket", self._bucket())
@@ -787,29 +962,11 @@ class Collection:
         # sort/split helper columns are never stored or schema-primed
         d = d.drop("_fsplit")
         df = df.drop("_zorder", "_fsplit")
-        stage = self._stage_dir(version)
-        d.write.options(**_BLOOM_OPTS).mode("overwrite").partitionBy(
-            "_bucket"
-        ).parquet(stage)
-        if pre_publish is not None:
-            # post-write / pre-publish gate (r12 insert path): the
-            # caller validates the STAGED bytes (dup checks, CDC
-            # staging) and raises to abort — nothing is pooled or
-            # pointed at yet, so the abort leaves no garbage
-            try:
-                pre_publish(stage, vdir)
-            except Exception:
-                import shutil
-
-                shutil.rmtree(stage, ignore_errors=True)
-                shutil.rmtree(vdir, ignore_errors=True)
-                raise
-        adds = self._pool_stage(stage, version)
-        # full rewrite = fresh checkpoint: only live rows, no DV carry
-        self._write_manifest(version, None, adds, [], [])
-        self._prime_schema(vdir, df, base=None)
-        self._finish_commit(version, op, base=base, pooled=adds)
-        self._publish_staged_events(vdir)
+        stage = self._write_stage(d, version)
+        self._commit_tail(
+            version, op, base, stage=stage, written=df, rewrite=True,
+            gate=pre_publish,
+        )
 
     def _snapshot_bucketed(self) -> bool:
         """True when the current snapshot has ``_bucket=`` partition
@@ -823,262 +980,126 @@ class Collection:
             return True  # manifest versions are always pool-bucketed
         return any(e.startswith("_bucket=") for e in os.listdir(cur))
 
-    def _commit_delta(
-        self, changed: DataFrame, touched: list[int], op: str
-    ) -> None:
-        """File-pruned commit (Delta MERGE mechanics): ``changed`` is
-        the FULL new content of the ``touched`` buckets; every other
-        bucket's files carry forward as manifest references — O(changed
-        data) write, O(changed files) metadata. This is what keeps a
-        1k-row MERGE from rewriting (or even re-listing) a 100 TB
-        table."""
-        cur = self._data_path()
-        if not self._snapshot_bucketed():
-            # legacy non-bucketed snapshot: `changed` is the full new
-            # table (see _bucket_rows) — full commit migrates it
-            self._commit(changed, op)
-            return
-        if cur is None or not touched:
-            if cur is None:
-                self._commit(changed, op)
-            return
-        base_v = os.path.basename(cur)
-        version = f"v_{uuid.uuid4().hex[:12]}"
-        vdir = os.path.join(self.path, version)
-        touched_set = {int(t) for t in touched}
-        base_files, _base_dv = self._base_state(base_v)
-        removes = [
-            f for f in base_files if self._bucket_of_path(f) in touched_set
-        ]
-        changed = changed.withColumn(
-            "_seq", F.lit(self._seq_next()).cast("long")
-        )
-        stage = self._stage_dir(version)
-        (
-            changed.withColumn("_bucket", self._bucket())
-            .repartition(max(1, len(touched_set)), "_bucket")
-            .write.options(**_BLOOM_OPTS)
-            .mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(stage)
-        )
-        adds = self._pool_stage(stage, version)
-        # base DV refs carry forward in the manifest: rewritten buckets
-        # hold only live rows at a fresh _seq, so stale kills are inert
-        self._write_manifest(version, base_v, adds, removes, [])
-        self._prime_schema(vdir, changed, base=cur)
-        self._finish_commit(version, op, base=base_v, pooled=adds)
-
     def _commit_append(
         self,
-        batch: DataFrame | None,
+        batch: DataFrame,
         op: str,
-        kill_ids=None,
         n_rows: int | None = None,
         kill_event: str | None = None,
         pre_publish=None,
-    ) -> None:
+    ) -> int | None:
         """Append-only commit (Delta blind APPEND + deletion vectors):
         the manifest records the batch's new files as adds over the base
-        version, plus ``kill_ids`` (list or DataFrame) as deletion-
-        vector adds — the current snapshot is never read OR re-listed,
-        so a 1k-row insert/upsert/delete into a 100 TB table costs
-        O(1k rows) + O(new files) metadata. Inserts pass batch only
-        (ids dup-checked absent); upserts pass batch + kills; deletes
-        pass kills only. Repeated commits accumulate small files and DV
-        entries; :meth:`optimize` compacts both."""
+        version — the current snapshot is never read OR re-listed, so a
+        1k-row insert/upsert into a 100 TB table costs O(1k rows) +
+        O(new files) metadata. ``kill_event`` (upsert) also kills every
+        batch id and stages its CDC events inside the write tasks, and
+        the call returns the written row count. Repeated commits
+        accumulate small files and DV entries; :meth:`optimize`
+        compacts both."""
         cur = self._data_path()
         if cur is None or not self._has_parquet(cur) or not self._snapshot_bucketed():
             # empty or legacy layout: a full commit bootstraps/migrates.
-            # Kills are already folded in by the caller's fallback path.
             # Large bootstrap batches split each bucket across several
             # write tasks (the wall-time lever for bulk ingest: bucket
             # count alone under-parallelizes a big first load); small
             # ones keep one file per bucket.
-            if batch is not None:
-                fpb = max(1, min(8, (n_rows or 0) // 50_000))
-                self._commit(
-                    batch, op, files_per_bucket=fpb,
-                    pre_publish=pre_publish,
-                )
-            return
-        base_v = os.path.basename(cur)
-        version = f"v_{uuid.uuid4().hex[:12]}"
-        vdir = os.path.join(self.path, version)
-        os.makedirs(vdir, exist_ok=True)
+            fpb = max(1, min(8, (n_rows or 0) // 50_000))
+            self._commit(
+                batch, op, files_per_bucket=fpb, pre_publish=pre_publish
+            )
+            return None
+        version, vdir = self._new_version()
         seq = self._seq_next()
-        if kill_ids is not None and not (
-            isinstance(kill_ids, DataFrame) and kill_event is not None
+        batch = batch.withColumn("_seq", F.lit(seq).cast("long"))
+        # small appends don't need a cluster-wide shuffle: one task
+        # writes all its bucket files (partitionBy splits them).
+        # When the caller didn't size the batch (upsert skips the
+        # count job), hash-partition WITHOUT a fixed task count and
+        # let AQE coalesce — a 1k-row upsert collapses to one write
+        # task (one python worker, one kill file) instead of
+        # n_buckets, while a 10M-row one still fans out. AQE merges
+        # whole hash partitions, so the task-local dup check in
+        # _wrap_side_effects stays a complete global check.
+        out = batch.withColumn("_bucket", self._bucket())
+        if n_rows is not None:
+            # up to one task per bucket is FREE on file count: the
+            # hash partition keeps each bucket whole, so every
+            # bucket dir gains exactly one file per commit no
+            # matter how many tasks carry the write
+            tasks = max(
+                1, min(self.config.n_buckets, n_rows // 12_500 or 1)
+            )
+            out = out.repartition(tasks, "_bucket")
+        elif (
+            self.spark.conf.get("spark.sql.adaptive.enabled", "true")
+            == "true"
         ):
-            self._write_kills(vdir, kill_ids, seq)
-        n_out = None
-        if batch is not None:
-            batch = batch.withColumn("_seq", F.lit(seq).cast("long"))
-            # small appends don't need a cluster-wide shuffle: one task
-            # writes all its bucket files (partitionBy splits them).
-            # When the caller didn't size the batch (upsert skips the
-            # count job), hash-partition WITHOUT a fixed task count and
-            # let AQE coalesce — a 1k-row upsert collapses to one write
-            # task (one python worker, one kill file) instead of
-            # n_buckets, while a 10M-row one still fans out. AQE merges
-            # whole hash partitions, so the task-local dup check in
-            # _wrap_side_effects stays a complete global check.
-            out = batch.withColumn("_bucket", self._bucket())
-            if n_rows is not None:
-                # up to one task per bucket is FREE on file count: the
-                # hash partition keeps each bucket whole, so every
-                # bucket dir gains exactly one file per commit no
-                # matter how many tasks carry the write
-                tasks = max(
-                    1, min(self.config.n_buckets, n_rows // 12_500 or 1)
-                )
-                out = out.repartition(tasks, "_bucket")
-            elif (
-                self.spark.conf.get("spark.sql.adaptive.enabled", "true")
-                == "true"
-            ):
-                out = out.repartition("_bucket")
-            else:
-                # no AQE to coalesce the unsized shuffle: without a task
-                # count it would fan out to spark.sql.shuffle.partitions
-                # (default 200) mostly-empty python workers. One task
-                # per bucket is the safe bound.
-                out = out.repartition(self.config.n_buckets, "_bucket")
-            obs = None
-            if kill_event is not None:
-                # fuse kills + CDC events + dim validation into the
-                # write tasks themselves: the whole upsert is ONE job
-                out = self._wrap_side_effects(out, vdir, seq, kill_event)
-                try:
-                    from pyspark.sql import Observation
-
-                    obs = Observation()
-                    out = out.observe(obs, F.count(F.lit(1)).alias("n"))
-                except ImportError:
-                    obs = None
-            stage = self._stage_dir(version)
-            try:
-                out.write.options(**_BLOOM_OPTS).mode(
-                    "overwrite"
-                ).partitionBy("_bucket").parquet(stage)
-            except Exception as ex:
-                import re as _re
-                import shutil
-
-                shutil.rmtree(stage, ignore_errors=True)
-                shutil.rmtree(vdir, ignore_errors=True)
-                m = _re.search(
-                    r"(dimension mismatch|null id in batch"
-                    r"|duplicate id in upsert batch)[^\"\n]*",
-                    str(ex),
-                )
-                if m:
-                    raise ValueError(m.group(0)) from ex
-                raise
-            if obs is not None:
-                n_out = int(obs.get["n"])
-                if n_out == 0 and kill_event is not None:
-                    # empty upsert batch: nothing was written or killed
-                    # — don't flip to a pointless no-op version (a
-                    # streaming upsert sink sees empty micro-batches
-                    # routinely and must not bloat the version chain)
-                    import shutil
-
-                    shutil.rmtree(stage, ignore_errors=True)
-                    shutil.rmtree(vdir, ignore_errors=True)
-                    return 0
-            if pre_publish is not None:
-                # same post-write / pre-publish gate as _commit
-                try:
-                    pre_publish(stage, vdir)
-                except Exception:
-                    import shutil
-
-                    shutil.rmtree(stage, ignore_errors=True)
-                    shutil.rmtree(vdir, ignore_errors=True)
-                    raise
-            adds = self._pool_stage(stage, version)
-            self._prime_schema(vdir, batch, base=cur)
+            out = out.repartition("_bucket")
         else:
-            adds = []
-            if cur in self._schema_cache:
-                self._schema_cache[vdir] = self._schema_cache[cur]
-        dv_adds = self._pool_dv(vdir, version)
-        self._write_manifest(version, base_v, adds, [], dv_adds)
-        self._finish_commit(version, op, base=base_v, pooled=adds + dv_adds)
-        self._publish_staged_events(vdir)
+            # no AQE to coalesce the unsized shuffle: without a task
+            # count it would fan out to spark.sql.shuffle.partitions
+            # (default 200) mostly-empty python workers. One task
+            # per bucket is the safe bound.
+            out = out.repartition(self.config.n_buckets, "_bucket")
+        obs = None
+        if kill_event is not None:
+            from pyspark.sql import Observation
+
+            # fuse kills + CDC events + dim validation into the
+            # write tasks themselves: the whole upsert is ONE job
+            out = self._wrap_side_effects(out, vdir, seq, kill_event)
+            obs = Observation()
+            out = out.observe(obs, F.count(F.lit(1)).alias("n"))
+        stage = self._write_stage(out, version)
+        n_out = None
+        if obs is not None:
+            n_out = int(obs.get["n"])
+            if n_out == 0:
+                # empty upsert batch: nothing was written or killed
+                # — don't flip to a pointless no-op version (a
+                # streaming upsert sink sees empty micro-batches
+                # routinely and must not bloat the version chain)
+                self._abort(version)
+                return 0
+        self._commit_tail(
+            version, op, os.path.basename(cur), stage=stage, written=batch,
+            gate=pre_publish,
+        )
         return n_out
 
-    def _commit_kill(self, doomed: DataFrame, op: str, event_type: str = "delete") -> bool:
+    def _commit_kill(self, doomed: DataFrame, op: str) -> bool:
         """Kill-only commit driven by ONE job: the doomed-id scan's own
         tasks write the deletion-vector and CDC event files directly
         (pyarrow, executor-side). The new version becomes current only
-        if some task materialized a kill — an empty match discards the
-        staged version dir and commits nothing. Returns whether a
-        commit happened."""
-        import shutil
-
+        if some task materialized a kill — an empty match writes no
+        version dir and commits nothing. Returns whether a commit
+        happened."""
         cur = self._data_path()
         if cur is None or not self._has_parquet(cur):
             return False  # empty collection: nothing can match
-        base_v = os.path.basename(cur)
-        version = f"v_{uuid.uuid4().hex[:12]}"
-        vdir = os.path.join(self.path, version)
-        os.makedirs(vdir, exist_ok=True)
+        version, vdir = self._new_version()
         seq = self._seq_next()
         dv_dir = os.path.join(vdir, "_dv")
-        # stage events in the version dir; published after the flip
-        # (see _publish_staged_events) so an aborted/conflicted delete
-        # leaves no phantom change events
-        ev_dir = os.path.join(vdir, "_events_staged")
-        os.makedirs(dv_dir, exist_ok=True)
-        os.makedirs(ev_dir, exist_ok=True)
+        ev_dir = os.path.join(vdir, _EVENTS_STAGED)
         coll = os.path.basename(self.path)
 
         def per_part(rows) -> None:
-            import uuid as _uuid
-            from datetime import datetime, timezone
-
-            import pyarrow as pa
-            import pyarrow.parquet as papq
-
             ids = [str(r["id"]) for r in rows]
-            if not ids:
-                return
-            tok = _uuid.uuid4().hex[:8]
-            papq.write_table(
-                pa.table(
-                    {
-                        "id": pa.array(ids, pa.string()),
-                        "kill_seq": pa.array([seq] * len(ids), pa.int64()),
-                    }
-                ),
-                os.path.join(dv_dir, f"kills_{seq}_{tok}.parquet"),
-            )
-            now = datetime.now(timezone.utc)
-            papq.write_table(
-                pa.table(
-                    {
-                        "event_id": pa.array([f"{tok}-{i}" for i in ids], pa.string()),
-                        "event_type": pa.array([event_type] * len(ids), pa.string()),
-                        "collection": pa.array([coll] * len(ids), pa.string()),
-                        "doc_id": pa.array(ids, pa.string()),
-                        "ts": pa.array([now] * len(ids), pa.timestamp("us", tz="UTC")),
-                    }
-                ),
-                os.path.join(ev_dir, f"ev_{tok}.parquet"),
-            )
+            if ids:
+                _write_kills(dv_dir, ids, seq)
+                _write_events(ev_dir, ids, "delete", coll)
 
-        doomed.select(F.col("id").cast("string").alias("id")).foreachPartition(per_part)
-        if not any(f.startswith(f"kills_{seq}_") for f in os.listdir(dv_dir)):
-            shutil.rmtree(vdir)  # nothing matched: no commit
-            return False
-        if cur in self._schema_cache:
-            self._schema_cache[vdir] = self._schema_cache[cur]
-        dv_adds = self._pool_dv(vdir, version)
-        self._write_manifest(version, base_v, [], [], dv_adds)
-        self._finish_commit(version, op, base=base_v, pooled=dv_adds)
-        self._publish_staged_events(vdir)
+        try:
+            doomed.select(F.col("id").cast("string").alias("id")).foreachPartition(
+                per_part
+            )
+        except Exception:
+            self._abort(version)
+            raise
+        if not os.path.isdir(dv_dir):
+            return False  # nothing matched: no commit
+        self._commit_tail(version, op, os.path.basename(cur))
         return True
 
     def _wrap_side_effects(
@@ -1087,27 +1108,17 @@ class Collection:
         """Pass-through ``mapInPandas`` stage for the commit write: each
         write task validates ids/dimensions, streams its rows to the
         parquet writer unchanged, then side-writes ONE kill file
-        (deletion vector) and ONE CDC event file via pyarrow. Events are
-        STAGED inside the version dir and only published to the shared
-        ``_events`` feed after the pointer flip
-        (:meth:`_publish_staged_events`) — tasks that finished before a
-        failing/conflicting sibling must not leave phantom change
-        events for a commit that never happened. Kill files need no
-        staging: in a never-pointed version dir they are inert."""
+        (deletion vector) and ONE CDC event file via pyarrow into the
+        version dir. Both wait there for the commit tail: kill files
+        are pooled only by a commit that goes on to flip, and events
+        publish only after the flip — tasks that finished before a
+        failing/conflicting sibling leave no phantom change events."""
         dv_dir = os.path.join(vdir, "_dv")
-        ev_dir = os.path.join(vdir, "_events_staged")
-        os.makedirs(dv_dir, exist_ok=True)
-        os.makedirs(ev_dir, exist_ok=True)
+        ev_dir = os.path.join(vdir, _EVENTS_STAGED)
         coll = os.path.basename(self.path)
         dims = self.config.dimensions
 
         def run(batches):
-            import uuid as _uuid
-            from datetime import datetime, timezone
-
-            import pyarrow as pa
-            import pyarrow.parquet as papq
-
             ids: list[str] = []
             seen: set = set()
             for pdf in batches:
@@ -1138,65 +1149,17 @@ class Collection:
                     seen.add(i)
                     ids.append(str(i))
                 yield pdf
-            if not ids:
-                return
-            tok = _uuid.uuid4().hex[:8]
-            papq.write_table(
-                pa.table(
-                    {
-                        "id": pa.array(ids, pa.string()),
-                        "kill_seq": pa.array([seq] * len(ids), pa.int64()),
-                    }
-                ),
-                os.path.join(dv_dir, f"kills_{seq}_{tok}.parquet"),
-            )
-            now = datetime.now(timezone.utc)
-            papq.write_table(
-                pa.table(
-                    {
-                        "event_id": pa.array(
-                            [f"{tok}-{i}" for i in ids], pa.string()
-                        ),
-                        "event_type": pa.array(
-                            [event_type] * len(ids), pa.string()
-                        ),
-                        "collection": pa.array([coll] * len(ids), pa.string()),
-                        "doc_id": pa.array(ids, pa.string()),
-                        "ts": pa.array(
-                            [now] * len(ids), pa.timestamp("us", tz="UTC")
-                        ),
-                    }
-                ),
-                os.path.join(ev_dir, f"ev_{tok}.parquet"),
-            )
+            if ids:
+                _write_kills(dv_dir, ids, seq)
+                _write_events(ev_dir, ids, event_type, coll)
 
         return df.mapInPandas(run, schema=df.schema)
-
-    def _publish_staged_events(self, vdir: str) -> None:
-        """Move a committed version's staged CDC event files into the
-        live ``_events`` feed. Runs strictly AFTER the pointer flip:
-        same-filesystem renames, each atomic, so stream readers only
-        ever see whole files and aborted commits publish nothing."""
-        staged = os.path.join(vdir, "_events_staged")
-        if not os.path.isdir(staged):
-            return
-        ev_dir = os.path.join(self.path, "_events")
-        os.makedirs(ev_dir, exist_ok=True)
-        for fn in os.listdir(staged):
-            if fn.endswith(".parquet"):
-                os.rename(
-                    os.path.join(staged, fn), os.path.join(ev_dir, fn)
-                )
-        try:
-            os.rmdir(staged)
-        except OSError:
-            pass
 
     def _bucket_rows(self, touched: list[int]) -> DataFrame:
         """Current rows of the touched buckets only — the read is
         pruned to those partition dirs. On a legacy non-bucketed
         snapshot this returns the FULL table (no ``_bucket`` column to
-        prune on); the paired _commit_delta then does a full migrating
+        prune on); the paired :meth:`_commit` then does a full migrating
         rewrite, so DML on old collections works instead of raising."""
         p = self._data_path()
         if p is None or not self._has_parquet(p):
@@ -1240,13 +1203,7 @@ class Collection:
         check-and-flip."""
         if not os.path.isdir(os.path.join(self.path, version)):
             raise ValueError(f"unknown version: {version}")
-        import time
-
-        with self._commit_lock():
-            self._flip_pointer(version)
-            with open(os.path.join(self.path, "_versions"), "a") as f:
-                f.write(json.dumps({"version": version, "op": "restore",
-                                    "ts": time.time()}) + "\n")
+        self._finish_commit(version, "restore", check=False)
 
     def optimize(
         self,
@@ -1391,9 +1348,11 @@ class Collection:
         by an IN-FLIGHT commit carry a version not yet in history, so
         they are never GC'd from under a concurrent writer; orphans
         from crashed commits (never-committed versions) are likewise
-        left alone — bounded by crash count, not commit count."""
-        import shutil
-
+        left alone — bounded by crash count, not commit count. Staged
+        CDC events of committed versions are published first
+        (:meth:`_roll_forward`), so dropping a version dir never drops
+        its events."""
+        self._roll_forward()
         hist = self.history()
         keep = {h["version"] for h in hist[-max(keep_last, 1):]}
         cur = self._current_version()
@@ -1443,18 +1402,11 @@ class Collection:
 
     # -- change feed (R5: ObservableCollection, realtime.py:325-442) --
 
-    def _emit(
-        self, event_type: str, ids_df: DataFrame | None,
-        to_dir: str | None = None,
-    ) -> None:
-        """Append CDC events for a mutation to the collection's event
-        log (parquet append — the poor-man's Delta Change Data Feed).
-        ``events_stream()`` turns this into a live subscription source.
-        ``to_dir`` writes to a staging dir instead (published after the
-        pointer flip via :meth:`_publish_staged_events`, which moves
-        every ``*.parquet`` in the staging dir)."""
-        if ids_df is None:
-            return
+    def _emit(self, event_type: str, ids_df: DataFrame, to_dir: str) -> None:
+        """Spark twin of :func:`_write_events` for id sets too large to
+        collect: stage CDC events for ``ids_df`` into a version's
+        ``to_dir`` (one Spark job; the commit tail publishes every
+        ``*.parquet`` there after the flip)."""
         ev = ids_df.select(
             F.concat(F.lit(uuid.uuid4().hex[:8] + "-"), F.col("id")).alias(
                 "event_id"
@@ -1466,68 +1418,7 @@ class Collection:
             F.col("id").cast("string").alias("doc_id"),
             F.current_timestamp().alias("ts"),
         )
-        ev.write.mode("append").parquet(
-            to_dir if to_dir is not None
-            else os.path.join(self.path, "_events")
-        )
-
-    def _stage_event_ids(self, ev_dir: str, event_type: str, ids) -> None:
-        """Driver-side pyarrow CDC staging for ids already in Python —
-        one file write (~ms) instead of a Spark job; same schema as
-        :meth:`_emit_ids`, written into a version staging dir for
-        post-flip publish."""
-        if not len(ids):
-            return
-        from datetime import datetime, timezone
-
-        import pyarrow as pa
-        import pyarrow.parquet as papq
-
-        now = datetime.now(timezone.utc)
-        prefix = uuid.uuid4().hex[:8]
-        t = pa.table(
-            {
-                "event_id": pa.array(
-                    [f"{prefix}-{i}" for i in ids], pa.string()
-                ),
-                "event_type": pa.array([event_type] * len(ids), pa.string()),
-                "collection": pa.array(
-                    [os.path.basename(self.path)] * len(ids), pa.string()
-                ),
-                "doc_id": pa.array([str(i) for i in ids], pa.string()),
-                "ts": pa.array([now] * len(ids), pa.timestamp("us", tz="UTC")),
-            }
-        )
-        os.makedirs(ev_dir, exist_ok=True)
-        papq.write_table(t, os.path.join(ev_dir, f"ev_{prefix}.parquet"))
-
-    def _emit_ids(self, event_type: str, ids: list) -> None:
-        """Driver-side CDC append for id lists already in Python —
-        a pyarrow file write (~ms) instead of a Spark job. Same schema
-        as :meth:`_emit` (UTC-adjusted micros timestamps)."""
-        if not ids:
-            return
-        from datetime import datetime, timezone
-
-        import pyarrow as pa
-        import pyarrow.parquet as papq
-
-        now = datetime.now(timezone.utc)
-        prefix = uuid.uuid4().hex[:8]
-        t = pa.table(
-            {
-                "event_id": pa.array([f"{prefix}-{i}" for i in ids], pa.string()),
-                "event_type": pa.array([event_type] * len(ids), pa.string()),
-                "collection": pa.array(
-                    [os.path.basename(self.path)] * len(ids), pa.string()
-                ),
-                "doc_id": pa.array([str(i) for i in ids], pa.string()),
-                "ts": pa.array([now] * len(ids), pa.timestamp("us", tz="UTC")),
-            }
-        )
-        evdir = os.path.join(self.path, "_events")
-        os.makedirs(evdir, exist_ok=True)
-        papq.write_table(t, os.path.join(evdir, f"ev_{prefix}.parquet"))
+        ev.write.mode("append").parquet(to_dir)
 
     def events_df(self) -> DataFrame:
         """The change log as a batch DataFrame (replay; R3)."""
@@ -1735,9 +1626,13 @@ class Collection:
         between the write and the manifest publish AGAINST THE STAGED
         BYTES: ids come off the staged parquet footers driver-side
         (bounded; Spark-side above _INSERT_DRIVER_CHECK_MAX_ROWS), so
-        nondeterministic lineage is recorded exactly as written and the
-        batch is never persisted or re-scanned. A failed check aborts
-        before anything is pooled or pointed at. The r11 shape paid a
+        nondeterministic lineage is checked and recorded exactly as
+        written. The batch is never persisted, but its lineage runs
+        TWICE: once for the sizing ``count()`` and once for the write
+        (an expensive source — an embedding UDF, a remote read — pays
+        both; the count only sizes the write tasks, every check uses
+        the write's own observed rows). A failed check aborts before
+        anything is pooled or pointed at. The r11 shape paid a
         persist + fused stats job (2.49 s at the 100k bench point) + a
         post-commit CDC job (0.99 s) that this removes; CDC events now
         stage in the version dir and publish after the pointer flip
@@ -1821,13 +1716,13 @@ class Collection:
                 if dup:
                     raise ValueError(f"duplicate id {dup[0]['id']!r}")
             # CDC events: staged in the version dir, published after
-            # the pointer flip by _publish_staged_events
-            ev_dir = os.path.join(vdir, "_events_staged")
+            # the pointer flip by the commit tail
+            ev_dir = os.path.join(vdir, _EVENTS_STAGED)
             et = "batch_insert" if n_out > 1 else "insert"
-            if ids is not None:
-                self._stage_event_ids(ev_dir, et, ids)
-            else:
-                self._emit(et, self.spark.read.parquet(stage), to_dir=ev_dir)
+            if ids is None:
+                self._emit(et, self.spark.read.parquet(stage), ev_dir)
+            elif ids:
+                _write_events(ev_dir, ids, et, os.path.basename(self.path))
 
         self._commit_append(
             batch, op="insert", n_rows=n, pre_publish=pre_publish
@@ -1863,11 +1758,7 @@ class Collection:
                 return self._upsert_local(probe, batch, cur)
             # fast path: kill + append + CDC + dim-check + row count all
             # inside the ONE commit-write job (see _wrap_side_effects)
-            n = self._commit_append(
-                batch, op="upsert", kill_ids=batch.select("id"),
-                kill_event="update",
-            )
-            return n if n is not None else 0
+            return self._commit_append(batch, op="upsert", kill_event="update")
         n, touched, _dup, bad = self._batch_stats(batch, find_dups=False)
         if bad is not None:
             raise ValueError(
@@ -1876,17 +1767,20 @@ class Collection:
             )
         if n == 0:
             return 0
-        if cur is None or not self._has_parquet(cur):
-            self._commit(batch, op="upsert")
-        else:  # legacy non-bucketed: copy-on-write rewrite migrates it
-            kept = self._bucket_rows(touched).join(
-                batch.select("id"), "id", "left_anti"
+        new = batch
+        if cur is not None and self._has_parquet(cur):
+            # legacy non-bucketed: copy-on-write rewrite migrates it
+            new = (
+                self._bucket_rows(touched)
+                .join(batch.select("id"), "id", "left_anti")
+                .unionByName(batch, allowMissingColumns=True)
             )
-            self._commit_delta(
-                kept.unionByName(batch, allowMissingColumns=True), touched,
-                op="upsert",
-            )
-        self._emit("update", batch.select("id"))
+        self._commit(
+            new, op="upsert",
+            pre_publish=lambda stage, vdir: self._emit(
+                "update", batch.select("id"), os.path.join(vdir, _EVENTS_STAGED)
+            ),
+        )
         return n
 
     def _upsert_local(self, tbl, batch: DataFrame, cur: str) -> int:
@@ -1935,20 +1829,13 @@ class Collection:
                 raise ValueError(f"duplicate id in upsert batch: {rid!r}")
             seen.add(rid)
         ids = [str(i) for i in raw_ids]
-
-        version = f"v_{uuid.uuid4().hex[:12]}"
-        vdir = os.path.join(self.path, version)
-        os.makedirs(vdir, exist_ok=True)
-        base_v = os.path.basename(cur)
+        version, vdir = self._new_version()
         seq = self._seq_next()
         tok = uuid.uuid4().hex[:8]
-
-        # new data files go straight into the pool (invisible until the
-        # manifest references them); the base snapshot's files carry
-        # forward as manifest references — zero per-file syscalls
-        data = tbl.append_column(
-            "_seq", pa.array([seq] * n, pa.int64())
-        )
+        # new data and kill files go straight into the pool (invisible
+        # until the manifest references them); the base snapshot's files
+        # carry forward as manifest references — zero per-file syscalls
+        data = tbl.append_column("_seq", pa.array([seq] * n, pa.int64()))
         bvals = data.column("_bucket").to_pylist()
         data = data.remove_column(data.schema.get_field_index("_bucket"))
         by_bucket: dict[int, list[int]] = {}
@@ -1956,55 +1843,24 @@ class Collection:
             by_bucket.setdefault(int(b), []).append(idx)
         adds: list[str] = []
         for b, idxs in sorted(by_bucket.items()):
-            dst_dir = os.path.join(self._pool_root(), f"_bucket={b}")
-            os.makedirs(dst_dir, exist_ok=True)
-            dst = os.path.join(dst_dir, f"{version}-part-local-{tok}.parquet")
-            papq.write_table(
-                data.take(pa.array(idxs, pa.int64())), dst
+            dst = os.path.join(
+                self._pool_dir(f"_bucket={b}"),
+                f"{version}-part-local-{tok}.parquet",
             )
+            papq.write_table(data.take(pa.array(idxs, pa.int64())), dst)
             adds.append(os.path.relpath(dst, self.path))
-
-        dv_dir = os.path.join(self._pool_root(), "_dv")
-        os.makedirs(dv_dir, exist_ok=True)
-        dv_dst = os.path.join(dv_dir, f"{version}-kills_{seq}_{tok}.parquet")
-        papq.write_table(
-            pa.table(
-                {
-                    "id": pa.array(ids, pa.string()),
-                    "kill_seq": pa.array([seq] * n, pa.int64()),
-                }
-            ),
-            dv_dst,
+        dv = _write_kills(
+            os.path.join(self._pool_root(), "_dv"), ids, seq,
+            prefix=f"{version}-",
         )
-        dv_adds = [os.path.relpath(dv_dst, self.path)]
-        from datetime import datetime, timezone
-
-        ev_dir = os.path.join(vdir, "_events_staged")
-        os.makedirs(ev_dir, exist_ok=True)
-        now = datetime.now(timezone.utc)
-        coll = os.path.basename(self.path)
-        papq.write_table(
-            pa.table(
-                {
-                    "event_id": pa.array(
-                        [f"{tok}-{i}" for i in ids], pa.string()
-                    ),
-                    "event_type": pa.array(["update"] * n, pa.string()),
-                    "collection": pa.array([coll] * n, pa.string()),
-                    "doc_id": pa.array(ids, pa.string()),
-                    "ts": pa.array(
-                        [now] * n, pa.timestamp("us", tz="UTC")
-                    ),
-                }
-            ),
-            os.path.join(ev_dir, f"ev_{tok}.parquet"),
+        _write_events(
+            os.path.join(vdir, _EVENTS_STAGED), ids, "update",
+            os.path.basename(self.path),
         )
-        self._write_manifest(version, base_v, adds, [], dv_adds)
-        self._prime_schema(vdir, batch, base=cur)
-        self._finish_commit(
-            version, "upsert", base=base_v, pooled=adds + dv_adds
+        self._commit_tail(
+            version, "upsert", os.path.basename(cur), adds=adds,
+            dv_adds=[os.path.relpath(dv, self.path)], written=batch,
         )
-        self._publish_staged_events(vdir)
         return n
 
     def delete(
@@ -2027,26 +1883,22 @@ class Collection:
             return  # empty collection: nothing can match (and a where
             # predicate on absent metadata columns could not resolve)
         if not verify_existing and ids and where is None and self._snapshot_bucketed():
-            # zero-job O(ids) commit: one pooled kill file + a manifest
-            # delta — no scan, no listing, no per-file metadata
-            id_list = [str(i) for i in ids]
-            version = f"v_{uuid.uuid4().hex[:12]}"
-            vdir = os.path.join(self.path, version)
-            os.makedirs(vdir, exist_ok=True)
-            self._write_kills(vdir, id_list, self._seq_next())
-            dv_adds = self._pool_dv(vdir, version)
-            self._write_manifest(
-                version, os.path.basename(cur_p), [], [], dv_adds
+            # zero-job O(ids) commit: one pooled kill file, staged CDC
+            # events and a manifest delta — no scan, no listing, no
+            # per-file metadata
+            version, vdir = self._new_version()
+            dv = _write_kills(
+                os.path.join(self._pool_root(), "_dv"), ids,
+                self._seq_next(), prefix=f"{version}-",
             )
-            if cur_p in self._schema_cache:
-                self._schema_cache[vdir] = self._schema_cache[cur_p]
-            self._finish_commit(
-                version,
-                op="delete",
-                base=os.path.basename(cur_p),
-                pooled=dv_adds,
+            _write_events(
+                os.path.join(vdir, _EVENTS_STAGED), ids, "delete",
+                os.path.basename(self.path),
             )
-            self._emit_ids("delete", id_list)
+            self._commit_tail(
+                version, "delete", os.path.basename(cur_p),
+                dv_adds=[os.path.relpath(dv, self.path)],
+            )
             return
         cond = None
         if ids is not None:
@@ -2070,8 +1922,12 @@ class Collection:
             kept = self._bucket_rows(touched).filter(
                 ~F.coalesce(cond, F.lit(False))
             )
-            self._commit_delta(kept, touched, op="delete")
-            self._emit("delete", doomed)
+            self._commit(
+                kept, op="delete",
+                pre_publish=lambda stage, vdir: self._emit(
+                    "delete", doomed, os.path.join(vdir, _EVENTS_STAGED)
+                ),
+            )
             return
         # deletion-vector delete: ONE job — the doomed-id scan's tasks
         # write the kill + CDC event files as they match (existence is
@@ -2205,7 +2061,7 @@ class Collection:
                     # batches) are not live data — same exclusion as
                     # _has_parquet
                     _dirs[:] = [
-                        d for d in _dirs if d not in ("_dv", "_events_staged")
+                        d for d in _dirs if d not in ("_dv", _EVENTS_STAGED)
                     ]
                     seg = os.path.basename(root)
                     bucket = (
@@ -2414,6 +2270,11 @@ class Collection:
         if where is not None:
             f = from_dict(where) if isinstance(where, dict) else where
             pre = f.col()
+        # imported here, not at module top: executor-side commit tasks
+        # import this module for _write_kills/_write_events, and the
+        # kNN operator would pull pandas into every plain RDD worker
+        from fastpyvectordb_spark.operators.knn import knn as knn_op
+
         return knn_op(
             self.df(), query_vec, k=k, metric=self.config.metric,
             pre_filter=pre, id_col="id", vec_col="embedding",
@@ -3034,8 +2895,6 @@ class VectorDB:
         )
 
     def delete_collection(self, name: str) -> None:
-        import shutil
-
         self._handles.pop(name, None)
         p = self._cpath(name)
         if os.path.exists(p):

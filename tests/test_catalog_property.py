@@ -9,7 +9,9 @@ through the round-6 incremental delta path whenever the shape allows
 the manifest-chain + deletion-vector + incremental-pack interaction
 (checkpoint folds, DV compaction, restore forks, vacuum GC): any
 divergence a hand-written scenario missed shows up as a shrunk op
-sequence."""
+sequence. A ``crash`` step kills a random DML verb before a random
+mutating step (tests/conftest.py ``crash_injected``), reopens the
+collection, and the model follows wherever the pointer landed."""
 
 from __future__ import annotations
 
@@ -26,6 +28,7 @@ POOL = [f"id{chr(c)}" for c in range(ord("a"), ord("p"))]  # 15 ids
 KINDS = [
     "insert", "upsert", "delete", "optimize", "restore", "vacuum",
     "optimize_ann",  # at-rest ANN clustering (round 6): content-preserving
+    "crash",  # a DML verb dies mid-commit; the reopened handle carries on
 ]
 
 ops_strategy = st.lists(
@@ -59,13 +62,12 @@ def _table_state(c):
 )
 @given(ops=ops_strategy)
 @pytest.mark.slow
-def test_dml_state_machine_matches_model(spark, ops):
+def test_dml_state_machine_matches_model(spark, crash_injected, ops):
     from fastpyvectordb_spark.catalog import Collection, CollectionConfig
 
     path = tempfile.mkdtemp() + f"/sm{uuid.uuid4().hex[:8]}"
-    c = Collection(
-        spark, path, CollectionConfig(dimensions=4, n_buckets=4)
-    )
+    cfg = CollectionConfig(dimensions=4, n_buckets=4)
+    c = Collection(spark, path, cfg)
 
     def batch(rows):
         return spark.createDataFrame(
@@ -80,28 +82,48 @@ def test_dml_state_machine_matches_model(spark, ops):
     c.insert_batch(batch(sorted(model.items())))
     snapshots = {c.history()[-1]["version"]: dict(model)}
 
-    for kind, seed in ops:
-        rng = random.Random(seed)
-        if kind == "insert":
+    def dml(verb, rng):
+        """(run, model after it) for one random DML op, or None."""
+        if verb == "insert":
             free = sorted(set(POOL) - set(model))
             if not free:
-                continue
+                return None
             ids = rng.sample(free, rng.randint(1, min(3, len(free))))
             rows = [(i, _vec(rng)) for i in sorted(ids)]
-            c.insert_batch(batch(rows))
-            model.update(rows)
-        elif kind == "upsert":
+            return (lambda: c.insert_batch(batch(rows))), {**model, **dict(rows)}
+        if verb == "upsert":
             ids = rng.sample(POOL, rng.randint(1, 3))
             rows = [(i, _vec(rng)) for i in sorted(set(ids))]
-            c.upsert(batch(rows))
-            model.update(rows)
-        elif kind == "delete":
-            if not model:
+            return (lambda: c.upsert(batch(rows))), {**model, **dict(rows)}
+        if not model:
+            return None
+        ids = rng.sample(sorted(model), rng.randint(1, min(3, len(model))))
+        return (
+            (lambda: c.delete(ids=ids)),
+            {i: v for i, v in model.items() if i not in ids},
+        )
+
+    for kind, seed in ops:
+        rng = random.Random(seed)
+        if kind in ("insert", "upsert", "delete"):
+            op = dml(kind, rng)
+            if op is None:
                 continue
-            ids = rng.sample(sorted(model), rng.randint(1, min(3, len(model))))
-            c.delete(ids=ids)
-            for i in ids:
-                model.pop(i)
+            op[0]()
+            model = op[1]
+        elif kind == "crash":
+            op = dml(rng.choice(["insert", "upsert", "delete"]), rng)
+            if op is None:
+                continue
+            before = c._current_version()
+            with crash_injected(c.path, crash_at=rng.randint(1, 15)):
+                try:
+                    op[0]()
+                except crash_injected.Crash:
+                    pass
+            c = Collection(spark, path, cfg)  # the process restarts
+            if c._current_version() != before:
+                model = op[1]
         elif kind == "optimize":
             c.optimize()
         elif kind == "optimize_ann":
@@ -136,7 +158,7 @@ def test_dml_state_machine_matches_model(spark, ops):
             }
         if kind in (
             "insert", "upsert", "delete", "optimize", "restore",
-            "optimize_ann",
+            "optimize_ann", "crash",
         ):
             snapshots[c.history()[-1]["version"]] = dict(model)
 
@@ -154,7 +176,7 @@ def test_dml_state_machine_matches_model(spark, ops):
             )
 
     # final: the incrementally-maintained pack equals a cold rebuild
-    fresh = Collection(spark, path, CollectionConfig(dimensions=4, n_buckets=4))
+    fresh = Collection(spark, path, cfg)
     fp = fresh.pack_serving()
     ip = c.pack_serving()
     assert list(ip["ids"]) == list(fp["ids"])
