@@ -6,12 +6,12 @@ parquet table ``(id STRING, embedding ARRAY<FLOAT>, …metadata cols)``
 plus ``config.json`` (dimensions/metric — the schema contract the
 reference persists at ``vectordb_optimized.py:322-331``).
 
-DML strategy: parquet has no MERGE, so upsert/delete rewrite via
-anti-join — the same logical plan a Delta MERGE executes; on a Delta
-lakehouse these methods map 1:1 to ``MERGE INTO``/``DELETE`` with the
-rewrite confined to matched files. Mutations write to a new version
-and flip a pointer file, so readers never see partial state
-(poor-man's snapshot isolation; Delta's transaction log in prod).
+DML strategy: parquet has no MERGE, so upsert/delete write deletion
+vectors plus appended rows, and optimize rewrites — the same logical
+plans a Delta MERGE/DELETE executes. A mutation becomes visible in one
+step: the exclusive create of the next ``_log/<seq>.json`` entry
+(Delta's transaction log), so readers never see partial state and two
+writers can never both land the same commit.
 
 Commit metadata is MANIFEST-based (Delta/Iceberg actions-log shape):
 immutable data files live once in a shared ``_files/_bucket=N/`` pool;
@@ -40,14 +40,14 @@ from pyspark.sql import functions as F
 
 from fastpyvectordb_spark.filters import Filter, from_dict
 
-_POINTER = "_current"
+_LOG = "_log"  # commit log: entry <seq:020d>.json names each version
 _FILES = "_files"  # shared immutable data-file pool (manifest layout)
 _CHECKPOINT_EVERY = 16  # delta-chain depth before a full checkpoint
 _DV_COMPACT_AT = 64  # fold deletion vectors into one file past this
 
 class CommitConflictError(RuntimeError):
     """Another writer committed between this op's snapshot read and
-    its pointer flip (optimistic concurrency). Re-read and retry."""
+    its log entry (optimistic concurrency). Re-read and retry."""
 
 
 # Parquet bloom filters on the id column: point lookups (get /
@@ -69,8 +69,8 @@ _BLOOM_OPTS = {
 # takes over — at 20k rows the collect is ~10 MB, safely bounded.
 _LOCAL_DML_MAX_ROWS = 20_000
 
-# A version's CDC event files wait here until its commit has flipped the
-# pointer; the commit tail (or a later roll-forward) then publishes them.
+# A version's CDC event files wait here until its commit is logged; the
+# commit tail (or a later roll-forward) then publishes them.
 _EVENTS_STAGED = "_events_staged"
 
 
@@ -228,7 +228,7 @@ class Collection:
         self.spark = spark
         self.path = path
         self.config = config
-        # version-dir → merged read schema. mergeSchema=true opens every
+        # version → merged read schema. mergeSchema=true opens every
         # file footer on the driver at plan time; a snapshot's merged
         # schema never changes after commit, so pay that once per
         # version (and prime it at commit time, where the writer already
@@ -238,8 +238,8 @@ class Collection:
         # immutable after commit (vacuum invalidates), so folding a
         # manifest delta chain happens once per version per handle.
         self._mf_cache: dict[str, tuple[list[str], list[str]]] = {}
-        # legacy version → pooled lists after a one-time migration link
-        self._mig_cache: dict[str, tuple[list[str], list[str]]] = {}
+        # log entries are immutable: each is parsed once per handle
+        self._entries: dict[int, dict] = {}
         os.makedirs(path, exist_ok=True)
         cfg = os.path.join(path, "config.json")
         if not os.path.exists(cfg):
@@ -250,33 +250,158 @@ class Collection:
             with open(tmp, "w") as f:
                 f.write(config.to_json())
             os.rename(tmp, cfg)
+        self._tail = self._scan_tail()
+        self._migrate()
         self._roll_forward()
 
-    # -- storage ------------------------------------------------------
+    # -- the commit log -----------------------------------------------
+    #
+    # ``_log/<seq:020d>.json`` holds one immutable ``{version, op, ts}``
+    # entry per commit, seq 1, 2, … with no gaps. The newest entry names
+    # the current version; a commit is the put-if-absent of entry
+    # base_seq + 1 (:meth:`_put_entry`), so the seq is also the commit
+    # id and the ``_seq`` / ``kill_seq`` stamp of the commit's rows and
+    # kills.
+
+    def _log_path(self, seq: int) -> str:
+        return os.path.join(self.path, _LOG, f"{seq:020d}.json")
+
+    def _read_entry(self, seq: int) -> dict:
+        e = self._entries.get(seq)
+        if e is None:
+            with open(self._log_path(seq)) as f:
+                e = json.load(f)
+            self._entries[seq] = e
+        return e
+
+    def _scan_tail(self) -> tuple[int, str | None]:
+        """Newest entry by one listing of ``_log/`` (a fresh handle)."""
+        try:
+            names = os.listdir(os.path.join(self.path, _LOG))
+        except FileNotFoundError:
+            return 0, None
+        seqs = [
+            int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()
+        ]
+        if not seqs:
+            return 0, None
+        seq = max(seqs)
+        return seq, self._read_entry(seq)["version"]
+
+    def _log_tail(self) -> tuple[int, str | None]:
+        """``(seq, version)`` of the newest commit, ``(0, None)`` for an
+        empty collection: the cached tail advanced while the next entry
+        exists — one failing ``stat`` when nothing was committed since.
+        The cache is only where the walk starts, and any logged entry is
+        a valid start, so threads of one handle need no lock for it."""
+        seq, version = self._tail
+        while os.path.exists(self._log_path(seq + 1)):
+            seq += 1
+            version = self._read_entry(seq)["version"]
+        self._tail = (seq, version)
+        return seq, version
+
+    def _put_entry(self, seq: int, entry: dict) -> bool:
+        """Put-if-absent of log entry ``seq``: write a temp file, then
+        hard-link it to the entry's name, which fails if that name
+        exists. False when another commit already holds ``seq``."""
+        d = os.path.join(self.path, _LOG)
+        os.makedirs(d, exist_ok=True)
+        tmp = os.path.join(d, f".{uuid.uuid4().hex[:12]}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(entry, f)
+        try:
+            os.link(tmp, self._log_path(seq))
+        except FileExistsError:
+            return False
+        finally:
+            os.unlink(tmp)
+        self._entries[seq] = entry
+        self._tail = (seq, entry["version"])
+        return True
 
     def _current_version(self) -> str | None:
-        p = os.path.join(self.path, _POINTER)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return f.read().strip() or None
+        return self._log_tail()[1]
 
-    def _flip_pointer(self, version: str) -> None:
-        """Atomically repoint the collection: write-temp + rename.
-        ``open(p, "w")`` would TRUNCATE in place — a concurrent reader
-        (or a crash) between truncate and write sees an EMPTY pointer,
-        i.e. a perfectly healthy collection transiently reads as
-        nonexistent (caught live by the round-6 HTTP hammer: searches
-        under sustained DML intermittently returned nothing)."""
-        p = os.path.join(self.path, _POINTER)
-        tmp = p + f".{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as f:
-            f.write(version)
-        os.rename(tmp, p)
+    def _has_rows(self, version: str | None) -> bool:
+        """Whether ``version`` names a snapshot with any data file."""
+        return version is not None and bool(self._resolve(version)[0])
 
-    def _data_path(self) -> str | None:
-        v = self._current_version()
-        return os.path.join(self.path, v) if v else None
+    def _migrate(self) -> None:
+        """One-time conversion of a collection written before the log
+        (a ``_current`` pointer file, a ``_versions`` history file,
+        version dirs without a manifest). Idempotent, and every step is
+        crash-safe, so a reopen redoes whatever a crash left undone:
+
+        1. log entries 1..n from the ``_versions`` lines, plus one
+           ``roll_forward`` entry when the pointer names an unlogged
+           version (a crash between the old flip and its log line);
+        2. a checkpoint manifest over pooled files for each logged
+           version dir that has none — bucketed files are hard-linked
+           into the pool, a pre-bucketing snapshot is rewritten into it
+           by one Spark job — so time travel to every old version works;
+        3. the legacy files are unlinked, last."""
+        import time
+
+        pointer = os.path.join(self.path, "_current")
+        lines = os.path.join(self.path, "_versions")
+        legacy = [pointer, lines, os.path.join(self.path, "_commit.lock")]
+        if not any(os.path.exists(p) for p in legacy):
+            return
+        hist: list[dict] = []
+        if os.path.exists(lines):
+            with open(lines) as f:
+                hist = [json.loads(ln) for ln in f if ln.strip()]
+        cur = None
+        if os.path.exists(pointer):
+            with open(pointer) as f:
+                cur = f.read().strip() or None
+        if cur is not None and (not hist or hist[-1]["version"] != cur):
+            hist.append({"version": cur, "op": "roll_forward", "ts": time.time()})
+        for seq, entry in enumerate(hist, 1):
+            self._put_entry(seq, entry)
+        for v in dict.fromkeys(h["version"] for h in hist):
+            if os.path.isdir(os.path.join(self.path, v)) and not os.path.exists(
+                self._manifest_file(v)
+            ):
+                self._checkpoint_legacy(v)
+        for p in legacy:
+            try:
+                os.unlink(p)
+            except FileNotFoundError:
+                pass
+
+    def _checkpoint_legacy(self, version: str) -> None:
+        """Migration step 2 for one pre-manifest version dir. Pool names
+        carry the ``{version}-`` prefix, so vacuum's GC owns them, and
+        hard links keep their names on a rerun."""
+        vdir = os.path.join(self.path, version)
+        dv = self._pool_move(os.path.join(vdir, "_dv"), "_dv", version, link=True)
+        subs = sorted(e for e in os.listdir(vdir) if e.startswith("_bucket="))
+        src = vdir
+        if not subs and any(f.endswith(".parquet") for f in os.listdir(vdir)):
+            # pre-bucketing snapshot: rewrite it with its _bucket column
+            # (a failure leaves the legacy dir untouched, unlike _abort)
+            src = self._stage_dir(version)
+            df = self.spark.read.option("mergeSchema", "true").parquet(vdir)
+            df.withColumn("_bucket", self._bucket()).repartition(
+                self.config.n_buckets, "_bucket"
+            ).write.options(**_BLOOM_OPTS).mode("overwrite").partitionBy(
+                "_bucket"
+            ).parquet(src)
+            subs = sorted(e for e in os.listdir(src) if e.startswith("_bucket="))
+        files = [
+            f
+            for sub in subs
+            for f in self._pool_move(
+                os.path.join(src, sub), sub, version, link=src == vdir
+            )
+        ]
+        self._put_manifest(
+            version, {"kind": "checkpoint", "depth": 0, "files": files, "dv": dv}
+        )
+        if src != vdir:
+            shutil.rmtree(src, ignore_errors=True)
 
     # -- manifest layer (Delta/Iceberg actions-log snapshots) ----------
     #
@@ -292,34 +417,33 @@ class Collection:
         return os.path.join(self.path, version, "manifest.json")
 
     def _load_manifest(self, version: str) -> dict | None:
-        p = self._manifest_file(version)
-        if not os.path.exists(p):
+        try:
+            with open(self._manifest_file(version)) as f:
+                return json.load(f)
+        except FileNotFoundError:
             return None
-        with open(p) as f:
-            return json.load(f)
+
+    def _put_manifest(self, version: str, m: dict) -> None:
+        """Write ``<version>/manifest.json`` atomically (tmp + rename)."""
+        vdir = os.path.join(self.path, version)
+        os.makedirs(vdir, exist_ok=True)
+        tmp = os.path.join(vdir, f".manifest.{uuid.uuid4().hex[:8]}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(m, f)
+        os.rename(tmp, self._manifest_file(version))
 
     def _resolve(self, version: str) -> tuple[list[str], list[str]]:
         """``(data_files, dv_files)`` of a version as collection-path-
         relative paths, folding the manifest delta chain from the
-        nearest checkpoint. Legacy (pre-manifest) version dirs resolve
-        by walking the dir itself — they stay self-contained."""
+        nearest checkpoint. Raises ``FileNotFoundError`` for a version
+        without a manifest (vacuumed)."""
         cached = self._mf_cache.get(version)
         if cached is not None:
             return cached
         m = self._load_manifest(version)
         if m is None:
-            vdir = os.path.join(self.path, version)
-            files: list[str] = []
-            dv: list[str] = []
-            for root, dirs, fns in os.walk(vdir):
-                dirs[:] = [d for d in dirs if d != _EVENTS_STAGED]
-                rel = os.path.relpath(root, self.path)
-                sink = dv if os.path.basename(root) == "_dv" else files
-                for fn in fns:
-                    if fn.endswith(".parquet"):
-                        sink.append(os.path.join(rel, fn))
-            out = (sorted(files), sorted(dv))
-        elif m["kind"] == "checkpoint":
+            raise FileNotFoundError(f"no manifest for version {version}")
+        if m["kind"] == "checkpoint":
             out = (list(m["files"]), list(m["dv"]))
         else:
             bf, bdv = self._resolve(m["base"])
@@ -350,10 +474,14 @@ class Collection:
         os.makedirs(d, exist_ok=True)
         return d
 
-    def _pool_move(self, src: str, sub: str, version: str) -> list[str]:
-        """Rename ``src``'s parquet files into pool dir ``sub`` under
-        ``{version}-``-prefixed unique names (same-filesystem renames,
-        O(new files)); return their collection-relative paths."""
+    def _pool_move(
+        self, src: str, sub: str, version: str, link: bool = False
+    ) -> list[str]:
+        """Rename (or, with ``link``, hard-link: the migration keeps the
+        legacy dir readable) ``src``'s parquet files into pool dir
+        ``sub`` under ``{version}-``-prefixed names (same-filesystem
+        calls, O(new files)); return their collection-relative paths.
+        A link whose name already exists is a rerun's: kept."""
         try:
             names = sorted(os.listdir(src))
         except FileNotFoundError:
@@ -363,42 +491,12 @@ class Collection:
         for fn in names:
             if fn.endswith(".parquet"):
                 dst = os.path.join(dstd, f"{version}-{fn}")
-                os.rename(os.path.join(src, fn), dst)
+                try:
+                    (os.link if link else os.rename)(os.path.join(src, fn), dst)
+                except FileExistsError:
+                    pass
                 out.append(os.path.relpath(dst, self.path))
         return out
-
-    def _base_state(self, base_version: str | None) -> tuple[list[str], list[str]]:
-        """Pooled ``(files, dv)`` of a commit's base snapshot. A legacy
-        (pre-manifest) bucketed version is migrated into the pool ONCE
-        via hard links — O(files) paid a single time, after which every
-        commit is O(changed files)."""
-        if base_version is None:
-            return [], []
-        if self._load_manifest(base_version) is not None:
-            return self._resolve(base_version)
-        cached = self._mig_cache.get(base_version)
-        if cached is not None:
-            return cached
-        files, dv = self._resolve(base_version)
-        tok = f"mig{uuid.uuid4().hex[:8]}"
-
-        def link(rels, sub_of):
-            out = []
-            for rel in rels:
-                dst = os.path.join(
-                    self._pool_dir(sub_of(rel)),
-                    f"{tok}-{os.path.basename(rel)}",
-                )
-                os.link(os.path.join(self.path, rel), dst)
-                out.append(os.path.relpath(dst, self.path))
-            return out
-
-        pooled = (
-            link(files, lambda rel: f"_bucket={self._bucket_of_path(rel)}"),
-            link(dv, lambda rel: "_dv"),
-        )
-        self._mig_cache[base_version] = pooled
-        return pooled
 
     def _compact_dv(self, dv: list[str], version: str) -> list[str]:
         """Fold accumulated kill files into one (tiny id lists — a
@@ -426,29 +524,26 @@ class Collection:
         dv_adds: list[str],
     ) -> None:
         """Record the new version: a delta against its base, or a full
-        checkpoint every ``_CHECKPOINT_EVERY`` commits / on legacy
-        migration / when the DV set needs compaction. The manifest is
-        written atomically (tmp + rename) inside the version dir. No
-        commit removes files from its base (a rewrite is a checkpoint
-        with ``base_version=None``), so ``removes`` is always empty."""
-        vdir = os.path.join(self.path, version)
-        os.makedirs(vdir, exist_ok=True)
-        bm = self._load_manifest(base_version) if base_version else None
+        checkpoint every ``_CHECKPOINT_EVERY`` commits / when the DV set
+        needs compaction. No commit removes files from its base (a
+        rewrite is a checkpoint with ``base_version=None``), so
+        ``removes`` is always empty."""
         if base_version is None:
             m = {"kind": "checkpoint", "depth": 0, "files": adds, "dv": dv_adds}
             resolved = (list(adds), list(dv_adds))
         else:
-            bf, bdv = self._base_state(base_version)
+            bf, bdv = self._resolve(base_version)
             files = list(bf) + adds
             dv = list(bdv) + dv_adds
             compact = len(dv) > _DV_COMPACT_AT
             if compact:
                 dv = self._compact_dv(dv, version)
-            if bm is not None and bm["depth"] + 1 < _CHECKPOINT_EVERY and not compact:
+            depth = self._load_manifest(base_version)["depth"] + 1
+            if depth < _CHECKPOINT_EVERY and not compact:
                 m = {
                     "kind": "delta",
                     "base": base_version,
-                    "depth": bm["depth"] + 1,
+                    "depth": depth,
                     "adds": adds,
                     "removes": [],
                     "dv_adds": dv_adds,
@@ -457,42 +552,35 @@ class Collection:
             else:
                 m = {"kind": "checkpoint", "depth": 0, "files": files, "dv": dv}
             resolved = (files, dv)
-        tmp = os.path.join(vdir, f".manifest.{uuid.uuid4().hex[:8]}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.rename(tmp, self._manifest_file(version))
+        self._put_manifest(version, m)
         self._mf_cache[version] = resolved
 
     def df(self, version: str | None = None) -> DataFrame:
         """The collection as a DataFrame (S1). ``version`` time-travels
-        to any committed snapshot (Delta ``VERSION AS OF``; every commit
-        is a full immutable version dir, so old snapshots stay
-        readable until vacuumed)."""
+        to any committed snapshot (Delta ``VERSION AS OF``; every
+        version keeps its manifest and pooled files until vacuumed)."""
         return self._df_live(version)
+
+    def _empty_df(self) -> DataFrame:
+        return self.spark.createDataFrame([], "id string, embedding array<float>")
 
     def _df_live(
         self, version: str | None = None, keep_seq: bool = False
     ) -> DataFrame:
-        p = (
-            os.path.join(self.path, version)
-            if version is not None
-            else self._data_path()
-        )
-        # no committed data — or a snapshot whose every row was deleted
-        # (partitionBy of an empty DF writes no files and the read can't
-        # infer a schema). A MISSING dir (vacuumed version) still
-        # raises via the parquet read below.
-        if p is None or (os.path.isdir(p) and not self._has_parquet(p)):
-            return self.spark.createDataFrame(
-                [], f"id string, embedding array<float>"
-            )
+        if version is None:
+            version = self._current_version()
+        # no committed data — or a snapshot with no data file (an
+        # optimize of an all-deleted collection writes none, and the
+        # read can't infer a schema). A vacuumed version raises here.
+        if not self._has_rows(version):
+            return self._empty_df()
         # mergeSchema: delta commits can leave per-bucket schema drift
         # (a new metadata column exists only in rewritten buckets);
         # missing columns read as NULL — exactly the F7 contract.
         # _ann_list is the optimize(ann_cluster) stats column — internal
         # like _seq, never user-visible
         return self._apply_dv(
-            self._read_snapshot(p), p, keep_seq=keep_seq
+            self._read_snapshot(version), version, keep_seq=keep_seq
         ).drop("_bucket", "_ann_list")
 
     def _df_live_files(
@@ -502,58 +590,48 @@ class Collection:
         the ANN fallback's file-skipping scan (footer stats prune the
         list first; kills still apply globally, and ``_ann_list`` stays
         readable for the pushed probe filter)."""
+        return self._apply_dv(
+            self._read_snapshot(version, files), version
+        ).drop("_bucket")
+
+    def _read_snapshot(
+        self, version: str, files: list[str] | None = None
+    ) -> DataFrame:
+        """Scan a version's resolved file list (or the subset ``files``)
+        with its merged schema. ``basePath`` points at the pool root, so
+        ``_bucket`` stays a partition column and bucket-pruned reads
+        plan against the manifest's file set — no filesystem listing.
+        The schema comes from the per-version cache when possible (an
+        explicit ``.schema(...)`` read skips the driver-side footer
+        sweep that ``mergeSchema=true`` does on every call; files
+        missing a cached column read it as NULL, same as mergeSchema)."""
+        whole = files is None
+        if whole:
+            files = self._resolve(version)[0]
         paths = [os.path.join(self.path, f) for f in files]
-        p = os.path.join(self.path, version)
-        cached = self._schema_cache.get(p)
         rd = self.spark.read.option("basePath", self._pool_root())
-        df = (
-            rd.schema(cached).parquet(*paths)
-            if cached is not None
-            else rd.option("mergeSchema", "true").parquet(*paths)
-        )
-        return self._apply_dv(df, p).drop("_bucket")
-
-    def _read_snapshot(self, p: str) -> DataFrame:
-        """Read a snapshot with its merged schema, resolving that
-        schema from the per-version cache when possible (an explicit
-        ``.schema(...)`` read skips the driver-side footer sweep that
-        ``mergeSchema=true`` does on every call; files missing a cached
-        column read it as NULL, same as mergeSchema).
-
-        Manifest versions scan their resolved explicit file list with
-        ``basePath`` pointing at the pool root, so ``_bucket`` stays a
-        partition column and bucket-pruned reads plan against the
-        manifest's file set — no filesystem listing at all."""
-        version = os.path.basename(p)
-        cached = self._schema_cache.get(p)
-        if self._load_manifest(version) is not None:
-            files, _ = self._resolve(version)
-            paths = [os.path.join(self.path, f) for f in files]
-            rd = self.spark.read.option("basePath", self._pool_root())
-            if cached is not None:
-                return rd.schema(cached).parquet(*paths)
-            df = rd.option("mergeSchema", "true").parquet(*paths)
-            self._schema_cache[p] = df.schema
-            return df
+        cached = self._schema_cache.get(version)
         if cached is not None:
-            return self.spark.read.schema(cached).parquet(p)
-        df = self.spark.read.option("mergeSchema", "true").parquet(p)
-        self._schema_cache[p] = df.schema
+            return rd.schema(cached).parquet(*paths)
+        df = rd.option("mergeSchema", "true").parquet(*paths)
+        if whole:
+            self._schema_cache[version] = df.schema
         return df
 
-    def _prime_schema(self, vdir: str, written: DataFrame, base: str | None) -> None:
+    def _prime_schema(
+        self, version: str, written: DataFrame, base: str | None
+    ) -> None:
         """Record a just-committed version's merged schema: columns of
-        the written delta plus any columns that exist only in carried-
-        over (hard-linked) buckets of the base snapshot. On any type
-        conflict, leave uncached — the first read falls back to
-        mergeSchema."""
+        the written delta plus any columns that exist only in the
+        carried-over files of the base snapshot. On any type conflict,
+        leave uncached — the first read falls back to mergeSchema."""
         from pyspark.sql.types import IntegerType, StructField, StructType
 
         fields = {f.name: f for f in written.schema.fields}
         if "_bucket" not in fields:
             fields["_bucket"] = StructField("_bucket", IntegerType())
-        base_schema = self._schema_cache.get(base) if base else None
         if base:
+            base_schema = self._schema_cache.get(base)
             if base_schema is None:
                 return  # base merged schema unknown: don't guess
             for f in base_schema.fields:
@@ -562,23 +640,7 @@ class Collection:
                     fields[f.name] = f
                 elif prev.dataType != f.dataType:
                     return
-        self._schema_cache[vdir] = StructType(list(fields.values()))
-
-    def _has_parquet(self, p: str) -> bool:
-        """Any live DATA file in the snapshot at ``p`` — a manifest
-        lookup for manifest versions, an early-exit walk for legacy
-        dirs. Deletion-vector files are metadata, not data — a snapshot
-        whose every row was deleted must read as empty."""
-        if not os.path.isdir(p):
-            return False
-        version = os.path.basename(p)
-        if self._load_manifest(version) is not None:
-            return bool(self._resolve(version)[0])
-        for root, dirs, files in os.walk(p):
-            dirs[:] = [d for d in dirs if d != "_dv"]
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        self._schema_cache[version] = StructType(list(fields.values()))
 
     # -- deletion vectors (Delta DV / Hudi MOR mechanics) -------------
     #
@@ -591,32 +653,11 @@ class Collection:
     # keeps a row iff no kill exists or row._seq >= kill_seq. DV files
     # live in the pool's ``_dv`` dir, carried forward from version to
     # version as manifest references, and vanish on any full rewrite
-    # (optimize / legacy migrate), which is the compaction that folds
-    # them in.
-
-    def _seq_next(self) -> int:
-        return len(self.history()) + 1
-
-    def _dv_paths(self, p: str) -> list[str]:
-        """Absolute paths of the snapshot's deletion-vector files —
-        from the manifest for manifest versions, from ``<p>/_dv`` for
-        legacy dirs."""
-        version = os.path.basename(p)
-        if self._load_manifest(version) is not None:
-            return [
-                os.path.join(self.path, f) for f in self._resolve(version)[1]
-            ]
-        dvp = os.path.join(p, "_dv")
-        if not os.path.isdir(dvp):
-            return []
-        return [
-            os.path.join(dvp, f)
-            for f in sorted(os.listdir(dvp))
-            if f.endswith(".parquet")
-        ]
+    # (optimize), which is the compaction that folds them in. A kill's
+    # seq is its commit's log seq, so it orders against every ``_seq``.
 
     def _apply_dv(
-        self, df: DataFrame, p: str, keep_seq: bool = False
+        self, df: DataFrame, version: str, keep_seq: bool = False
     ) -> DataFrame:
         """Suppress killed rows: keep a row iff it has no kill entry or
         was (re)written at/after the kill. The DV side is tiny relative
@@ -624,7 +665,7 @@ class Collection:
         ``keep_seq`` retains the ``_seq`` commit stamp (internal
         consumers — the serving pack needs it to apply later kills
         incrementally)."""
-        dv_paths = self._dv_paths(p)
+        dv_paths = [os.path.join(self.path, f) for f in self._resolve(version)[1]]
         if not dv_paths:
             return df if keep_seq else df.drop("_seq")
         dv = (
@@ -647,65 +688,18 @@ class Collection:
         col = F.col("id") if id_col is None else id_col
         return F.pmod(F.xxhash64(col), F.lit(self.config.n_buckets))
 
-    def _commit_lock(self, timeout: float = 30.0, stale: float = 300.0):
-        """Exclusive pointer-flip lock (``O_CREAT|O_EXCL`` — atomic on
-        POSIX and NFS v3+). Held only for the check-and-flip, never for
-        data writes, so writers still build snapshots fully in
-        parallel. A lock older than ``stale`` seconds is treated as
-        left by a dead writer and broken."""
-        import contextlib
-        import time
-
-        lockp = os.path.join(self.path, "_commit.lock")
-
-        @contextlib.contextmanager
-        def _held():
-            start = time.time()
-            while True:
-                try:
-                    fd = os.open(lockp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                    os.write(fd, str(os.getpid()).encode())
-                    os.close(fd)
-                    break
-                except FileExistsError:
-                    try:
-                        if time.time() - os.path.getmtime(lockp) > stale:
-                            # break via atomic rename, not unlink: with
-                            # a bare unlink two waiters can both pass
-                            # the staleness check and the second one
-                            # deletes the FIRST waiter's fresh lock —
-                            # two writers inside the flip. rename makes
-                            # exactly one breaker win; losers loop.
-                            broken = f"{lockp}.broken.{uuid.uuid4().hex[:8]}"
-                            os.rename(lockp, broken)
-                            os.unlink(broken)
-                            continue
-                    except OSError:
-                        continue  # holder released between stat calls
-                    if time.time() - start > timeout:
-                        raise TimeoutError(
-                            f"commit lock busy for {timeout}s: {lockp}"
-                        )
-                    time.sleep(0.05)
-            try:
-                yield
-            finally:
-                try:
-                    os.unlink(lockp)
-                except OSError:
-                    pass
-
-        return _held()
-
     # -- the commit protocol ------------------------------------------
     #
-    # Every pointer move ends in ONE tail, :meth:`_commit_tail`:
+    # Every commit reads the log tail ONCE: its base version and its seq
+    # (base_seq + 1) come from that one read. Every commit then ends in
+    # one tail, :meth:`_commit_tail`:
     #   1. gate     optional pre-publish check of the staged bytes;
     #   2. pool     staged data files and kill files move into ``_files``;
     #   3. manifest ``<version>/manifest.json`` (tmp + rename);
     #   4. schema   prime or carry the version's merged read schema;
-    #   5. flip     OCC check, pointer flip and ``_versions`` append under
-    #               the commit lock (:meth:`_finish_commit`);
+    #   5. log      put-if-absent of ``_log/<base_seq + 1>.json``
+    #               (:meth:`_finish_commit`); a taken name is the
+    #               optimistic-concurrency conflict;
     #   6. publish  staged CDC events move into ``_events``.
     # Verbs differ only in what they stage first: Spark writes into
     # ``_stage/<version>``, driver-side pyarrow files straight into the
@@ -754,7 +748,7 @@ class Collection:
         self,
         version: str,
         op: str,
-        base: str | None,
+        tail: tuple[int, str | None],
         *,
         stage: str | None = None,
         adds: Sequence[str] = (),
@@ -763,15 +757,17 @@ class Collection:
         rewrite: bool = False,
         gate=None,
     ) -> None:
-        """Commit ``version`` on top of ``base`` (steps 1-6 above).
+        """Commit ``version`` on top of the log ``tail`` it was built
+        from (steps 1-6 above).
 
         ``stage`` is the version's Spark stage dir; ``adds``/``dv_adds``
         are files the caller already wrote into the pool. ``written`` is
         the DataFrame whose schema the new files carry (None: the schema
         is the base's). ``rewrite`` marks a full snapshot rewrite: the
-        manifest is a fresh checkpoint, though ``base`` still guards the
-        flip. ``gate(stage, vdir)`` may raise to abort before anything
-        is pooled or pointed at."""
+        manifest is a fresh checkpoint, though ``tail`` still guards the
+        log entry. ``gate(stage, vdir)`` may raise to abort before
+        anything is pooled or logged."""
+        base = tail[1]
         vdir = os.path.join(self.path, version)
         if gate is not None:
             try:
@@ -793,67 +789,56 @@ class Collection:
             shutil.rmtree(dv_src, ignore_errors=True)
         dv_adds = list(dv_adds) + moved
         self._write_manifest(version, None if rewrite else base, adds, dv_adds)
-        base_p = os.path.join(self.path, base) if base else None
         if written is not None:
-            self._prime_schema(vdir, written, base=None if rewrite else base_p)
-        elif base_p in self._schema_cache:
-            self._schema_cache[vdir] = self._schema_cache[base_p]
-        self._finish_commit(version, op, base=base, pooled=adds + dv_adds)
+            self._prime_schema(version, written, base=None if rewrite else base)
+        elif base in self._schema_cache:
+            self._schema_cache[version] = self._schema_cache[base]
+        self._finish_commit(version, op, tail, pooled=adds + dv_adds)
         self._publish_staged_events(vdir)
 
     def _finish_commit(
         self,
         version: str,
         op: str,
-        base: str | None = None,
+        tail: tuple[int, str | None] | None,
         pooled: list[str] | None = None,
-        check: bool = True,
     ) -> None:
-        """Atomically point the collection at ``version`` and log it —
-        the only pointer flip and ``_versions`` append of every commit
+        """Make ``version`` current: put-if-absent of log entry
+        ``tail``'s seq + 1 — the only write that publishes a commit
         (step 5 of :meth:`_commit_tail`; :meth:`restore` too).
 
-        ``base`` is the snapshot version the commit was BUILT against
-        (optimistic concurrency, Delta-style): if another writer
-        flipped the pointer since, this commit's manifest and kill
-        files describe a stale base — the orphaned version is aborted,
-        its pooled files unlinked, and :class:`CommitConflictError`
-        raised so the caller can re-read and retry. Conflict detection
-        is coarse (any intervening commit conflicts); at 100 TB the
-        lock window is the pointer flip only — milliseconds — not the
-        data write. ``check=False`` (restore) flips unconditionally."""
-        with self._commit_lock():
-            cur = self._current_version()
-            # base=None means the commit was built against an EMPTY
-            # collection — a concurrent first insert that already
-            # flipped the pointer is just as much a conflict as a
-            # base mismatch (otherwise the second flip silently drops
-            # the first batch).
-            if check and cur is not None and cur != base:
-                self._abort(version)
-                # this commit's pool files reference a stale base —
-                # unlink them so the conflict leaves no orphans
-                for rel in pooled or []:
-                    try:
-                        os.unlink(os.path.join(self.path, rel))
-                    except OSError:
-                        pass
-                self._mf_cache.pop(version, None)
-                was = base if base is not None else "<empty>"
-                raise CommitConflictError(
-                    f"collection advanced from {was} to {cur} while "
-                    f"this {op} was building; re-read and retry"
-                )
-            self._flip_pointer(version)
-            self._log_version(version, op)
-
-    def _log_version(self, version: str, op: str) -> None:
-        """Append one ``_versions`` line; the caller holds the lock."""
+        ``tail`` is the ``(seq, version)`` the commit was BUILT against
+        (optimistic concurrency, Delta-style). If another writer took
+        that seq first, this commit's manifest and kill files describe
+        a stale base: the orphaned version is aborted, its pooled files
+        unlinked, and :class:`CommitConflictError` raised so the caller
+        can re-read and retry. Conflict detection is coarse (any
+        intervening commit conflicts), and nothing is held while the
+        data is written. ``tail=None`` (restore) links after whatever
+        the newest entry is, retrying when it loses a race."""
         import time
 
-        with open(os.path.join(self.path, "_versions"), "a") as f:
-            f.write(json.dumps({"version": version, "op": op,
-                                "ts": time.time()}) + "\n")
+        entry = {"version": version, "op": op, "ts": time.time()}
+        if tail is None:
+            while not self._put_entry(self._log_tail()[0] + 1, entry):
+                pass
+            return
+        if self._put_entry(tail[0] + 1, entry):
+            return
+        self._abort(version)
+        # this commit's pool files reference a stale base — unlink them
+        # so the conflict leaves no orphans
+        for rel in pooled or []:
+            try:
+                os.unlink(os.path.join(self.path, rel))
+            except OSError:
+                pass
+        self._mf_cache.pop(version, None)
+        was = tail[1] if tail[1] is not None else "<empty>"
+        raise CommitConflictError(
+            f"collection advanced from {was} to {self._current_version()} "
+            f"while this {op} was building; re-read and retry"
+        )
 
     def _publish_staged_events(self, vdir: str) -> None:
         """Move a committed version's staged CDC event files into the
@@ -880,31 +865,23 @@ class Collection:
         shutil.rmtree(staged, ignore_errors=True)
 
     def _roll_forward(self) -> None:
-        """Finish what a crash left of committed versions; runs on open
-        and before :meth:`vacuum` drops version dirs. A version is
-        committed once the pointer has named it: everything in
-        ``_versions`` plus the current pointer, which a crash between
-        the flip and the log append leaves unlogged. That missing line
-        is appended (as op ``roll_forward``) so :meth:`_seq_next` never
-        hands its seq out twice — under the commit lock, and skipped
-        while a live writer holds it. Then every committed version's
-        staged events are published. Uncommitted version dirs are left
-        alone: a concurrent writer may still own them."""
-        cur = self._current_version()
-        hist = self.history()
-        if cur is not None and (not hist or hist[-1]["version"] != cur):
-            try:
-                with self._commit_lock(timeout=0):
-                    hist = self.history()
-                    if self._current_version() == cur and (
-                        not hist or hist[-1]["version"] != cur
-                    ):
-                        self._log_version(cur, "roll_forward")
-            except TimeoutError:
-                pass
-        committed = {h["version"] for h in hist} | ({cur} if cur else set())
-        for v in sorted(committed):
-            self._publish_staged_events(os.path.join(self.path, v))
+        """Publish the staged CDC events that a crash between a commit's
+        log entry and its publish step left behind; runs on open and
+        before :meth:`vacuum` drops version dirs. Only version dirs that
+        still hold staged events are looked at, and only logged ones
+        are published: an unlogged version dir may belong to a live
+        writer."""
+        staged = [
+            v
+            for v in sorted(os.listdir(self.path))
+            if os.path.isdir(os.path.join(self.path, v, _EVENTS_STAGED))
+        ]
+        if not staged:
+            return
+        committed = {h["version"] for h in self.history()}
+        for v in staged:
+            if v in committed:
+                self._publish_staged_events(os.path.join(self.path, v))
 
     def _commit(
         self,
@@ -912,22 +889,24 @@ class Collection:
         op: str = "commit",
         files_per_bucket: int = 1,
         pre_publish=None,
+        tail: tuple[int, str | None] | None = None,
     ) -> None:
         """Full-snapshot commit, partitioned by id-hash bucket so later
         DML can rewrite only touched buckets (Delta's file pruning).
         A full rewrite contains only live rows, so no deletion vectors
-        carry over — this is also the DV compaction point, and the
-        commit that migrates a legacy non-bucketed snapshot.
+        carry over — this is also the DV compaction point.
 
         ``files_per_bucket`` splits each bucket across that many write
         tasks (deterministic id-hash sub-split) — optimize() sizes it
         so compaction yields ~target_file_bytes files instead of
         n_buckets giant ones; plain DML commits keep the default of one
         task per bucket. ``pre_publish(stage, vdir)`` is the tail's
-        gate: it validates the staged bytes and stages CDC events."""
-        base = self._current_version()
+        gate: it validates the staged bytes and stages CDC events.
+        ``tail`` is the log tail ``df`` was built from (default: read
+        it now)."""
+        tail = tail or self._log_tail()
         version, _ = self._new_version()
-        df = df.withColumn("_seq", F.lit(self._seq_next()).cast("long"))
+        df = df.withColumn("_seq", F.lit(tail[0] + 1).cast("long"))
         fpb = max(1, int(files_per_bucket))
         d = df.withColumn("_bucket", self._bucket())
         if fpb > 1:
@@ -964,21 +943,9 @@ class Collection:
         df = df.drop("_zorder", "_fsplit")
         stage = self._write_stage(d, version)
         self._commit_tail(
-            version, op, base, stage=stage, written=df, rewrite=True,
+            version, op, tail, stage=stage, written=df, rewrite=True,
             gate=pre_publish,
         )
-
-    def _snapshot_bucketed(self) -> bool:
-        """True when the current snapshot has ``_bucket=`` partition
-        dirs. A collection written before bucketed commits (or restored
-        to such a version) has none — DML then falls back to a full
-        rewrite, which lazily migrates it to the bucketed layout."""
-        cur = self._data_path()
-        if cur is None or not os.path.isdir(cur):
-            return True  # empty collection: first commit will bucket it
-        if self._load_manifest(os.path.basename(cur)) is not None:
-            return True  # manifest versions are always pool-bucketed
-        return any(e.startswith("_bucket=") for e in os.listdir(cur))
 
     def _commit_append(
         self,
@@ -987,6 +954,7 @@ class Collection:
         n_rows: int | None = None,
         kill_event: str | None = None,
         pre_publish=None,
+        tail: tuple[int, str | None] | None = None,
     ) -> int | None:
         """Append-only commit (Delta blind APPEND + deletion vectors):
         the manifest records the batch's new files as adds over the base
@@ -996,21 +964,23 @@ class Collection:
         batch id and stages its CDC events inside the write tasks, and
         the call returns the written row count. Repeated commits
         accumulate small files and DV entries; :meth:`optimize`
-        compacts both."""
-        cur = self._data_path()
-        if cur is None or not self._has_parquet(cur) or not self._snapshot_bucketed():
-            # empty or legacy layout: a full commit bootstraps/migrates.
-            # Large bootstrap batches split each bucket across several
+        compacts both. ``tail`` is the log tail the caller read the
+        snapshot at (default: read it now)."""
+        tail = tail or self._log_tail()
+        if not self._has_rows(tail[1]):
+            # empty collection: a full commit bootstraps it. Large
+            # bootstrap batches split each bucket across several
             # write tasks (the wall-time lever for bulk ingest: bucket
             # count alone under-parallelizes a big first load); small
             # ones keep one file per bucket.
             fpb = max(1, min(8, (n_rows or 0) // 50_000))
             self._commit(
-                batch, op, files_per_bucket=fpb, pre_publish=pre_publish
+                batch, op, files_per_bucket=fpb, pre_publish=pre_publish,
+                tail=tail,
             )
             return None
         version, vdir = self._new_version()
-        seq = self._seq_next()
+        seq = tail[0] + 1
         batch = batch.withColumn("_seq", F.lit(seq).cast("long"))
         # small appends don't need a cluster-wide shuffle: one task
         # writes all its bucket files (partitionBy splits them).
@@ -1057,29 +1027,27 @@ class Collection:
             n_out = int(obs.get["n"])
             if n_out == 0:
                 # empty upsert batch: nothing was written or killed
-                # — don't flip to a pointless no-op version (a
+                # — don't commit a pointless no-op version (a
                 # streaming upsert sink sees empty micro-batches
                 # routinely and must not bloat the version chain)
                 self._abort(version)
                 return 0
         self._commit_tail(
-            version, op, os.path.basename(cur), stage=stage, written=batch,
-            gate=pre_publish,
+            version, op, tail, stage=stage, written=batch, gate=pre_publish,
         )
         return n_out
 
-    def _commit_kill(self, doomed: DataFrame, op: str) -> bool:
+    def _commit_kill(
+        self, doomed: DataFrame, op: str, tail: tuple[int, str | None]
+    ) -> bool:
         """Kill-only commit driven by ONE job: the doomed-id scan's own
         tasks write the deletion-vector and CDC event files directly
-        (pyarrow, executor-side). The new version becomes current only
-        if some task materialized a kill — an empty match writes no
-        version dir and commits nothing. Returns whether a commit
-        happened."""
-        cur = self._data_path()
-        if cur is None or not self._has_parquet(cur):
-            return False  # empty collection: nothing can match
+        (pyarrow, executor-side). ``doomed`` is read at ``tail``. The
+        new version is committed only if some task materialized a kill
+        — an empty match writes no version dir and commits nothing.
+        Returns whether a commit happened."""
         version, vdir = self._new_version()
-        seq = self._seq_next()
+        seq = tail[0] + 1
         dv_dir = os.path.join(vdir, "_dv")
         ev_dir = os.path.join(vdir, _EVENTS_STAGED)
         coll = os.path.basename(self.path)
@@ -1099,7 +1067,7 @@ class Collection:
             raise
         if not os.path.isdir(dv_dir):
             return False  # nothing matched: no commit
-        self._commit_tail(version, op, os.path.basename(cur))
+        self._commit_tail(version, op, tail)
         return True
 
     def _wrap_side_effects(
@@ -1110,8 +1078,8 @@ class Collection:
         parquet writer unchanged, then side-writes ONE kill file
         (deletion vector) and ONE CDC event file via pyarrow into the
         version dir. Both wait there for the commit tail: kill files
-        are pooled only by a commit that goes on to flip, and events
-        publish only after the flip — tasks that finished before a
+        are pooled only by a commit that goes on to log, and events
+        publish only once logged — tasks that finished before a
         failing/conflicting sibling leave no phantom change events."""
         dv_dir = os.path.join(vdir, "_dv")
         ev_dir = os.path.join(vdir, _EVENTS_STAGED)
@@ -1155,28 +1123,26 @@ class Collection:
 
         return df.mapInPandas(run, schema=df.schema)
 
-    def _bucket_rows(self, touched: list[int]) -> DataFrame:
-        """Current rows of the touched buckets only — the read is
-        pruned to those partition dirs. On a legacy non-bucketed
-        snapshot this returns the FULL table (no ``_bucket`` column to
-        prune on); the paired :meth:`_commit` then does a full migrating
-        rewrite, so DML on old collections works instead of raising."""
-        p = self._data_path()
-        if p is None or not self._has_parquet(p):
-            return self.df()
+    def _bucket_rows(
+        self, touched: list[int], version: str | None = None
+    ) -> DataFrame:
+        """Rows of the touched buckets only at ``version`` (default:
+        current) — the read is pruned to those partitions."""
+        if version is None:
+            version = self._current_version()
+        if not self._has_rows(version):
+            return self._empty_df()
         # drop _ann_list: a DML rewrite mixes carried rows with new ones
         # whose list id is unknown — a rewritten file carrying partial
         # stats could be WRONGLY file-skipped by the ANN fallback, so
         # rewritten buckets lose the column (they scan until the next
         # optimize(ann_cluster=True), the standard clustering-erosion
         # contract)
-        if not self._snapshot_bucketed():
-            return self._apply_dv(self._read_snapshot(p), p).drop("_ann_list")
         return self._apply_dv(
-            self._read_snapshot(p).filter(
+            self._read_snapshot(version).filter(
                 F.col("_bucket").isin([int(t) for t in touched])
             ),
-            p,
+            version,
         ).drop("_bucket", "_ann_list")
 
     def _touched_buckets(self, ids_df: DataFrame) -> list[int]:
@@ -1188,22 +1154,18 @@ class Collection:
         ]
 
     def history(self) -> list[dict]:
-        """Commit log, oldest first (Delta ``DESCRIBE HISTORY``)."""
-        p = os.path.join(self.path, "_versions")
-        if not os.path.exists(p):
-            return []
-        with open(p) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        """Commit log, oldest first (Delta ``DESCRIBE HISTORY``): one
+        ``{version, op, ts}`` dict per log entry."""
+        seq, _ = self._log_tail()
+        return [dict(self._read_entry(s)) for s in range(1, seq + 1)]
 
     def restore(self, version: str) -> None:
         """Point the collection back at an earlier snapshot (Delta
-        ``RESTORE``) — recorded as a new history entry; no data moves.
-        Takes the commit lock like every other pointer flip, so a
-        restore cannot interleave with a concurrent writer's
-        check-and-flip."""
-        if not os.path.isdir(os.path.join(self.path, version)):
+        ``RESTORE``) — a new log entry naming that version's manifest;
+        no data moves."""
+        if not os.path.exists(self._manifest_file(version)):
             raise ValueError(f"unknown version: {version}")
-        self._finish_commit(version, "restore", check=False)
+        self._finish_commit(version, "restore", None)
 
     def optimize(
         self,
@@ -1226,23 +1188,13 @@ class Collection:
         each output file then covers a compact hyper-rectangle of the
         key space, so min/max file stats prune multi-column range
         filters (functions/zorder.py)."""
+        # one tail read: the rewrite reads and commits on the same base
+        tail = self._log_tail()
         if target_partitions is None:
-            p = self._data_path()
-            on_disk = 0
-            if p and os.path.isdir(p):
-                ver = os.path.basename(p)
-                if self._load_manifest(ver) is not None:
-                    on_disk = sum(
-                        os.path.getsize(os.path.join(self.path, rel))
-                        for rel in self._resolve(ver)[0]
-                    )
-                else:
-                    for root, _dirs, files in os.walk(p):
-                        on_disk += sum(
-                            os.path.getsize(os.path.join(root, fn))
-                            for fn in files
-                            if fn.endswith(".parquet")
-                        )
+            on_disk = sum(
+                os.path.getsize(os.path.join(self.path, rel))
+                for rel in (self._resolve(tail[1])[0] if tail[1] else [])
+            )
             target_partitions = max(1, -(-on_disk // target_file_bytes))
         # _commit lays files out as n_buckets × files_per_bucket — a
         # bare coalesce() here would be overridden by its bucket
@@ -1268,7 +1220,7 @@ class Collection:
                     "ann_cluster and zorder_by are mutually exclusive "
                     "(one physical sort order per rewrite)"
                 )
-            if self._current_version() is None or self.count() == 0:
+            if tail[1] is None or self.count() == 0:
                 raise ValueError(
                     "ann_cluster requires a non-empty collection "
                     "(nothing to train or cluster)"
@@ -1306,14 +1258,14 @@ class Collection:
             train_nonce = st.meta["train_nonce"]
             n_lists = int(st.centroids.shape[0])
             lid = st._list_id(F.col("embedding"), st.centroids)
-            out = self.df().withColumn("_ann_list", lid.cast("int"))
+            out = self.df(tail[1]).withColumn("_ann_list", lid.cast("int"))
             out = out.withColumn(
                 "_zorder", F.col("_ann_list")
             ).withColumn(
                 "_fsplit",
                 F.floor(F.col("_ann_list") * fpb / F.lit(n_lists)),
             )
-            self._commit(out, op="optimize", files_per_bucket=fpb)
+            self._commit(out, op="optimize", files_per_bucket=fpb, tail=tail)
             # content-preserving rewrite: re-stamp the trained
             # watermark (fresh _seq on every row would read as 100%
             # drift) and mark the clustering valid for these centroids
@@ -1329,15 +1281,16 @@ class Collection:
             # the _bucket dirs)
             from fastpyvectordb_spark.functions.zorder import zorder_key
 
-            out = self.df()
+            out = self.df(tail[1])
             out = out.withColumn("_zorder", zorder_key(out, zorder_by))
         else:
-            out = self.df()
-        self._commit(out, op="optimize", files_per_bucket=fpb)
+            out = self.df(tail[1])
+        self._commit(out, op="optimize", files_per_bucket=fpb, tail=tail)
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
         """Drop snapshots older than the last ``keep_last`` history
-        entries (never the current pointer) — Delta ``VACUUM``. Returns
+        entries (the newest is the current version) — Delta ``VACUUM``.
+        Log entries are never deleted. Returns
         the removed version names; time travel to them is gone.
 
         Manifest mechanics: every RETAINED manifest version is first
@@ -1355,22 +1308,16 @@ class Collection:
         self._roll_forward()
         hist = self.history()
         keep = {h["version"] for h in hist[-max(keep_last, 1):]}
-        cur = self._current_version()
-        if cur:
-            keep.add(cur)
-        # checkpoint kept manifest versions (self-contained chains)
+        # checkpoint kept manifest versions (self-contained chains); a
+        # kept entry may name a version an earlier vacuum dropped
         referenced: set[str] = set()
         for v in sorted(keep):
-            if self._load_manifest(v) is None:
+            if not os.path.exists(self._manifest_file(v)):
                 continue
             files, dv = self._resolve(v)
-            m = {"kind": "checkpoint", "depth": 0, "files": files, "dv": dv}
-            tmp = os.path.join(
-                self.path, v, f".manifest.{uuid.uuid4().hex[:8]}.tmp"
+            self._put_manifest(
+                v, {"kind": "checkpoint", "depth": 0, "files": files, "dv": dv}
             )
-            with open(tmp, "w") as f:
-                f.write(json.dumps(m))
-            os.rename(tmp, self._manifest_file(v))
             referenced.update(files)
             referenced.update(dv)
         removed = []
@@ -1406,7 +1353,7 @@ class Collection:
         """Spark twin of :func:`_write_events` for id sets too large to
         collect: stage CDC events for ``ids_df`` into a version's
         ``to_dir`` (one Spark job; the commit tail publishes every
-        ``*.parquet`` there after the flip)."""
+        ``*.parquet`` there once the version is logged)."""
         ev = ids_df.select(
             F.concat(F.lit(uuid.uuid4().hex[:8] + "-"), F.col("id")).alias(
                 "event_id"
@@ -1455,93 +1402,71 @@ class Collection:
             "embedding", F.col("embedding").cast("array<float>")
         )
 
-    def _batch_stats(self, batch: DataFrame, find_dups: bool = True):
-        """ONE job over the incoming batch returning
-        ``(n_rows, touched_buckets, in_batch_dup_id, bad_dim_row)``.
-        Round-1 DML ran validate / count / touched-buckets as three
-        separate collects — three full scans of the batch, each with a
-        whole Spark-job floor. Fusing them into a single groupBy+agg
-        pass is the difference between 450 and >1k rows/s on point DML
-        (and it is the same one-pass shape a Delta MERGE's source-scan
-        does). ``find_dups=False`` (upsert: duplicates are legal)
-        drops the per-id groupBy — the whole pass becomes a narrow
-        partial+final aggregate with no shuffle."""
+    def _batch_stats(self, batch: DataFrame) -> int:
+        """Row count of a batch with its null and dimension checks fused
+        into the same pass: ONE job, a narrow partial+final aggregate
+        with no shuffle (separate validate / count collects each paid a
+        whole Spark-job floor)."""
         dims = self.config.dimensions
-        src = batch.select(
-            "id",
-            F.size("embedding").alias("_sz"),
-            self._bucket(F.col("id")).alias("_b"),
-        )
-        if find_dups:
-            src = src.groupBy("id").agg(
-                F.count(F.lit(1)).alias("_c"),
-                F.first("_sz").alias("_sz"),
-                F.first("_b").alias("_b"),
-            )
-        else:
-            src = src.withColumn("_c", F.lit(1))
-        row = src.agg(
-            F.sum("_c").alias("n"),
-            F.min(F.when(F.col("_c") > 1, F.col("id"))).alias("dup_id"),
+        sz = F.size("embedding")
+        row = batch.agg(
+            F.count(F.lit(1)).alias("n"),
             F.min(
-                F.when(
-                    F.col("_sz") != dims,
-                    F.struct(F.col("_sz").alias("sz"), F.col("id").alias("id")),
-                )
+                F.when(sz != dims, F.struct(sz.alias("sz"), F.col("id").alias("id")))
             ).alias("bad"),
-            F.collect_set("_b").alias("buckets"),
-            # nulls are invisible to the checks above (NULL != dims is
-            # NULL, a NULL id hashes to a NULL bucket) — count them
-            # explicitly or they commit and then sort FIRST in every
-            # kNN (NULL dist) / break bucket-dir parsing
+            # nulls are invisible to the check above (NULL != dims is
+            # NULL) — count them explicitly or they commit and then
+            # sort FIRST in every kNN (NULL dist) / break bucketing
             F.sum(F.col("id").isNull().cast("int")).alias("null_ids"),
-            F.sum(
-                (F.col("id").isNotNull() & F.col("_sz").isNull()).cast("int")
-            ).alias("null_vecs"),
+            F.sum((F.col("id").isNotNull() & sz.isNull()).cast("int")).alias(
+                "null_vecs"
+            ),
         ).collect()[0]
         if int(row["null_ids"] or 0) > 0:
             raise ValueError("null id in batch")
         if int(row["null_vecs"] or 0) > 0:
             raise ValueError("null embedding in batch")
-        n = int(row["n"] or 0)
-        return n, [int(b) for b in row["buckets"]], row["dup_id"], row["bad"]
+        bad = row["bad"]
+        if bad is not None:
+            raise ValueError(
+                f"dimension mismatch: expected {dims}, "
+                f"got {bad['sz']} for id {bad['id']!r}"
+            )
+        return int(row["n"])
 
     def _rows_to_batch(self, rows: list[dict]) -> DataFrame:
-        """Row dicts → DataFrame with an EXPLICIT schema: inference
-        raises on any key whose values are None in every row (a legal
-        metadata shape — None round-trips as SQL NULL); type each key
-        from its first non-None value, bool before int (a bool IS an
-        int in Python), all-None defaulting to string."""
+        """Row dicts → DataFrame, built from pandas through Arrow: a
+        Python list would become a Python RDD, and every job over the
+        batch would start Python workers. The schema is explicit: each
+        metadata key takes Spark's own inferred type, merged over its
+        non-None values (what ``createDataFrame(rows)`` infers), and a
+        key that is None in every row — which inference rejects — is a
+        string column of NULLs."""
+        import pandas as pd
         from pyspark.sql.types import (
             ArrayType,
-            BooleanType,
-            DoubleType,
             FloatType,
-            LongType,
             StringType,
             StructField,
             StructType,
+            _infer_type,
+            _merge_type,
         )
 
-        keys: list[str] = []
-        for r in rows:
-            for k in r:
-                if k not in keys and k not in ("id", "embedding"):
-                    keys.append(k)
+        keys = list(
+            dict.fromkeys(
+                k for r in rows for k in r if k not in ("id", "embedding")
+            )
+        )
 
         def key_type(k):
+            t = None
             for r in rows:
                 v = r.get(k)
-                if v is None:
-                    continue
-                if isinstance(v, bool):
-                    return BooleanType()
-                if isinstance(v, int):
-                    return LongType()
-                if isinstance(v, float):
-                    return DoubleType()
-                return StringType()
-            return StringType()
+                if v is not None:
+                    vt = _infer_type(v)
+                    t = vt if t is None else _merge_type(t, vt)
+            return t or StringType()
 
         schema = StructType(
             [
@@ -1550,19 +1475,19 @@ class Collection:
                 *[StructField(k, key_type(k)) for k in keys],
             ]
         )
-        shaped = [
-            {
-                "id": None if r.get("id") is None else str(r["id"]),
-                "embedding": (
-                    None
-                    if r.get("embedding") is None
-                    else [float(x) for x in r["embedding"]]
-                ),
-                **{k: r.get(k) for k in keys},
-            }
-            for r in rows
-        ]
-        return self.spark.createDataFrame(shaped, schema)
+        cols = {
+            "id": [None if r.get("id") is None else str(r["id"]) for r in rows],
+            "embedding": [
+                None
+                if r.get("embedding") is None
+                else [float(x) for x in r["embedding"]]
+                for r in rows
+            ],
+            **{k: [r.get(k) for r in rows] for k in keys},
+        }
+        # object columns: pandas would turn ints beside a None into NaN
+        pdf = pd.DataFrame({k: pd.Series(v, dtype=object) for k, v in cols.items()})
+        return self.spark.createDataFrame(pdf, schema)
 
     def insert(
         self,
@@ -1635,7 +1560,7 @@ class Collection:
         anything is pooled or pointed at. The r11 shape paid a
         persist + fused stats job (2.49 s at the 100k bench point) + a
         post-commit CDC job (0.99 s) that this removes; CDC events now
-        stage in the version dir and publish after the pointer flip
+        stage in the version dir and publish once the version is logged
         (the same once-visible contract the upsert path already had)."""
         from pyspark.sql import Observation
 
@@ -1661,6 +1586,7 @@ class Collection:
             ).alias("bad"),
         )
         out_n: list[int] = [n]
+        tail = self._log_tail()
 
         def pre_publish(stage: str, vdir: str) -> None:
             row = obs.get
@@ -1696,8 +1622,7 @@ class Collection:
                 )
                 if r is not None:
                     raise ValueError(f"duplicate id in batch: {r!r}")
-            cur = self._data_path()
-            if cur is not None and self._has_parquet(cur):
+            if self._has_rows(tail[1]):
                 if ids is not None:
                     import pandas as pd
 
@@ -1707,7 +1632,7 @@ class Collection:
                         )
                     )
                 dup = (
-                    self._bucket_rows(touched)
+                    self._bucket_rows(touched, tail[1])
                     .select("id")
                     .join(staged_df, "id", "inner")
                     .limit(1)
@@ -1715,8 +1640,8 @@ class Collection:
                 )
                 if dup:
                     raise ValueError(f"duplicate id {dup[0]['id']!r}")
-            # CDC events: staged in the version dir, published after
-            # the pointer flip by the commit tail
+            # CDC events: staged in the version dir, published once
+            # the version is logged, by the commit tail
             ev_dir = os.path.join(vdir, _EVENTS_STAGED)
             et = "batch_insert" if n_out > 1 else "insert"
             if ids is None:
@@ -1725,7 +1650,7 @@ class Collection:
                 _write_events(ev_dir, ids, et, os.path.basename(self.path))
 
         self._commit_append(
-            batch, op="insert", n_rows=n, pre_publish=pre_publish
+            batch, op="insert", n_rows=n, pre_publish=pre_publish, tail=tail
         )
         return out_n[0]
 
@@ -1734,15 +1659,10 @@ class Collection:
         fused stats job sizes/validates the batch, then ONE commit
         records the batch ids as kills and appends the new rows — the
         existing table is never read or rewritten (Delta's DV MERGE
-        fast path). Legacy non-bucketed snapshots take the old
-        copy-on-write rewrite, which migrates them."""
+        fast path). An empty collection takes one full commit."""
         batch = self._validate(batch)
-        cur = self._data_path()
-        if (
-            cur is not None
-            and self._has_parquet(cur)
-            and self._snapshot_bucketed()
-        ):
+        tail = self._log_tail()
+        if self._has_rows(tail[1]):
             # size probe: ONE bounded Arrow collect. Small batches take
             # the zero-job driver path (pyarrow writes the bucket
             # files / DV / CDC directly — the same trick as
@@ -1755,43 +1675,34 @@ class Collection:
                 .toArrow()
             )
             if probe.num_rows <= _LOCAL_DML_MAX_ROWS:
-                return self._upsert_local(probe, batch, cur)
+                return self._upsert_local(probe, batch, tail)
             # fast path: kill + append + CDC + dim-check + row count all
             # inside the ONE commit-write job (see _wrap_side_effects)
-            return self._commit_append(batch, op="upsert", kill_event="update")
-        n, touched, _dup, bad = self._batch_stats(batch, find_dups=False)
-        if bad is not None:
-            raise ValueError(
-                f"dimension mismatch: expected {self.config.dimensions}, "
-                f"got {bad['sz']} for id {bad['id']!r}"
+            return self._commit_append(
+                batch, op="upsert", kill_event="update", tail=tail
             )
+        n = self._batch_stats(batch)
         if n == 0:
             return 0
-        new = batch
-        if cur is not None and self._has_parquet(cur):
-            # legacy non-bucketed: copy-on-write rewrite migrates it
-            new = (
-                self._bucket_rows(touched)
-                .join(batch.select("id"), "id", "left_anti")
-                .unionByName(batch, allowMissingColumns=True)
-            )
         self._commit(
-            new, op="upsert",
+            batch, op="upsert", tail=tail,
             pre_publish=lambda stage, vdir: self._emit(
                 "update", batch.select("id"), os.path.join(vdir, _EVENTS_STAGED)
             ),
         )
         return n
 
-    def _upsert_local(self, tbl, batch: DataFrame, cur: str) -> int:
+    def _upsert_local(
+        self, tbl, batch: DataFrame, tail: tuple[int, str | None]
+    ) -> int:
         """Driver-local small-batch upsert: the batch already sits on
         the driver as an Arrow table (with its ``_bucket`` column), so
         validation, per-bucket data files, the deletion vector, and the
         staged CDC events are all written with pyarrow — zero Spark
         jobs beyond the collect that produced ``tbl``. Same commit
-        protocol as :meth:`_commit_append` (hard-link base files, DV
-        kill, staged events published after the pointer flip, optimistic
-        conflict check), same error surface (dimension / null-id /
+        protocol as :meth:`_commit_append` (manifest delta, DV kill,
+        staged events published once logged, optimistic conflict
+        check), same error surface (dimension / null-id /
         in-batch-duplicate ValueErrors raised BEFORE any file exists).
         Reference parity: this is the regime where the reference's
         sequential upsert (benchmark notes, 3,239 rows/s) lives —
@@ -1830,7 +1741,7 @@ class Collection:
             seen.add(rid)
         ids = [str(i) for i in raw_ids]
         version, vdir = self._new_version()
-        seq = self._seq_next()
+        seq = tail[0] + 1
         tok = uuid.uuid4().hex[:8]
         # new data and kill files go straight into the pool (invisible
         # until the manifest references them); the base snapshot's files
@@ -1858,7 +1769,7 @@ class Collection:
             os.path.basename(self.path),
         )
         self._commit_tail(
-            version, "upsert", os.path.basename(cur), adds=adds,
+            version, "upsert", tail, adds=adds,
             dv_adds=[os.path.relpath(dv, self.path)], written=batch,
         )
         return n
@@ -1878,25 +1789,26 @@ class Collection:
         records the delete request rather than verified row deletes
         (plain SQL ``DELETE`` semantics; the default scan-verified path
         is Delta-CDF-faithful)."""
-        cur_p = self._data_path()
-        if cur_p is None or not self._has_parquet(cur_p):
+        tail = self._log_tail()
+        base = tail[1]
+        if not self._has_rows(base):
             return  # empty collection: nothing can match (and a where
             # predicate on absent metadata columns could not resolve)
-        if not verify_existing and ids and where is None and self._snapshot_bucketed():
+        if not verify_existing and ids and where is None:
             # zero-job O(ids) commit: one pooled kill file, staged CDC
             # events and a manifest delta — no scan, no listing, no
             # per-file metadata
             version, vdir = self._new_version()
             dv = _write_kills(
                 os.path.join(self._pool_root(), "_dv"), ids,
-                self._seq_next(), prefix=f"{version}-",
+                tail[0] + 1, prefix=f"{version}-",
             )
             _write_events(
                 os.path.join(vdir, _EVENTS_STAGED), ids, "delete",
                 os.path.basename(self.path),
             )
             self._commit_tail(
-                version, "delete", os.path.basename(cur_p),
+                version, "delete", tail,
                 dv_adds=[os.path.relpath(dv, self.path)],
             )
             return
@@ -1908,43 +1820,22 @@ class Collection:
             cond = f.col() if cond is None else (cond | f.col())
         if cond is None:
             return
-        if not self._snapshot_bucketed():
-            # legacy layout: copy-on-write rewrite (migrates to buckets)
-            cur = self.df()
-            doomed = (
-                cur.filter(F.coalesce(cond, F.lit(False)))
-                .select("id")
-                .localCheckpoint()
-            )
-            touched = self._touched_buckets(doomed)
-            if not touched:
-                return
-            kept = self._bucket_rows(touched).filter(
-                ~F.coalesce(cond, F.lit(False))
-            )
-            self._commit(
-                kept, op="delete",
-                pre_publish=lambda stage, vdir: self._emit(
-                    "delete", doomed, os.path.join(vdir, _EVENTS_STAGED)
-                ),
-            )
-            return
         # deletion-vector delete: ONE job — the doomed-id scan's tasks
         # write the kill + CDC event files as they match (existence is
         # checked by what materializes, so no separate probe/collect);
-        # the commit itself is hard links + a pointer flip. Small id
-        # lists prune the scan to their hash buckets; hash-spread lists
-        # (≥4×n_buckets ids) touch every bucket anyway and skip the
-        # pruning job.
+        # the commit itself is a manifest delta and a log entry. Small
+        # id lists prune the scan to their hash buckets; hash-spread
+        # lists (≥4×n_buckets ids) touch every bucket anyway and skip
+        # the pruning job.
         if where is None and ids and len(ids) < self.config.n_buckets * 4:
             ids_df = self.spark.createDataFrame(
                 [(str(i),) for i in ids], "id string"
             )
-            scope = self._bucket_rows(self._touched_buckets(ids_df))
+            scope = self._bucket_rows(self._touched_buckets(ids_df), base)
         else:
-            scope = self.df()
+            scope = self.df(base)
         doomed = scope.filter(F.coalesce(cond, F.lit(False))).select("id")
-        self._commit_kill(doomed, op="delete")
+        self._commit_kill(doomed, op="delete", tail=tail)
 
     def update(
         self,
@@ -2039,40 +1930,16 @@ class Collection:
         """Snapshot file inventory (Iceberg ``files`` / Delta
         ``DESCRIBE DETAIL``): one row per live data file — path,
         bucket, bytes, footer row count and row-group count. The
-        listing is one filesystem walk on the driver (what a manifest
-        read costs); footers are opened EXECUTOR-side via mapInPandas,
+        listing is the resolved manifest plus a stat per file; footers are opened EXECUTOR-side via mapInPandas,
         so a million-file table fans the footer reads out instead of
         funnelling them through the driver."""
-        cur = self._data_path()
+        # the inventory IS the resolved manifest (DV refs excluded by
+        # construction)
+        ver = self._current_version()
         rows = []
-        if cur and os.path.isdir(cur):
-            ver = os.path.basename(cur)
-            if self._load_manifest(ver) is not None:
-                # manifest version: the inventory IS the resolved
-                # manifest (DV refs excluded by construction)
-                for rel in self._resolve(ver)[0]:
-                    p = os.path.join(self.path, rel)
-                    rows.append(
-                        (p, self._bucket_of_path(rel), os.path.getsize(p))
-                    )
-            else:
-                for root, _dirs, fns in os.walk(cur):
-                    # metadata dirs (DV kill files, staged stream
-                    # batches) are not live data — same exclusion as
-                    # _has_parquet
-                    _dirs[:] = [
-                        d for d in _dirs if d not in ("_dv", _EVENTS_STAGED)
-                    ]
-                    seg = os.path.basename(root)
-                    bucket = (
-                        int(seg.split("=", 1)[1])
-                        if seg.startswith("_bucket=")
-                        else -1
-                    )
-                    for fn in fns:
-                        if fn.endswith(".parquet"):
-                            p = os.path.join(root, fn)
-                            rows.append((p, bucket, os.path.getsize(p)))
+        for rel in self._resolve(ver)[0] if ver else []:
+            p = os.path.join(self.path, rel)
+            rows.append((p, self._bucket_of_path(rel), os.path.getsize(p)))
         listing_schema = "path string, bucket int, n_bytes long"
         out_schema = (
             listing_schema + ", n_rows long, n_row_groups int"
@@ -2294,7 +2161,7 @@ class Collection:
         collection's live rows collected ONCE per committed version
         (Arrow) into a contiguous float32 matrix + precomputed norms +
         an id→row index for metadata enrichment. Re-validated against
-        the version pointer on every call — any commit invalidates it.
+        the log tail on every call — any commit invalidates it.
 
         Refresh is INCREMENTAL when possible (round 6): the manifest
         layer makes the delta between the cached version and the
@@ -2303,7 +2170,7 @@ class Collection:
         a point-DML commit refreshes the pack in O(changed rows) with
         ZERO Spark jobs (the serving-tier twin of the O(changed files)
         manifest commits). Any shape the delta can't express — files
-        removed (optimize/restore/legacy migration), schema promotion
+        removed (optimize/restore), schema promotion
         failure, vacuumed manifests — falls back to the full rebuild,
         whose result is definitionally identical (pytest pins
         incremental == full).
@@ -2398,21 +2265,17 @@ class Collection:
         rows (kills are monotone and idempotent, so re-applying old
         kills to already-filtered rows is a no-op), and re-assemble.
         Returns None — caller falls back to the full Spark rebuild —
-        whenever data files were removed (optimize / restore / legacy
-        migration rewrites), a manifest is unreadable (vacuumed), or
+        whenever data files were removed (optimize / restore
+        rewrites), a manifest is unreadable (vacuumed), or
         the added files' schema cannot be promoted to the pack's."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as papq
 
         try:
+            # a vacuumed base version has no manifest: _resolve raises
             of, odv = self._resolve(old_ver)
             nf, ndv = self._resolve(new_ver)
-            if not of and len(old["ids"]):
-                # a vacuumed base version resolves as empty (manifest
-                # gone, dir gone) — treating that as "everything was
-                # added" would duplicate every cached row
-                return None
             ofs = set(of)
             if ofs - set(nf):
                 return None
@@ -2835,7 +2698,7 @@ class VectorDB:
         # pack), and constructing a fresh one per call — the REST
         # server's request pattern — would rebuild that state on every
         # request. Data staleness is impossible (handles re-read the
-        # version pointer per operation); a delete+recreate writes a
+        # log tail per operation); a delete+recreate writes a
         # new config.json, whose mtime_ns misses the cache.
         self._handles: dict[str, tuple[int, Collection]] = {}
         os.makedirs(path, exist_ok=True)

@@ -245,14 +245,10 @@ class _Handler(BaseHTTPRequestHandler):
         rows = [
             # metadata first: a user key named id/embedding must not
             # clobber the row's identity or vector
-            {**(m or {}), "id": i, "embedding": [float(x) for x in v]}
+            {**(m or {}), "id": i, "embedding": v}
             for i, v, m in zip(ids, b["vectors"], metas)
         ]
-        from pyspark.sql import functions as F
-
-        batch = self.db.spark.createDataFrame(rows).withColumn(
-            "embedding", F.col("embedding").cast("array<float>")
-        )
+        batch = c._rows_to_batch(rows)
         with self.lock:
             n = c.insert_batch(batch)
         self._send(200, {"ids": ids, "count": n, "success": True})
@@ -263,13 +259,9 @@ class _Handler(BaseHTTPRequestHandler):
         row = {
             **(b.get("metadata") or {}),  # id/embedding must win below
             "id": b["id"],
-            "embedding": [float(x) for x in b["vector"]],
+            "embedding": b["vector"],
         }
-        from pyspark.sql import functions as F
-
-        batch = self.db.spark.createDataFrame([row]).withColumn(
-            "embedding", F.col("embedding").cast("array<float>")
-        )
+        batch = c._rows_to_batch([row])
         with self.lock:
             c.upsert(batch)
         self._send(200, {"id": b["id"], "success": True})
@@ -562,11 +554,7 @@ class _Handler(BaseHTTPRequestHandler):
             {**(m or {}), "id": i, "embedding": v, "_document": t}
             for i, v, t, m in zip(ids, list(vecs), texts, metas)
         ]
-        from pyspark.sql import functions as F
-
-        batch = self.db.spark.createDataFrame(rows).withColumn(
-            "embedding", F.col("embedding").cast("array<float>")
-        )
+        batch = c._rows_to_batch(rows)
         with self.lock:
             n = c.insert_batch(batch)
         self._send(200, {"ids": ids, "count": n, "success": True})

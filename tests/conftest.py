@@ -38,9 +38,8 @@ def documents(spark):
 class Crash(BaseException):
     """A simulated process death. A BaseException, so no ``except
     Exception`` cleanup runs; ``finally`` blocks still do, which a real
-    crash would skip. The one that matters is the commit-lock release:
-    a real crash inside the lock leaves ``_commit.lock`` behind until
-    it goes stale, so the injector never crashes on it."""
+    crash would skip. In the commit path the only such block removes a
+    log entry's temp file, which no reader looks at."""
 
 
 @pytest.fixture
@@ -70,7 +69,7 @@ def crash_injected(monkeypatch):
         if st is None or st["crashed"] or st["quiet"]:
             return
         p = os.path.abspath(os.fsdecode(path))
-        if not p.startswith(st["root"]) or os.path.basename(p) == "_commit.lock":
+        if not p.startswith(st["root"]):
             return
         st["n"] += 1
         if st["n"] == st["crash_at"]:

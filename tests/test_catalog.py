@@ -366,28 +366,101 @@ def test_delete_then_reinsert_and_optimize_compacts_dv(spark, tmp_path):
     assert rows2 == rows
 
 
-@pytest.mark.slow
-def test_legacy_nonbucketed_snapshot_dml(spark, db, tmp_path):
-    """DML against a snapshot written WITHOUT _bucket partition dirs
-    (pre-bucketing layout / restored old version) must not raise: it
-    falls back to a full rewrite that migrates to the bucketed layout."""
+# A collection in the pre-log layout: a non-bucketed snapshot dir, a
+# bucketed one with a deletion vector, a ``_versions`` history naming
+# both, and a ``_current`` pointer a crash left unlogged (a restore of
+# the first version that flipped but never logged).
+_OLD1 = {f"L{i}": [float(i), 1.0, 0.0, 0.0] for i in range(6)}
+_OLD2 = {**_OLD1, "L0": [9.0, 9.0, 9.0, 9.0], "L6": [6.0, 6.0, 6.0, 6.0]}
+
+
+def _legacy_collection(spark, path):
+    import json
     import os
 
-    c = db.create_collection("legacy", dimensions=4)
-    c.insert_batch(_batch(spark, _vecs(10)))
-    # simulate a legacy snapshot: rewrite current content unbucketed
-    legacy = os.path.join(c.path, "v_legacy000000")
-    c.df().write.parquet(legacy)
-    with open(os.path.join(c.path, "_current"), "w") as f:
-        f.write("v_legacy000000")
-    assert not c._snapshot_bucketed()
-    # every DML verb works against the legacy layout
-    c.upsert(_batch(spark, _vecs(2, offset=50)))
-    assert c._snapshot_bucketed()  # migrated on first DML
-    got = {r["id"]: r["embedding"][0] for r in c.get(["v0", "v5"]).collect()}
-    assert got == {"v0": 50.0, "v5": 5.0}
-    c.delete(ids=["v9"])
-    assert c.count() == 9
+    import pandas as pd
+
+    import fastpyvectordb_spark.catalog as cat
+
+    c = cat.Collection(spark, path, cat.CollectionConfig(dimensions=4, n_buckets=2))
+
+    def frame(rows, seqs=None):
+        pdf = pd.DataFrame({"id": [r[0] for r in rows], "embedding": [r[1] for r in rows]})
+        schema = "id string, embedding array<float>"
+        if seqs is not None:
+            pdf["_seq"] = seqs
+            schema += ", _seq long"
+        return spark.createDataFrame(pdf, schema)
+
+    # v_old1: pre-bucketing, pre-DV — plain files in the version dir
+    frame(sorted(_OLD1.items())).coalesce(1).write.parquet(
+        os.path.join(path, "v_old1")
+    )
+    # v_old2: bucketed tree with a kill of L0's first row at seq 2
+    rows = sorted(_OLD1.items()) + [("L0", _OLD2["L0"]), ("L6", _OLD2["L6"])]
+    df = frame(rows, seqs=[1] * 6 + [2, 2])
+    df.withColumn("_bucket", c._bucket()).repartition(2, "_bucket").write.partitionBy(
+        "_bucket"
+    ).parquet(os.path.join(path, "v_old2"))
+    cat._write_kills(os.path.join(path, "v_old2", "_dv"), ["L0"], 2)
+    with open(os.path.join(path, "_versions"), "w") as f:
+        for v, op in (("v_old1", "insert"), ("v_old2", "upsert")):
+            f.write(json.dumps({"version": v, "op": op, "ts": 1.0}) + "\n")
+    with open(os.path.join(path, "_current"), "w") as f:
+        f.write("v_old1")
+    with open(os.path.join(path, "_commit.lock"), "w") as f:
+        f.write("4242")  # a dead writer's lock
+    return c.config, frame
+
+
+def _rows(df):
+    return {r["id"]: [float(x) for x in r["embedding"]] for r in df.collect()}
+
+
+def _assert_migrated(c):
+    import os
+
+    for legacy in ("_current", "_versions", "_commit.lock"):
+        assert not os.path.exists(os.path.join(c.path, legacy)), legacy
+    hist = c.history()
+    assert [(h["version"], h["op"]) for h in hist] == [
+        ("v_old1", "insert"), ("v_old2", "upsert"), ("v_old1", "roll_forward"),
+    ]
+    assert sorted(
+        n for n in os.listdir(os.path.join(c.path, "_log")) if not n.startswith(".")
+    ) == [f"{s:020d}.json" for s in (1, 2, 3)]
+    assert c._current_version() == "v_old1"
+    assert _rows(c.df()) == _OLD1
+    assert _rows(c.df(version="v_old2")) == _OLD2
+
+
+@pytest.mark.slow
+def test_legacy_nonbucketed_snapshot_dml(spark, tmp_path, crash_injected):
+    """Opening a pre-log collection migrates it once: a dense log that
+    ends at the old pointer, a checkpoint manifest over pooled files for
+    both legacy layouts (time travel to each old version reads its old
+    rows), working DML on top, and a second open that mutates nothing."""
+    from fastpyvectordb_spark.catalog import Collection
+
+    path = str(tmp_path / "legacy")
+    cfg, _ = _legacy_collection(spark, path)
+    c = Collection(spark, path, cfg)
+    _assert_migrated(c)
+    files, _ = c._resolve("v_old1")
+    assert files and all(f.startswith("_files") for f in files)
+    with crash_injected(path) as steps:
+        again = Collection(spark, path, cfg)
+    assert steps["n"] == 0, "second open mutated the collection"
+    _assert_migrated(again)
+    # every DML verb works on the migrated snapshots
+    c.insert_batch(_batch(spark, [("L7", [7.0] * 4, "A")]))
+    c.upsert(_batch(spark, [("L0", [5.0] * 4, "A")]))
+    c.delete(ids=["L1"])
+    want = {**_OLD1, "L0": [5.0] * 4, "L7": [7.0] * 4}
+    del want["L1"]
+    assert _rows(c.df()) == want
+    c.restore("v_old2")
+    assert _rows(c.df()) == _OLD2
 
 
 def test_delete_on_empty_collection_is_noop(spark, db):
@@ -453,8 +526,8 @@ def test_bloom_filter_option_grows_files(spark, tmp_path):
 
 @pytest.mark.slow
 def test_commit_conflict_detection(spark, tmp_path):
-    """Optimistic concurrency: a commit built against a stale base is
-    rejected at the pointer flip and its orphan version dir removed."""
+    """Optimistic concurrency: a commit built against a stale log tail
+    is rejected at its log entry and its orphan version dir removed."""
     import os
     import pytest
     from fastpyvectordb_spark.catalog import (
@@ -470,7 +543,7 @@ def test_commit_conflict_detection(spark, tmp_path):
             "id string, embedding array<float>",
         )
     )
-    base_v = c._current_version()
+    base = c._log_tail()
     # writer B lands a commit first
     c.insert_batch(
         spark.createDataFrame(
@@ -481,30 +554,9 @@ def test_commit_conflict_detection(spark, tmp_path):
     orphan = os.path.join(c.path, "v_orphan000000")
     os.makedirs(orphan)
     with pytest.raises(CommitConflictError, match="advanced"):
-        c._finish_commit("v_orphan000000", "upsert", base=base_v)
+        c._finish_commit("v_orphan000000", "upsert", base)
     assert not os.path.exists(orphan)
-    assert c.count() == 11  # B's commit intact, pointer untouched
-
-
-def test_commit_lock_times_out_then_breaks_stale(spark, tmp_path):
-    import os
-    import pytest
-    from fastpyvectordb_spark.catalog import Collection, CollectionConfig
-
-    c = Collection(
-        spark, str(tmp_path / "lock"), CollectionConfig(dimensions=2, n_buckets=4)
-    )
-    lockp = os.path.join(c.path, "_commit.lock")
-    with open(lockp, "w") as f:
-        f.write("424242")
-    with pytest.raises(TimeoutError, match="commit lock"):
-        with c._commit_lock(timeout=0.3):
-            pass
-    # a stale holder (old mtime) is broken instead
-    os.utime(lockp, (0, 0))
-    with c._commit_lock(timeout=0.3):
-        assert True
-    assert not os.path.exists(lockp)
+    assert c.count() == 11  # B's commit intact, log tail untouched
 
 
 def test_sequential_dml_unaffected_by_occ(spark, tmp_path):
@@ -704,8 +756,9 @@ def test_files_excludes_dv_kill_files(spark, tmp_path):
 
 
 def test_first_commit_conflict_detected(spark, tmp_path):
-    """Two concurrent FIRST inserts (base=None) must conflict rather
-    than the second silently discarding the first (ADVICE r2)."""
+    """Two concurrent FIRST inserts (built on the empty log) must
+    conflict rather than the second silently discarding the first
+    (ADVICE r2)."""
     import os
     import pytest
     from fastpyvectordb_spark.catalog import (
@@ -726,7 +779,7 @@ def test_first_commit_conflict_detected(spark, tmp_path):
     orphan = os.path.join(c.path, "v_orphanfirst0")
     os.makedirs(orphan)
     with pytest.raises(CommitConflictError, match="advanced"):
-        c._finish_commit("v_orphanfirst0", "insert", base=None)
+        c._finish_commit("v_orphanfirst0", "insert", (0, None))
     assert not os.path.exists(orphan)
     assert c.count() == 1  # B's rows intact
 
@@ -822,8 +875,8 @@ def test_search_local_parity_and_version_invalidation(spark, db):
 @pytest.mark.slow
 def test_upsert_local_conflict_on_concurrent_commit(spark, db, monkeypatch):
     """The driver-local upsert path must keep the optimistic-commit
-    contract: if another writer flips the pointer between the local
-    path's snapshot read and its own flip, the local commit conflicts,
+    contract: if another writer commits between the local path's
+    snapshot read and its own log entry, the local commit conflicts,
     cleans its orphan version, and leaves the winner intact."""
     import pytest as _pytest
 
@@ -832,17 +885,17 @@ def test_upsert_local_conflict_on_concurrent_commit(spark, db, monkeypatch):
     c = db.create_collection("local_occ", dimensions=4)
     c.insert_batch(_batch(spark, _vecs(4)))
 
-    # interpose on _finish_commit: before the local upsert flips, land
+    # interpose on _finish_commit: before the local upsert logs, land
     # a competing insert through a SECOND handle on the same directory
     orig_finish = cat.Collection._finish_commit
     state = {"raced": False}
 
-    def racing_finish(self, version, op, base=None, pooled=None):
+    def racing_finish(self, version, op, tail, pooled=None):
         if op == "upsert" and not state["raced"]:
             state["raced"] = True
             other = cat.Collection(spark, c.path, c.config)
             other.insert_batch(_batch(spark, [("zz", [7.0] * 4, "A")]))
-        return orig_finish(self, version, op, base=base, pooled=pooled)
+        return orig_finish(self, version, op, tail, pooled=pooled)
 
     monkeypatch.setattr(cat.Collection, "_finish_commit", racing_finish)
     with _pytest.raises(cat.CommitConflictError, match="advanced"):
@@ -978,53 +1031,44 @@ def test_dv_compaction_bounds_kill_files(spark, tmp_path):
     assert c.count() == 100 - (_DV_COMPACT_AT + 6)
 
 
-def test_legacy_dir_version_migrates_into_pool_once(spark, tmp_path):
-    """A collection whose current version is a pre-manifest directory
-    snapshot (hard-link era) must keep working: the first manifest
-    commit hard-links the legacy files into the pool once, and both the
-    legacy version (time travel) and the new chain read correctly."""
-    import json as _json
-    import os
-    import time
+@pytest.mark.slow
+def test_legacy_dir_version_migrates_into_pool_once(
+    spark, tmp_path, crash_injected
+):
+    """The migration survives a crash before any of its mutating steps:
+    the next open finishes it, with the same log and snapshots as an
+    uninterrupted one, and the collection takes new commits."""
+    import shutil
+    from concurrent.futures import ThreadPoolExecutor
 
-    from fastpyvectordb_spark.catalog import Collection, CollectionConfig
+    from fastpyvectordb_spark.catalog import Collection
 
-    c = Collection(
-        spark, str(tmp_path / "leg"),
-        CollectionConfig(dimensions=2, n_buckets=4),
-    )
-    # hand-build a legacy-layout version: bucketed file tree INSIDE the
-    # version dir, no manifest.json
-    legacy = "v_legacy0000"
-    df = spark.createDataFrame(
-        [(f"L{i}", [float(i), 1.0], 1) for i in range(20)],
-        "id string, embedding array<float>, _seq long",
-    )
-    from fastpyvectordb_spark.catalog import Collection as _C
+    tmpl = str(tmp_path / "tmpl")
+    cfg, frame = _legacy_collection(spark, tmpl)
+    clean = shutil.copytree(tmpl, tmp_path / "clean")
+    with crash_injected(str(clean)) as steps:
+        Collection(spark, str(clean), cfg)
+    n_steps = steps["n"]
+    assert n_steps > 0
 
-    df.withColumn("_bucket", c._bucket()).repartition(4, "_bucket").write.partitionBy(
-        "_bucket"
-    ).parquet(os.path.join(c.path, legacy))
-    with open(os.path.join(c.path, "_current"), "w") as f:
-        f.write(legacy)
-    with open(os.path.join(c.path, "_versions"), "a") as f:
-        f.write(_json.dumps({"version": legacy, "op": "insert", "ts": time.time()}) + "\n")
+    def crash_at(k):
+        d = str(shutil.copytree(tmpl, tmp_path / f"k{k}"))
+        with crash_injected(d, crash_at=k), pytest.raises(crash_injected.Crash):
+            Collection(spark, d, cfg)
+        try:
+            c = Collection(spark, d, cfg)
+            _assert_migrated(c)
+            c.delete(ids=["L2"], verify_existing=False)
+            c.insert_batch(frame([("L2", [2.0] * 4)]))
+            assert _rows(c.df()) == {**_OLD1, "L2": [2.0] * 4}
+        except Exception as ex:  # report every crash point, not the first
+            first = str(ex).splitlines()[0] if str(ex) else ""
+            return f"k={k}/{n_steps}: {type(ex).__name__}: {first}"
+        return None
 
-    assert c.count() == 20
-    c.upsert(
-        spark.createDataFrame(
-            [("L0", [9.0, 9.0])], "id string, embedding array<float>"
-        )
-    )
-    v2 = c._current_version()
-    assert os.path.exists(os.path.join(c.path, v2, "manifest.json"))
-    files, dv = c._resolve(v2)
-    assert all(f.startswith("_files/") or f.startswith("_files" + os.sep) for f in files)
-    rows = {r["id"]: list(r["embedding"]) for r in c.df().collect()}
-    assert len(rows) == 20 and rows["L0"] == [9.0, 9.0]
-    # legacy version dir untouched — time travel still reads it
-    old = {r["id"]: list(r["embedding"]) for r in c.df(version=legacy).collect()}
-    assert old["L0"] == [0.0, 1.0]
+    with ThreadPoolExecutor(4) as pool:
+        failures = [f for f in pool.map(crash_at, range(1, n_steps + 1)) if f]
+    assert not failures, "; ".join(failures)
 
 
 def test_restore_then_dml_builds_on_restored_manifest(spark, tmp_path):
@@ -1233,12 +1277,14 @@ def test_pack_serving_restore_resurrects_killed_rows(spark, db):
 
 @pytest.mark.slow
 def test_pointer_flip_never_reads_empty(spark, db, tmp_path):
-    """The version pointer must flip ATOMICALLY: an in-place truncating
-    write exposes an empty pointer to concurrent readers (a healthy
-    collection transiently reads as nonexistent — caught live by the
-    round-6 HTTP hammer) and a crash in that window loses the pointer
-    entirely. Hammer the flip against a tight reader loop."""
+    """The current version must move ATOMICALLY: a reader must never
+    see a healthy collection as empty (an in-place truncating pointer
+    write once did that — caught live by the round-6 HTTP hammer).
+    Hammer log commits (restores) against a tight reader loop on a
+    second handle."""
     import threading
+
+    from fastpyvectordb_spark.catalog import Collection
 
     c = db.create_collection("ptr", dimensions=4)
     c.insert_batch(_batch(spark, _vecs(5)))
@@ -1246,24 +1292,76 @@ def test_pointer_flip_never_reads_empty(spark, db, tmp_path):
     c.upsert(_batch(spark, _vecs(2, offset=10)))
     v2 = c._current_version()
     assert v1 and v2 and v1 != v2
+    reader = Collection(spark, c.path, c.config)
     stop = threading.Event()
     seen_none = []
 
-    def reader():
+    def read():
         while not stop.is_set():
-            if c._current_version() is None:
+            if reader._current_version() is None:
                 seen_none.append(1)
                 return
 
-    t = threading.Thread(target=reader)
+    t = threading.Thread(target=read)
     t.start()
-    for _ in range(4000):
-        c._flip_pointer(v1)
-        c._flip_pointer(v2)
-    stop.set()
-    t.join()
-    assert not seen_none, "reader observed an empty/missing pointer"
+    try:
+        for _ in range(2000):
+            c.restore(v1)
+            c.restore(v2)
+    finally:
+        stop.set()
+        t.join(timeout=60)
+    assert not t.is_alive()
+    assert not seen_none, "reader observed an empty collection"
     assert c._current_version() == v2
+    assert reader._current_version() == v2
+
+
+@pytest.mark.slow
+def test_concurrent_restores_land_a_dense_log(spark, db):
+    """Put-if-absent under contention: four threads, each on its own
+    handle, each restore 50 times. Every restore lands exactly once,
+    the seqs are dense and unique, and every handle reads the same
+    history."""
+    import os
+    import sys
+    import threading
+
+    from fastpyvectordb_spark.catalog import Collection
+
+    c = db.create_collection("race", dimensions=4)
+    c.insert_batch(_batch(spark, _vecs(3)))
+    v1 = c._current_version()
+    c.upsert(_batch(spark, _vecs(1, offset=10)))
+    v2 = c._current_version()
+    n0 = len(c.history())
+    handles = [Collection(spark, c.path, c.config) for _ in range(4)]
+
+    def run(h, i):
+        for k in range(50):
+            h.restore(v1 if (i + k) % 2 else v2)
+
+    threads = [
+        threading.Thread(target=run, args=(h, i)) for i, h in enumerate(handles)
+    ]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    hist = c.history()
+    assert len(hist) == n0 + 200
+    assert [h["op"] for h in hist[n0:]] == ["restore"] * 200
+    # no temp file is left behind either
+    names = sorted(os.listdir(os.path.join(c.path, "_log")))
+    assert names == [f"{s:020d}.json" for s in range(1, n0 + 201)]
+    for h in handles:
+        assert h.history() == hist
 
 
 @pytest.mark.slow

@@ -600,3 +600,49 @@ def test_rest_search_ann_ef_search_maps_to_nprobe(api, monkeypatch):
         x["id"] for x in exact["results"]
     ]
     _req(api, "DELETE", "/collections/efc")
+
+
+@pytest.mark.slow
+def test_rest_write_routes_keep_metadata_types(api):
+    """Batch insert, upsert and text insert build their batches through
+    one Arrow-backed builder: every metadata value type the routes take
+    reads back with the same value and type, and a key that is null in
+    every row is stored as NULL instead of failing inference."""
+    status, _ = _req(
+        api, "POST", "/collections",
+        {"name": "mtypes", "dimensions": 4, "metric": "cosine"},
+    )
+    assert status == 200
+    metas = [
+        {"s": "a", "i": 7, "f": 2.5, "b": True, "n": None, "l": [1, 2]},
+        {"s": "b", "i": -3, "f": 0.0, "b": False, "n": None, "l": [3]},
+    ]
+    status, r = _req(
+        api, "POST", "/collections/mtypes/vectors/batch",
+        {"ids": ["m1", "m2"], "vectors": [[1, 0, 0, 0], [0, 1, 0, 0]],
+         "metadata": metas},
+    )
+    assert status == 200 and r["count"] == 2, r
+    up = {"s": "c", "i": 11, "f": 1.25, "b": True, "n": None, "l": [4, 5, 6]}
+    status, r = _req(
+        api, "PUT", "/collections/mtypes/vectors",
+        {"id": "m3", "vector": [0, 0, 1, 0], "metadata": up},
+    )
+    assert status == 200, r
+    status, r = _req(
+        api, "POST", "/collections/mtypes/texts",
+        {"ids": ["m4"], "texts": ["typed text"], "metadata": [up]},
+    )
+    assert status == 200 and r["count"] == 1, r
+
+    def same(got, want):
+        want = {k: v for k, v in want.items() if v is not None}
+        assert got == want
+        for k, v in want.items():
+            assert type(got[k]) is type(v), (k, got[k], v)
+
+    for vid, want in (("m1", metas[0]), ("m2", metas[1]), ("m3", up), ("m4", up)):
+        status, v = _req(api, "GET", f"/collections/mtypes/vectors/{vid}")
+        assert status == 200, v
+        same(v["metadata"], want)
+    _req(api, "DELETE", "/collections/mtypes")

@@ -8,18 +8,18 @@ Protocol (makes "lost commit" decidable):
     only DELETES ids it upserted earlier in ITS OWN sequence, so the
     expected final id set is a pure function of each worker's
     committed-op log — no cross-worker write conflicts by content,
-    every conflict is a VERSION conflict (the OCC pointer race under
-    test).
+    every conflict is a VERSION conflict (the OCC race under test: two
+    writers built on one log tail race for the same log entry).
   - a worker retries ``CommitConflictError`` with a fresh read, like
     any OCC client; only ops that RETURNED are logged as committed.
   - the parent replays the logs: every surviving upserted id must be
     present with its LAST committed embedding tag, every deleted id
-    absent, and ``count()`` must equal the replay exactly. Any
-    intervening-writer overwrite of a flipped pointer (a lost commit)
+    absent, and ``count()`` must equal the replay exactly. A commit
+    built on a stale base that still became visible (a lost commit)
     breaks one of these.
 
-Each worker is a separate JVM (``local[4]``, 3g driver) — the lock
-file and pointer flip are exercised across real process boundaries,
+Each worker is a separate JVM (``local[4]``, 3g driver) — the commit
+log's put-if-absent entry links race across real process boundaries,
 not threads sharing a py4j gateway.
 
 Usage:
@@ -113,7 +113,7 @@ def main() -> None:
     root = tempfile.mkdtemp(prefix="soakdb-")
     db = VectorDB(spark, root)
     c = db.create_collection("soak", dimensions=DIMS, metric="cosine")
-    # non-empty base so the first concurrent commits race a real pointer
+    # non-empty base so the first concurrent commits race a real tail
     seed = spark.createDataFrame(
         [(f"seed-{k}", _emb(-1), -1) for k in range(50)],
         "id string, embedding array<float>, label int",
