@@ -847,10 +847,9 @@ def main() -> None:
     # count — coarser lists mean hotter residuals than 512's 0.904
     # ceiling). n_centroids=256 full 8-bit codes — 16 B/vector at
     # rest. train_rows=90k / opq_iters=20: recall saturates there
-    # (100k/30 adds +0.0008 for 2× the training wall); the margin
-    # above the 0.90 bar is thin (~0.001-0.002 plus ±0.006 sampling
-    # noise on 256 queries), which is exactly what the retry guard
-    # below absorbs.
+    # (100k/30 adds +0.0008 for 2× the training wall). The driver
+    # trainer (ann.kmeans) makes the build deterministic: two builds in
+    # one process give identical centroids, rotation and codebooks.
     ivfpq = ivfpq_build(
         big, n_lists=None, m_subspaces=16, n_centroids=256, max_iter=20,
         train_rows=90_000, opq_iters=20,
@@ -904,24 +903,6 @@ def main() -> None:
     extras["ivfpq_recall_at_k"] = _recall_vs_exact(
         ivfpq_search_batch(ivfpq, sample_pq, k=K, nprobe=8).toPandas()
     )
-    # Recall-margin guard (VERDICT r10 #6): the raw-ADC reading sits
-    # only ~0.004 above the 0.90 bar with the chunked-f32 trainer
-    # assign, so margin noise (a slightly unlucky KMeans/OPQ draw on a
-    # different host) can print <0.90 without any kernel regression.
-    # On a low reading, retry ONCE with train_rows +50% / opq_iters
-    # +25% and report both values — a genuine kernel regression
-    # survives the retry, a margin-noise red (an unlucky distributed-
-    # KMeans aggregation order) does not.
-    if extras["ivfpq_recall_at_k"] < 0.90:
-        extras["ivfpq_first_recall_at_k"] = extras["ivfpq_recall_at_k"]
-        ivfpq_retry = ivfpq_build(
-            big, n_lists=None, m_subspaces=16, n_centroids=256,
-            max_iter=20, train_rows=135_000, opq_iters=25,
-        ).colocate()
-        extras["ivfpq_recall_at_k"] = _recall_vs_exact(
-            ivfpq_search_batch(ivfpq_retry, sample_pq, k=K, nprobe=8)
-            .toPandas()
-        )
     extras["ivfpq_refined_recall_at_k"] = _recall_vs_exact(
         ivfpq_search_batch(
             ivfpq, sample_pq, k=K, nprobe=32, refine_df=big, refine=200

@@ -22,9 +22,9 @@ free from two existing pieces:
 Centroids retrain only when the corpus has drifted past
 ``rebuild_threshold`` since training (rows added/updated/removed as a
 fraction of the live set) — the merge-policy shape (Lucene/FAISS):
-bounded staleness, amortized rebuilds. Training itself is the
-distributed :func:`ann.ivf.ivf_build` (MLlib KMeans) — correct at any
-scale; only the packed serving twin is size-gated (oversize
+bounded staleness, amortized rebuilds. Training itself is
+:func:`ann.kmeans.train` on a bounded sample of the live rows — correct
+at any scale; only the packed serving twin is size-gated (oversize
 collections serve through the distributed IVF operators instead).
 
 Persistence mirrors the reference's ``index.bin``+state: centroids as
@@ -51,6 +51,7 @@ import uuid
 import numpy as np
 
 from fastpyvectordb_spark.ann.ivf import IVFPacked, ivf_search_local
+from fastpyvectordb_spark.ann import kmeans
 
 REBUILD_THRESHOLD = 0.3  # retrain centroids past this drift fraction
 
@@ -177,44 +178,36 @@ class CollectionANN:
         seed: int = 42,
         train_rows: int | None = 200_000,
     ) -> dict:
-        """Fit coarse centroids over the live rows (distributed MLlib
-        KMeans via :func:`ivf_build`; the fit is bounded to a sample at
-        scale) and persist them keyed to the current version."""
-        from fastpyvectordb_spark.ann.ivf import ivf_build
-
+        """Fit coarse centroids over a bounded sample of the live rows
+        (:func:`ann.kmeans.train`) and persist them keyed to the
+        current version."""
         n, seq_max = self._watermark()
         if n_lists is None:
             # √N, same rule and ceiling as ivf_build (r12: the old 256
-            # clamp predated the _list_id UDF dispatch — every caller
-            # of list assignment (distributed fallback, at-rest
-            # clustering, batch fallback) routes through _list_id,
+            # clamp predated the assign_col dispatch — every caller of
+            # list assignment (distributed fallback, at-rest
+            # clustering, batch fallback) routes through assign_col,
             # which switches from the codegen expression to the
-            # Arrow-GEMM pandas_udf above _CODEGEN_MAX_CENTROID_FLOATS
-            # (1,024 floats ≈ 16 centroids at 64 dims), so no Janino
-            # mega-expression can arise at ANY list count; clusterer
-            # and fallback share the one dispatcher, so footer-stat
-            # pruning sees the identical assignment it was written
-            # under). √N keeps probe-pruned scan fractions flat as the
-            # collection grows: 1M rows → 1,000 lists instead of a
-            # 4× coarser 256.
+            # Arrow-GEMM pandas_udf above 1,024 centroid floats (≈ 16
+            # centroids at 64 dims), so no Janino mega-expression can
+            # arise at ANY list count; clusterer and fallback share the
+            # one dispatcher, so footer-stat pruning sees the identical
+            # assignment it was written under). √N keeps probe-pruned
+            # scan fractions flat as the collection grows: 1M rows →
+            # 1,000 lists instead of a 4× coarser 256.
             n_lists = int(max(8, min(65536, round(np.sqrt(max(n, 1))))))
         n_lists = min(n_lists, max(1, n))
-        idx = ivf_build(
-            self.c.df(),
-            n_lists=n_lists,
-            vec_col="embedding",
-            seed=seed,
-            max_iter=max_iter,
-            # n is already known — don't make ivf_build re-count just
-            # to conclude no sampling is needed
-            train_rows=None if n <= (train_rows or 0) else train_rows,
+        # n is already known: the sample needs no count job
+        sample = kmeans.fit_sample(
+            self.c.df(), "embedding", n_lists, seed, n, train_rows
         )
+        centroids = kmeans.train(sample, n_lists, max_iter, seed)
         # swap centroids+meta and invalidate the derived state under
         # the refresh lock (RLock — ensure() may already hold it):
         # _assign_pack reads self.centroids more than once, so a public
         # build_ann_index() racing a locked refresh must serialize
         with self._refresh_lock:
-            self.centroids = idx.centroids
+            self.centroids = centroids
             self.meta = {
                 "kind": "ivf",
                 "metric": self.c.config.metric,
@@ -268,15 +261,7 @@ class CollectionANN:
         for the caller to publish atomically."""
         vmat = pack["vmat"]  # (N, D) f32, id-ascending
         n = vmat.shape[0]
-        c32 = self.centroids.astype(np.float32)
-        csq = np.einsum("ij,ij->i", c32, c32)
-        lists = np.empty(n, dtype=np.int64)
-        for lo in range(0, n, 65536):
-            hi = min(lo + 65536, n)
-            d = vmat[lo:hi] @ c32.T
-            d *= np.float32(-2.0)
-            d += csq[None, :]
-            lists[lo:hi] = np.argmin(d, axis=1)
+        lists = kmeans.assign(vmat, self.centroids)
         # stable sort by list keeps the pack's id-ascending order
         # inside each list — ivf_pack's (list, id) contract
         order = np.argsort(lists, kind="stable")
@@ -420,90 +405,6 @@ class CollectionANN:
 
     # -- search -------------------------------------------------------
 
-    # above this many centroid floats the per-row Catalyst argmin is
-    # slower than one Arrow-batched NumPy GEMM per partition: the 1M-row
-    # spot check measured the 256-list codegen argmin at ~190 s/query vs
-    # 4 s for the GEMM form, and the 64-list bench shape (4,096 floats)
-    # still paid ~11 s/query — the Arrow round-trip amortizes out well
-    # below that, so only genuinely small centroid sets stay codegen
-    _CODEGEN_MAX_CENTROID_FLOATS = 1024
-
-    def _list_id(self, vec_col, centroids, prefer_udf: bool | None = None):
-        """Nearest-centroid list id column — codegen for small centroid
-        sets (pure Catalyst, zero Python), vectorized pandas_udf (one
-        f64 GEMM per Arrow batch) when ``n_lists × dims`` is large.
-        Both pick argmin by L2 with ties to the lower id; the GEMM form
-        rounds ``v·v − 2v·c + c·c`` instead of ``Σ(v−c)²``, which can
-        flip EXACT Voronoi-boundary ties — an approximation wobble ANN
-        probing already tolerates (exhaustive probes are unaffected:
-        every list is probed, so assignment never drops a row)."""
-        use_udf = (
-            centroids.size > self._CODEGEN_MAX_CENTROID_FLOATS
-            if prefer_udf is None
-            else prefer_udf
-        )
-        if use_udf:
-            return self._list_id_udf(centroids)(vec_col)
-        return self._list_id_expr(vec_col, centroids)
-
-    @staticmethod
-    def _list_id_udf(centroids):
-        """Arrow-batched assignment kernel: (B, D) @ (D, L) f64 GEMM +
-        argmin (first minimum = lowest cid, matching the codegen tie
-        rule)."""
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        c64 = np.ascontiguousarray(centroids, dtype=np.float64)
-        csq = np.einsum("ij,ij->i", c64, c64)
-
-        def lid(v):
-            if len(v) == 0:
-                return pd.Series([], dtype="int32")
-            vm = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in v]
-            )
-            d = vm @ c64.T
-            d *= -2.0
-            d += csq[None, :]
-            return pd.Series(np.argmin(d, axis=1).astype(np.int32))
-
-        # real annotation objects: the module uses `from __future__
-        # import annotations`, and PySpark's hint inference can't
-        # resolve stringified locals
-        lid.__annotations__ = {"v": pd.Series, "return": pd.Series}
-        return pandas_udf(lid, "int")
-
-    def _list_id_expr(self, vec_col, centroids):
-        """Nearest-centroid list id as a pure-codegen expression over
-        LITERAL centroids (L2 argmin, ties to the lower id — the MLlib
-        assignment rule): zero joins, zero shuffles, evaluated inside
-        the scan. Folded in 64-centroid chunks so each expression tree
-        stays modest (struct ``least`` compares (d², cid)
-        lexicographically)."""
-        from pyspark.sql import functions as F
-
-        structs = []
-        for cid, c in enumerate(centroids):
-            lit = F.array(*[F.lit(float(x)) for x in c])
-            d2 = F.aggregate(
-                F.zip_with(
-                    vec_col.cast("array<double>"),
-                    lit,
-                    lambda a, b: (a - b) * (a - b),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            structs.append(
-                F.struct(d2.alias("d"), F.lit(cid).alias("cid"))
-            )
-        best = None
-        for lo in range(0, len(structs), 64):
-            m = F.array_min(F.array(*structs[lo : lo + 64]))
-            best = m if best is None else F.least(best, m)
-        return best["cid"]
-
     def search_distributed(
         self, query_vecs, k: int = 10, nprobe: int | None = None
     ) -> list[list[tuple[str, float]]]:
@@ -532,7 +433,7 @@ class CollectionANN:
         from fastpyvectordb_spark.ann.ivf import _resolve_nprobe
 
         nprobe = _resolve_nprobe(nprobe, cents.shape[0])
-        lid = self._list_id(F.col("embedding"), cents)
+        lid = kmeans.assign_col(F.col("embedding"), cents)
         # at-rest clustering (optimize(ann_cluster=True)): plan the
         # probe against footer stats — files whose [min,max] list
         # interval misses every probe never get scanned, and the
@@ -662,7 +563,7 @@ class CollectionANN:
                         ).drop("_ann_list")
         if sub is None:
             sub = self.c.df()
-        lid = self._list_id(F.col("embedding"), cents)
+        lid = kmeans.assign_col(F.col("embedding"), cents)
         # (query, probed list) pairs PRE-EXPLODED on the driver (tiny:
         # nq × nprobe rows) so the probe attach is an EQUI-join on the
         # list id — the old array_contains(probes, _lid) condition made

@@ -3,8 +3,9 @@
 The classic batch-built ANN index for a data-parallel engine
 (BASELINE.json: "MLlib/DataFrame batch index build"):
 
-1. build: MLlib KMeans (seeded) → ``n_lists`` coarse centroids; each
-   vector is assigned to its nearest list. Persisting the table
+1. build: seeded KMeans (:mod:`ann.kmeans`, k-means|| + GEMM Lloyd on a
+   bounded driver sample) → ``n_lists`` coarse centroids; each vector
+   is assigned to its nearest list by a Spark column. Persisting the table
    *partitioned by list_id* turns every probe into partition pruning —
    at 100 TB a 4096-list index means a 16-probe query reads ~0.4% of
    the data.
@@ -26,6 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fastpyvectordb_spark.ann.kmeans import assign_col, fit_sample, train
 from fastpyvectordb_spark.operators.knn import knn
 
 
@@ -139,67 +141,6 @@ class IVFPacked:
     sqnorms: np.ndarray    # (N,) float32 — ||v||² (l2)
 
 
-# above this many (rows × lists) work units, MLlib KMeans' per-row
-# per-centroid scalar loop (in fit iterations AND transform
-# prediction) is replaced by GEMM-batched twins: driver Lloyd on the
-# bounded sample + the Arrow-batched assignment kernel. 1e9 ≈ a
-# minute of the scalar path on this box; the 10M×3162 spotcheck shape
-# (3.2e10) measured as a multi-hour stall vs minutes of batched GEMM.
-# Bench and suite shapes (≤100k×512 = 5.1e7) stay on MLlib —
-# bit-identical to every recorded operating point.
-_MLLIB_ASSIGN_MAX_WORK = 1_000_000_000
-
-
-def _train_coarse_gemm(
-    sample: np.ndarray, k: int, max_iter: int, seed: int
-) -> np.ndarray:
-    """Driver-side Lloyd for LARGE-k coarse quantizers: chunked f32
-    GEMM assignment (the OPQ trainer's discipline — selection only
-    needs per-row argmin order, means accumulate in f64) over a
-    bounded in-RAM sample. Init = seeded random subset without
-    replacement (the FAISS coarse-quantizer standard; k-means++ at
-    k≈√N costs another O(k·n·d) pass for little coarse-level gain).
-    Empty clusters keep their previous centroid, like the PQ Lloyd.
-    Deterministic for fixed (sample, k, max_iter, seed)."""
-    n, d = sample.shape
-    k = min(k, n)
-    rng = np.random.RandomState(seed)
-    cents = sample[rng.choice(n, size=k, replace=False)].astype(np.float64)
-    x32 = np.ascontiguousarray(sample, dtype=np.float32)
-    from fastpyvectordb_spark.session import driver_pool, driver_pool_workers
-
-    # every pool worker holds one (chunk, k) f32 score matrix: the
-    # workers split a 16M-float budget, so together they peak at
-    # ≈ 64 MB of scores whatever the core count
-    chunk = max(1, 16_000_000 // (max(k, 1) * driver_pool_workers()))
-    codes = np.empty(n, dtype=np.int64)
-
-    def assign(s: int) -> None:
-        e = min(s + chunk, n)
-        sc = x32[s:e] @ c32.T
-        sc *= -2.0
-        sc += csq[None, :]
-        codes[s:e] = np.argmin(sc, axis=1)
-
-    for _ in range(max_iter):
-        c32 = cents.astype(np.float32)
-        csq = np.einsum("ij,ij->i", c32, c32)
-        # chunks write disjoint codes[s:e] with the same GEMM shapes as
-        # a serial loop, so pooling leaves the codes bit-identical
-        list(driver_pool().map(assign, range(0, n, chunk)))
-        cnt = np.bincount(codes, minlength=k)
-        acc = np.stack(
-            [
-                np.bincount(codes, weights=sample[:, j], minlength=k)
-                for j in range(d)
-            ],
-            axis=1,
-        )
-        nz = cnt > 0
-        cents[nz] = acc[nz] / cnt[nz][:, None]
-    return cents
-
-
 def ivf_build(
     df: DataFrame,
     n_lists: int | None = 16,
@@ -211,118 +152,23 @@ def ivf_build(
     """Coarse-quantizer training quality is the whole recall game:
     round 1 trained with maxIter=5 and paid for it (ivf recall 0.87,
     ivfpq refined 0.72 at sf-bench knobs); at maxIter=20 the same index
-    shapes reach ≥0.95. ``train_rows`` bounds the KMeans fit to a
-    sample (standard at 100 TB — fit on ~1M rows, assign everything);
-    assignment always covers the full table. ``n_lists=None``
-    auto-sizes to ≈√N clamped to [16, 65536] (the same FAISS rule as
+    shapes reach ≥0.95. Training is :func:`ann.kmeans.train` on a
+    bounded driver sample (``train_rows`` rows, else the FAISS rule of
+    ~256 per list with a 100K floor — fit on a sample, assign
+    everything); assignment always covers the full table through
+    :func:`ann.kmeans.assign_col`. ``n_lists=None`` auto-sizes to ≈√N
+    clamped to [16, 65536] (the same FAISS rule as
     :func:`ann.ivfpq.ivfpq_build`) — at 100k that is 316 lists, where
     the packed serving kernel measured 10,182 QPS at recall 1.0 on the
     bench corpus vs 5,620 at the old fixed-64 point (8 probes scan
     2.5% of rows instead of 12.5%)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
+    n_rows = None
     if n_lists is None:
         n_rows = df.count()
         n_lists = max(16, min(65536, int(round(n_rows ** 0.5))))
-    if n_lists < 2:
-        # MLlib KMeans rejects k=1 (hit live: optimize(ann_cluster) on
-        # a collection DML'd down to one row trains with n_lists
-        # clamped to the row count). One list = one centroid = the
-        # per-dimension column mean — a dim-keyed distributed agg
-        # (posexplode → groupBy(dim) → avg: D groups, never collects
-        # vectors), no fit. Assignment is trivially list 0.
-        mean_rows = (
-            df.select(
-                F.posexplode(F.col(vec_col).cast("array<double>")).alias(
-                    "_dim", "_x"
-                )
-            )
-            .groupBy("_dim")
-            .agg(F.avg("_x").alias("_m"))
-            .orderBy("_dim")
-            .collect()  # bounded: D rows
-        )
-        centroid = np.asarray([r["_m"] for r in mean_rows], dtype=np.float64)
-        assigned = df.withColumn("list_id", F.lit(0))
-        return IVFIndex(centroids=centroid[None, :], assigned=assigned)
-
-    feats = df.withColumn("_features", array_to_vector(F.col(vec_col).cast("array<double>")))
-    fit_df = feats
-    n_rows: int | None = None
-    if train_rows is not None:
-        n_rows = feats.count()
-        if n_rows > train_rows:
-            fit_df = feats.sample(
-                fraction=min(1.0, train_rows * 1.1 / n_rows), seed=seed
-            ).limit(train_rows)
-    if n_rows is None and (
-        n_lists >= 1024 or n_lists > _MLLIB_ASSIGN_MAX_WORK
-    ):
-        # only pay a count job when the list count alone says the
-        # work threshold is reachable (callers below 1024 lists would
-        # need >1M rows to cross it, and those pass train_rows — which
-        # already counted; the second clause exists for tests that
-        # shrink the threshold)
-        n_rows = feats.count()
-
-    # Large-k regime (round 11, found LIVE on the 10M spotcheck —
-    # stage 97 sat at ~4 busy cores for 30+ minutes): MLlib KMeans
-    # runs a per-row per-centroid scalar loop (norm-pruned but
-    # unbatched) in BOTH fit() iterations and transform() prediction.
-    # At 10M rows × 3162 lists that is ~4×10¹² scalar flops — hours —
-    # while the same work as batched GEMMs is minutes. Above the work
-    # threshold: train driver-side on the bounded sample with chunked
-    # f32 GEMM Lloyd (the OPQ trainer's discipline — FAISS-standard
-    # random-subset init, empty clusters keep their previous
-    # centroid), and assign the full table with the collection
-    # index's Arrow-batched GEMM kernel. Below it everything stays
-    # MLlib — bit-identical to every recorded operating point.
-    fit_work = (
-        min(n_rows, train_rows or n_rows) * n_lists
-        if n_rows is not None
-        else 0
-    )
-    if fit_work > _MLLIB_ASSIGN_MAX_WORK:
-        if train_rows is None:
-            # no caller-provided bound: cap the driver sample at the
-            # FAISS heuristic (~256 points per centroid) so a huge
-            # table is never collected whole
-            cap = max(256 * n_lists, 100_000)
-            if n_rows > cap:
-                fit_df = feats.sample(
-                    fraction=min(1.0, cap * 1.1 / n_rows), seed=seed
-                ).limit(cap)
-        sample_tbl = fit_df.select(
-            F.col(vec_col).cast("array<double>").alias("_v")
-        ).toArrow()
-        flat = sample_tbl["_v"].combine_chunks()
-        n_s = len(sample_tbl)
-        sample = np.asarray(flat.flatten(), dtype=np.float64).reshape(
-            n_s, -1
-        )
-        centroids = _train_coarse_gemm(sample, n_lists, max_iter, seed)
-        from fastpyvectordb_spark.ann.collection_index import CollectionANN
-
-        lid = CollectionANN._list_id_udf(centroids)
-        assigned = df.withColumn("list_id", lid(F.col(vec_col)))
-        return IVFIndex(centroids=centroids, assigned=assigned)
-
-    model = KMeans(k=n_lists, seed=seed, maxIter=max_iter, featuresCol="_features").fit(fit_df)
-    centroids = np.stack([np.asarray(c) for c in model.clusterCenters()])
-    if n_rows is not None and n_rows * n_lists > _MLLIB_ASSIGN_MAX_WORK:
-        # fit was small enough for MLlib but the full-table assignment
-        # is not (e.g. a bounded fit sample over a huge table)
-        from fastpyvectordb_spark.ann.collection_index import CollectionANN
-
-        lid = CollectionANN._list_id_udf(centroids)
-        assigned = df.withColumn("list_id", lid(F.col(vec_col)))
-    else:
-        assigned = (
-            model.transform(feats)
-            .withColumnRenamed("prediction", "list_id")
-            .drop("_features")
-        )
+    sample = fit_sample(df, vec_col, n_lists, seed, n_rows, train_rows)
+    centroids = train(sample, n_lists, max_iter, seed)
+    assigned = df.withColumn("list_id", assign_col(F.col(vec_col), centroids))
     return IVFIndex(centroids=centroids, assigned=assigned)
 
 
@@ -849,32 +695,13 @@ def ivf_add(
     vec_col: str = "embedding",
 ) -> IVFIndex:
     """Incremental index maintenance: assign NEW vectors to their
-    nearest existing list (broadcast-centroid argmin expression — one
-    narrow pass over the new rows, no retrain, no touch of existing
+    nearest existing list (:func:`ann.kmeans.assign_col` — one narrow
+    pass over the new rows, no retrain, no touch of existing
     assignments) and union them in. Returns a new IVFIndex sharing the
     centroids — the standard IVF ingest path; periodic re-train is a
     separate maintenance job (rebuild with ivf_build)."""
-    spark = new_df.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(index.centroids)],
-        "list_id int, cvec array<double>",
-    )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col(vec_col), F.col("cvec"),
-            lambda v, c: (v.cast("double") - c) * (v.cast("double") - c),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    from pyspark.sql import Window
-
-    scored = new_df.crossJoin(F.broadcast(cent_df)).withColumn("_d2", d2)
-    w = Window.partitionBy(id_col).orderBy("_d2", "list_id")
-    assigned_new = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_d2", "_rn", "cvec")
+    assigned_new = new_df.withColumn(
+        "list_id", assign_col(F.col(vec_col), index.centroids)
     )
     merged = index.assigned.unionByName(assigned_new)
     return IVFIndex(centroids=index.centroids, assigned=merged)

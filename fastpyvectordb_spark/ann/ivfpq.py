@@ -6,10 +6,11 @@ partitioning is what its HNSW layer buys; PQ codes are its
 (Jégou et al., "Product Quantization for Nearest Neighbor Search",
 TPAMI 2011) — re-expressed for a data-parallel engine:
 
-- **build** is a Spark pipeline: MLlib KMeans coarse lists → residual
-  expression (``zip_with`` subtract against a broadcast centroid table)
-  → PQ codebooks trained on a residual *sample* (MLlib KMeans per
-  subspace) → Arrow-batched pandas encoder → a *codes table*
+- **build**: KMeans coarse lists (:mod:`ann.kmeans`) → PQ codebooks
+  trained on the residuals of a bounded driver *sample* (batched
+  :func:`ann.kmeans.train` per subspace, OPQ-rotated by default) → one
+  Arrow-batched pandas pass that assigns each row its list and encodes
+  its residual → a *codes table*
   ``(id, list_id, codes ARRAY<INT>)`` that is M bytes per vector
   instead of 4·D. Saved partitioned by ``list_id``.
 - **search** reads only the probed lists (partition pruning at rest,
@@ -52,6 +53,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from fastpyvectordb_spark.ann.kmeans import assign, fit_sample, train
 
 
 def _code_offsets(m_subspaces: int, n_centroids: int) -> np.ndarray:
@@ -203,213 +206,6 @@ class IVFPQIndex:
         return self
 
 
-def _train_residual_codebooks(
-    residuals: DataFrame,
-    m_subspaces: int,
-    n_centroids: int,
-    dims: int,
-    seed: int,
-    max_iter: int,
-    train_rows: int,
-) -> np.ndarray:
-    """MLlib KMeans per subspace on a bounded residual sample (training
-    on a sample is standard PQ practice). The sample is MATERIALIZED
-    once (localCheckpoint): the residual pipeline upstream is an
-    IVF-assign transform + broadcast join, and without the checkpoint
-    the count, every one of the M KMeans fits, and the sample itself
-    would re-run it — and a re-evaluated sample() need not yield the
-    same rows, so the M subspace codebooks could train on different
-    data."""
-    from fastpyvectordb_spark.operators.quantization import pq_train_kmeans
-
-    n = residuals.count()  # one sizing pass; nothing materialized yet
-    if n > train_rows:
-        residuals = residuals.sample(
-            fraction=min(1.0, train_rows * 1.1 / n), seed=seed
-        ).limit(train_rows)
-    # materialize the BOUNDED set only (≤ train_rows rows), never the
-    # full residual table
-    residuals = residuals.localCheckpoint()
-    cb = pq_train_kmeans(
-        residuals,
-        m_subspaces,
-        n_centroids,
-        dims,
-        vec_col="residual",
-        seed=seed,
-        max_iter=max_iter,
-    ).collect()
-    sub = dims // m_subspaces
-    cents = np.zeros((m_subspaces, n_centroids, sub), dtype=np.float64)
-    for r in cb:
-        cents[r["m"], r["cidx"]] = np.asarray(r["cvec"], dtype=np.float64)
-    return cents
-
-
-def _kmeanspp_init(xs: np.ndarray, k: int, r: np.random.RandomState) -> np.ndarray:
-    """k-means++ seeding (Arthur & Vassilvitskii 2007) — at K=256 on a
-    20k sample, random init leaves duplicate/dead centroids that cost
-    ~0.01 raw recall; ++ seeding removes that failure mode."""
-    n = len(xs)
-    cents = np.empty((k, xs.shape[1]), dtype=np.float64)
-    cents[0] = xs[r.randint(n)]
-    d2 = ((xs - cents[0]) ** 2).sum(1)
-    for j in range(1, k):
-        tot = d2.sum()
-        if tot <= 0:  # fewer distinct points than centroids
-            cents[j:] = xs[r.choice(n, k - j)]
-            break
-        cents[j] = xs[r.choice(n, p=d2 / tot)]
-        d2 = np.minimum(d2, ((xs - cents[j]) ** 2).sum(1))
-    return cents
-
-
-def _subspace_map(fn, m_subspaces: int, n_rows: int) -> None:
-    """Run ``fn(m)`` for every subspace, pooled when the work is big
-    enough to pay for threads. Subspaces are arithmetically independent
-    (disjoint input slices, disjoint output slices), so pooled results
-    are bit-identical to the serial loop — determinism pins
-    (test_opq_trainer_properties) hold. The per-m body is GIL-releasing
-    NumPy (tiny inner-dim GEMMs, argmin, bincount) over large slices:
-    exactly the regime where the repo's driver-side pools win (README
-    "which local kernels pool"); the small-shape cutoff keeps unit-test
-    shapes on the serial path.
-
-    Concurrency is capped at 8 pool threads: the per-m bodies saturate
-    memory bandwidth well before 16 (measured on the r11 host: nt=16
-    ran 1.6× SLOWER than serial from cache thrash). BLAS adds no
-    threads of its own: ``session.get_spark`` runs the driver's
-    OpenBLAS on one thread, so the pool is the only parallelism."""
-    import os
-
-    nt = min(m_subspaces, os.cpu_count() or 1, 8)
-    if nt <= 1 or n_rows * m_subspaces < (1 << 16):
-        for m in range(m_subspaces):
-            fn(m)
-        return
-    from fastpyvectordb_spark.session import driver_pool
-
-    for _ in driver_pool().map(fn, range(m_subspaces)):
-        pass
-
-
-def _pq_prepare(x3: np.ndarray) -> np.ndarray:
-    """(n, M, sub) f64 → C-contiguous (M, n, sub) f32 in ONE pass.
-    The old per-subspace ``ascontiguousarray(x3[:, m], f32)`` re-read
-    the entire sample's cache lines M times per assign (strided
-    middle-axis slice) — on a bandwidth-bound host that copy traffic
-    rivalled the GEMM's. Element-wise f64→f32 conversion is identical
-    either way, so codes are bit-identical."""
-    return np.ascontiguousarray(x3.transpose(1, 0, 2), dtype=np.float32)
-
-
-def _pq_assign_prepared(xT: np.ndarray, cbs: np.ndarray) -> np.ndarray:
-    """Assign against a ``_pq_prepare``d sample. Distance surrogate per
-    chunk: ``b = x @ (−2·cbᵀ); b += ‖cb‖²; argmin`` — the −2 is folded
-    into the (tiny) codebook operand because scaling by a power of two
-    is exact in IEEE f32 and commutes with the GEMM's rounding, so the
-    fold is bit-identical to the old separate ``b *= −2`` pass while
-    removing a full read+write sweep of the distance buffer (the
-    kernel is memory-bound: that pass was ~1/3 of its traffic)."""
-    m_subspaces, n, _ = xT.shape
-    n_centroids = cbs.shape[1]
-    codes = np.empty((n, m_subspaces), dtype=np.int64)
-    chunk = 8192
-
-    def run_m(m: int) -> None:
-        # ascontiguousarray (ADVICE r11 #1): .T.astype(order='K') gave
-        # an F-contiguous operand — the fold itself is exact either
-        # way, but pinning the C layout keeps the GEMM on the SAME
-        # transpose kernel as the pinned naive reference. The codes
-        # match that reference per BLAS build and thread count only:
-        # another build may sum in another order and flip a rare tie
-        cb_t2 = np.ascontiguousarray(cbs[m].T, dtype=np.float32)
-        cb_t2 *= np.float32(-2.0)
-        cb_n2 = (cbs[m] ** 2).sum(1).astype(np.float32)
-        xm = xT[m]
-        buf = np.empty((min(chunk, n), n_centroids), dtype=np.float32)
-        for s in range(0, n, chunk):
-            e = min(s + chunk, n)
-            b = buf[: e - s]
-            np.dot(xm[s:e], cb_t2, out=b)
-            b += cb_n2[None, :]
-            codes[s:e, m] = b.argmin(1)
-
-    _subspace_map(run_m, m_subspaces, n)
-    return codes
-
-
-def _pq_assign_all(x3: np.ndarray, cbs: np.ndarray) -> np.ndarray:
-    """(n, M) codes — nearest codebook entry per subspace. Per-subspace
-    f32 BLAS GEMM into a chunked buffer (||x||² dropped: constant per
-    row, argmin-invariant). TRAINER-internal assignment only (the
-    production encoder in ivfpq_build stays float64): f32 is fine for
-    Lloyd/Procrustes iterates, and the full-matrix f64 form wrote
-    1.6 GB of temporaries per 50k-row assign — the chunked f32 buffer
-    stays cache-resident and measured ~4× faster end-to-end."""
-    return _pq_assign_prepared(_pq_prepare(x3), cbs)
-
-
-def _pq_lloyd_all(
-    x3: np.ndarray,
-    cbs: np.ndarray,
-    iters: int,
-    xT: np.ndarray | None = None,
-    x64T: np.ndarray | None = None,
-) -> np.ndarray:
-    """Batch Lloyd over all M subspaces; dead centroids stay put (the
-    ++ init makes them rare on real residuals). Centroid update via
-    per-dimension bincount (np.add.at is ~10× slower here); updates
-    keep reading the f64 sample (unchanged numerics) while the assigns
-    share ONE f32 transpose hoisted out of the iteration loop. The
-    per-m updates write disjoint ``cbs[m]`` rows, so they pool like
-    the assign. Callers that already hold the sample's transposes
-    (``_train_opq`` prepares each rotation exactly once and reuses it
-    across the iteration's assign + Lloyd calls — r12: the r11 loop
-    re-transposed the identical 90k×64 rotation up to 3× per OPQ
-    iteration, ~2.5 s of pure copy traffic at the bench point) pass
-    them in; values are identical by construction (same input array,
-    same element-wise conversion)."""
-    m_subspaces, n_centroids, sub = cbs.shape
-    n = x3.shape[0]
-    if xT is None:
-        xT = _pq_prepare(x3)
-    # f64 twin of the transpose for the centroid update: bincount must
-    # keep averaging the ORIGINAL f64 values (numerics unchanged), but
-    # the strided x3[:, m, j] reads touched every sample cache line
-    # M·sub times per update — one contiguous copy removes that
-    if x64T is None:
-        x64T = np.ascontiguousarray(x3.transpose(1, 0, 2))
-
-    def upd_m_factory(codes):
-        def upd_m(m: int) -> None:
-            # contiguous copy once: the strided codes[:, m] column
-            # would re-touch every row's cache line for EACH of the
-            # sub+1 bincounts below
-            cm = np.ascontiguousarray(codes[:, m])
-            cnt = np.bincount(cm, minlength=n_centroids)
-            xm64 = x64T[m]
-            sums = np.stack(
-                [
-                    np.bincount(
-                        cm, weights=xm64[:, j],
-                        minlength=n_centroids,
-                    )
-                    for j in range(sub)
-                ],
-                axis=1,
-            )
-            nz = cnt > 0
-            cbs[m][nz] = sums[nz] / cnt[nz][:, None]
-
-        return upd_m
-
-    for _ in range(iters):
-        codes = _pq_assign_prepared(xT, cbs)
-        _subspace_map(upd_m_factory(codes), m_subspaces, n)
-    return cbs
-
-
 def _train_opq(
     sample: np.ndarray,
     m_subspaces: int,
@@ -424,56 +220,31 @@ def _train_opq(
     init + warm-started codebooks: on the bench corpus this beat both
     PCA-eigenvalue-balanced init and cold restarts (measured r10 —
     PCA init landed in a worse local optimum, 0.864 vs 0.884 raw
-    recall). Everything is driver-side NumPy on the BOUNDED sample
-    (≤ train_rows rows ≈ 10 MB at 20k×64) — deterministic, seconds,
-    and scale-independent because the sample is."""
+    recall). Every codebook pass is the batched :func:`ann.kmeans.train`
+    (8 seeded passes, 3 warm-started per rotation, 8 to finish) on the
+    BOUNDED driver sample (≤ train_rows rows ≈ 10 MB at 20k×64) —
+    deterministic, seconds, and scale-independent because the sample
+    is."""
     n, dims = sample.shape
     sub = dims // m_subspaces
-    x3 = sample.reshape(n, m_subspaces, sub)
-    # per-subspace ++ inits are independent (each has its own seeded
-    # RandomState), so they pool like the assign — same draws, same
-    # centroids as the serial loop
-    inits: list[np.ndarray | None] = [None] * m_subspaces
 
-    def init_m(m: int) -> None:
-        inits[m] = _kmeanspp_init(
-            np.ascontiguousarray(x3[:, m]),
-            n_centroids,
-            np.random.RandomState(seed + m),
-        )
+    def split(x: np.ndarray) -> np.ndarray:
+        """(n, D) → the (M, n, sub) subspace layout of kmeans.train."""
+        return x.reshape(n, m_subspaces, sub).transpose(1, 0, 2)
 
-    _subspace_map(init_m, m_subspaces, n)
-    cbs = np.stack(inits)
-    # each rotation of the sample is transposed exactly ONCE (f32 for
-    # the assigns, f64 for the Lloyd updates) and shared by every
-    # assign/Lloyd pass over that rotation — the r11 shape re-derived
-    # these identical copies inside _pq_assign_all and _pq_lloyd_all
-    # (up to 3 re-transposes of the same 90k×64 array per OPQ
-    # iteration). Same input array + same element-wise conversion →
-    # bit-identical codes and centroids (pinned by
-    # test_pq_assign_matches_naive_reference / _trainer_properties).
-    xT = _pq_prepare(x3)
-    x64T = np.ascontiguousarray(x3.transpose(1, 0, 2))
-    cbs = _pq_lloyd_all(x3, cbs, 8, xT=xT, x64T=x64T)
+    x3 = split(sample)
+    cbs = train(x3, n_centroids, 8, seed)
     rot = np.eye(dims)
-    dec = np.empty((n, dims))
     for _ in range(opq_iters):
-        # xT always holds the CURRENT rotation (identity on entry)
-        codes = _pq_assign_prepared(xT, cbs)
-        for m in range(m_subspaces):
-            dec[:, m * sub:(m + 1) * sub] = cbs[m][codes[:, m]]
+        codes = assign(np.ascontiguousarray(x3, dtype=np.float32), cbs)
+        dec = np.concatenate(
+            [cbs[m][codes[m]] for m in range(m_subspaces)], axis=1
+        )
         u, _, vt = np.linalg.svd(sample.T @ dec)
         rot = (u @ vt).T
-        rotated = sample @ rot.T
-        x3r = rotated.reshape(n, m_subspaces, sub)
-        xT = _pq_prepare(x3r)
-        x64T = np.ascontiguousarray(x3r.transpose(1, 0, 2))
-        cbs = _pq_lloyd_all(x3r, cbs, 3, xT=xT, x64T=x64T)
-    if opq_iters > 0:
-        cbs = _pq_lloyd_all(x3r, cbs, 8, xT=xT, x64T=x64T)
-    else:
-        cbs = _pq_lloyd_all(x3, cbs, 8, xT=xT, x64T=x64T)
-    return rot, cbs
+        x3 = split(sample @ rot.T)
+        cbs = train(x3, n_centroids, 3, seed, init=cbs)
+    return rot, train(x3, n_centroids, 8, seed, init=cbs)
 
 
 def ivfpq_build(
@@ -495,9 +266,9 @@ def ivfpq_build(
     ``coarse_train_rows`` bounds the COARSE KMeans fit to a sample
     (fit-on-sample / assign-everything — the standard 100 TB shape;
     FAISS trains IVF coarse quantizers on 30-256 points per centroid).
-    None fits on the full table, which is the right default up to a
-    few hundred thousand rows; at 10M+ pass ~1M so the fit cost stays
-    bounded while assignment (one pass, map-side) covers everything.
+    None fits on up to ``max(256·n_lists, 100_000)`` rows (the whole
+    table below that); at 10M+ pass ~1M so the fit cost stays bounded
+    while assignment (one pass, map-side) covers everything.
 
     ``n_lists=None`` auto-sizes the coarse quantizer to ``≈ √N``
     (the FAISS sizing rule), clamped to [16, 65536] — 100k rows get
@@ -507,7 +278,7 @@ def ivfpq_build(
     matches the old fixed default.
 
     ``max_iter`` bounds the coarse KMeans (always) and, on the
-    ``opq_iters=0`` path, the distributed residual-codebook Lloyd
+    ``opq_iters=0`` path, the residual-codebook Lloyd
     passes. With ``opq_iters>0`` the residual training instead runs
     ``_train_opq``'s fixed 8/3/8 driver-side Lloyd schedule (the
     alternation with the Procrustes solve is the budget that matters
@@ -530,60 +301,36 @@ def ivfpq_build(
 
     ivf = ivf_build(df, n_lists=n_lists, vec_col=vec_col, seed=seed,
                     max_iter=max_iter, train_rows=coarse_train_rows)
-    spark = df.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(ivf.centroids)],
-        "list_id int, cvec array<double>",
-    )
-    residuals = (
-        ivf.assigned.join(F.broadcast(cent_df), "list_id")
-        .select(
-            id_col,
-            "list_id",
-            F.zip_with(
-                F.col(vec_col), "cvec", lambda v, c: v.cast("double") - c
-            ).alias("residual"),
-        )
-    )
+    centroids = ivf.centroids
+    # residual training sample on the driver: a bounded row sample minus
+    # each row's nearest list centroid
+    x = fit_sample(df, vec_col, n_centroids, seed, train_rows=train_rows)
+    sample = x - centroids[assign(x, centroids)]
     rot: np.ndarray | None = None
     if opq_iters > 0:
-        # OPQ training: bounded residual sample → driver NumPy (the
-        # sample is ≤ train_rows rows regardless of corpus size, so
-        # this collect is scale-independent like every other bounded
-        # collect in the repo). Unlike _train_residual_codebooks no
-        # localCheckpoint is needed: the sample is collected exactly
-        # once, so there is no recomputation to cut. NOTE: max_iter
-        # governs only the COARSE quantizer here (ivf_build above);
-        # the residual Lloyd budgets on this path are _train_opq's
-        # fixed 8/3/8 schedule (see ivfpq_build's docstring).
-        n = residuals.count()
-        res_s = residuals
-        if n > train_rows:
-            res_s = residuals.sample(
-                fraction=min(1.0, train_rows * 1.1 / n), seed=seed
-            ).limit(train_rows)
-        sample = np.stack(
-            [
-                np.asarray(r["residual"], dtype=np.float64)
-                for r in res_s.select("residual").collect()
-            ]
-        )
+        # NOTE: max_iter governs only the COARSE quantizer here
+        # (ivf_build above); the residual Lloyd budgets on this path
+        # are _train_opq's fixed 8/3/8 schedule (see the docstring)
         rot, cents = _train_opq(
             sample, m_subspaces, n_centroids, seed, opq_iters
         )
     else:
-        cents = _train_residual_codebooks(
-            residuals, m_subspaces, n_centroids, dims, seed, max_iter,
-            train_rows,
+        cents = train(
+            sample.reshape(len(sample), m_subspaces, -1).transpose(1, 0, 2),
+            n_centroids, max_iter, seed,
         )
 
-    # Arrow-batched encoder: nearest codebook centroid per subspace.
+    # Arrow-batched encoder: each row's list (the f64 assign kernel) and
+    # the nearest codebook centroid per subspace of its residual. One
+    # pass holds one Python worker per task: with a separate assignment
+    # UDF upstream every task held two, and the bench's 100K build ran a
+    # 4-core, 15 GB host out of memory at local[32].
     # The codebooks are tiny (M·K·D/M doubles) — closure-shipped.
     sub = dims // m_subspaces
     out_schema = StructType(
         [
             # ids pass through with their own type (string ids work)
-            StructField(id_col, residuals.schema[id_col].dataType),
+            StructField(id_col, df.schema[id_col].dataType),
             StructField("list_id", IntegerType()),
             StructField("codes", ArrayType(IntegerType())),
         ]
@@ -593,9 +340,11 @@ def ivfpq_build(
         for pdf in batches:
             if pdf.empty:
                 continue
-            r = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["residual"]]
+            v = np.stack(
+                [np.asarray(e, dtype=np.float64) for e in pdf[vec_col]]
             )
+            lists = assign(v, centroids)
+            r = v - centroids[lists]
             if rot is not None:  # OPQ: quantize the ROTATED residual
                 r = r @ rot.T
             r = r.reshape(len(pdf), m_subspaces, sub)
@@ -608,14 +357,14 @@ def ivfpq_build(
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(),
-                    "list_id": pdf["list_id"].to_numpy(),
+                    "list_id": lists.astype(np.int32),
                     "codes": list(codes),
                 }
             )
 
-    codes_df = residuals.mapInPandas(encode, schema=out_schema)
+    codes_df = df.select(id_col, vec_col).mapInPandas(encode, schema=out_schema)
     return IVFPQIndex(
-        centroids=ivf.centroids, codebooks=cents, codes=codes_df,
+        centroids=centroids, codebooks=cents, codes=codes_df,
         id_col=id_col, rotation=rot,
     )
 

@@ -1257,7 +1257,9 @@ class Collection:
             # stale footer stats are correctly ignored
             train_nonce = st.meta["train_nonce"]
             n_lists = int(st.centroids.shape[0])
-            lid = st._list_id(F.col("embedding"), st.centroids)
+            from fastpyvectordb_spark.ann.kmeans import assign_col
+
+            lid = assign_col(F.col("embedding"), st.centroids)
             out = self.df(tail[1]).withColumn("_ann_list", lid.cast("int"))
             out = out.withColumn(
                 "_zorder", F.col("_ann_list")

@@ -1,7 +1,7 @@
 """Nearest-centroid assignment (document / embedding clustering).
 
-The MLlib-KMeans paths (``ann/ivf.py``, ``operators/quantization.py``)
-train centroids iteratively; this module is the *assignment* operator —
+The KMeans trainer (``ann/kmeans.py``, used by every index) trains
+centroids iteratively; this module is the *assignment* operator —
 given any centroid table (trained, sampled, or fixed), bucket every
 vector to its nearest centroid. That's the building block for
 topic-bucketing / mixture control over a training corpus, and it is

@@ -593,12 +593,15 @@ def _centroid_rows(
     centroids: str,
     seed: int,
     kmeans_max_iter: int,
+    n_rows: int | None = None,
 ):
     """→ list of (cid, unit-centroid numpy vector). ``centroids`` picks
-    the trainer: ``"kmeans"`` = MLlib KMeans on the unit sphere (the
-    quality path — tight clusters → tight radii → real pruning);
-    ``"seed"`` = the ``n_clusters`` lowest-id vectors (deterministic,
-    zero-train — pruning degrades gracefully, exactness never does)."""
+    the trainer: ``"kmeans"`` = :func:`ann.kmeans.train` on a bounded
+    sample of the unit-normalized rows (the quality path — tight
+    clusters → tight radii → real pruning; a known ``n_rows`` spares
+    the sample its count job); ``"seed"`` = the ``n_clusters``
+    lowest-id vectors (deterministic, zero-train — pruning degrades
+    gracefully, exactness never does)."""
     import numpy as np
 
     if centroids == "seed":
@@ -610,21 +613,12 @@ def _centroid_rows(
         )
         mats = [np.asarray(r["v"], dtype=np.float64) for r in rows]
     elif centroids == "kmeans":
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
+        from fastpyvectordb_spark.ann.kmeans import fit_sample, train
+        from fastpyvectordb_spark.functions.distances import EPS
 
-        from fastpyvectordb_spark.functions.distances import EPS, norm
-
-        vn = F.transform(
-            F.col(vec_col),
-            lambda x: x.cast("double") / (norm(F.col(vec_col)) + F.lit(EPS)),
-        )
-        feats = emb.select(array_to_vector(vn).alias("_features"))
-        model = KMeans(
-            k=n_clusters, seed=seed, maxIter=kmeans_max_iter,
-            featuresCol="_features",
-        ).fit(feats)
-        mats = [np.asarray(c, dtype=np.float64) for c in model.clusterCenters()]
+        x = fit_sample(emb, vec_col, n_clusters, seed, n_rows)
+        x = x / (np.linalg.norm(x, axis=1, keepdims=True) + EPS)
+        mats = list(train(x, n_clusters, kmeans_max_iter, seed))
     else:
         raise ValueError(f"centroids must be 'kmeans' or 'seed': {centroids!r}")
     out = []
@@ -802,7 +796,8 @@ def embedding_neardup_topk(
         n_rows = emb.count()
         n_clusters = max(2, min(1024, math.isqrt(max(n_rows, 1))))
     cents = _centroid_rows(
-        emb, n_clusters, id_col, vec_col, centroids, seed, kmeans_max_iter
+        emb, n_clusters, id_col, vec_col, centroids, seed, kmeans_max_iter,
+        n_rows,
     )
     if not cents:  # empty corpus (or all-zero seed vectors)
         return embedding_neardup_topk_bruteforce(

@@ -5,8 +5,9 @@ Spark-first shapes:
 - **Training is an aggregation.** SQ min/max (``quantization.py:85-106``)
   = per-dim ``min/max`` over posexploded vectors; BQ median thresholds
   (``:307-327``) = per-dim ``percentile(0.5)``; PQ codebooks
-  (``:444-508``) = MLlib KMeans per subspace. All produce *small*
-  codebook tables that broadcast to every executor.
+  (``:444-508``) = KMeans per subspace on a bounded driver sample
+  (:func:`ann.kmeans.train`). All produce *small* codebook tables that
+  broadcast to every executor.
 
 - **Encoding is an expression.** SQ encode
   ``trunc(clip((v-min)/scale*255, 0, 255))`` (``:108-126``) and BQ
@@ -323,26 +324,24 @@ def pq_train_kmeans(
     seed: int = 42,
     max_iter: int = 20,
 ) -> DataFrame:
-    """Real PQ training: MLlib KMeans per subspace (M parallel fits on
-    slices; ref _kmeans :484-508). Returns codebooks (m, cidx, cvec)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+    """Real PQ training: KMeans per subspace (ref _kmeans :484-508) —
+    one batched :func:`ann.kmeans.train` over the M slices of a bounded
+    driver sample. Returns codebooks (m, cidx, cvec)."""
+    from fastpyvectordb_spark.ann.kmeans import fit_sample, train
 
-    sub_dim = dims // m_subspaces
-    spark = df.sparkSession
-    rows = []
-    for m in range(m_subspaces):
-        sub = df.select(
-            array_to_vector(
-                F.slice(F.col(vec_col), m * sub_dim + 1, sub_dim).cast(
-                    "array<double>"
-                )
-            ).alias("features")
-        )
-        model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(sub)
-        for cidx, center in enumerate(model.clusterCenters()):
-            rows.append((m, cidx, [float(x) for x in center]))
-    return spark.createDataFrame(rows, "m int, cidx int, cvec array<double>")
+    x = fit_sample(df, vec_col, n_centroids, seed)[:, :dims]
+    cbs = train(
+        x.reshape(len(x), m_subspaces, -1).transpose(1, 0, 2),
+        n_centroids, max_iter, seed,
+    )
+    rows = [
+        (m, cidx, [float(v) for v in c])
+        for m in range(m_subspaces)
+        for cidx, c in enumerate(cbs[m])
+    ]
+    return df.sparkSession.createDataFrame(
+        rows, "m int, cidx int, cvec array<double>"
+    )
 
 
 # ---------------------------------------------------------------------------

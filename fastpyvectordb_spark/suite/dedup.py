@@ -349,8 +349,8 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding clustering (mixture-control bucketing): deterministic
 # nearest-centroid assignment with centroids = the 8 lowest vec_ids,
 # profiled as (size, integer-micros within-cluster distance).  The
-# MLlib-KMeans paths train centroids; this oracle-checks the
-# assignment operator they share (= the IVF list-assignment step).
+# ann.kmeans trainer trains centroids; this oracle-checks the
+# nearest-centroid assignment (= the IVF list-assignment step).
 # ---------------------------------------------------------------------------
 
 from fastpyvectordb_spark.operators import clustering as C

@@ -6,7 +6,7 @@
 - pq_adc_knn:     fixed deterministic codebooks (subvector slices of
                   vec_id 0..15, K=16, M=8) → encode → ADC LUT top-k
                   (Q8/Q9). Real KMeans training (Q7) is exercised in
-                  tests via MLlib with recall gates — k-means isn't
+                  tests via ann.kmeans with recall gates — k-means isn't
                   SQL-expressible, so the oracle uses fixed codebooks.
 """
 

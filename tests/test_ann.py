@@ -211,44 +211,16 @@ def test_ivfpq_recall_and_refine(embeddings, spark):
     assert m_ref >= m_adc, (m_ref, m_adc)
 
 
-def test_ivf_gemm_assignment_matches_mllib(embeddings, spark, monkeypatch):
-    """Above the assignment-work threshold, ivf_build assigns with the
-    Arrow-GEMM kernel instead of MLlib transform()'s per-centroid
-    scalar loop (round 11 — a 10M×3162 transform measured as a
-    multi-hour stall). Both argmins share the L2/ties-to-lower-id
-    rule, so under the SAME MLlib-fit centroids (fit work below the
-    threshold, assign work above) the assignments must be IDENTICAL
-    on a tie-free corpus."""
-    import fastpyvectordb_spark.ann.ivf as ivf_mod
-    from fastpyvectordb_spark.ann.ivf import ivf_build
-
-    n = embeddings.count()
-    base = ivf_build(embeddings, n_lists=8, max_iter=10, train_rows=100)
-    # fit work = 100·8 = 800 stays MLlib; assign work = n·8 goes GEMM
-    monkeypatch.setattr(ivf_mod, "_MLLIB_ASSIGN_MAX_WORK", 801)
-    assert n * 8 > 801
-    gemm = ivf_build(embeddings, n_lists=8, max_iter=10, train_rows=100)
-    a = {
-        r["vec_id"]: r["list_id"]
-        for r in base.assigned.select("vec_id", "list_id").collect()
-    }
-    b = {
-        r["vec_id"]: r["list_id"]
-        for r in gemm.assigned.select("vec_id", "list_id").collect()
-    }
-    assert a == b
-
-
 def test_ivf_driver_gemm_fit_stays_exact(embeddings, spark, monkeypatch):
     """Full large-k regime (fit work over the threshold too): coarse
     Lloyd runs driver-side on the bounded sample with chunked-f32 GEMM
     assignment. Exhaustive probing is assignment-independent, so the
     search must still return the exact top-k; every row must be
     assigned to exactly one of the k trained lists."""
-    import fastpyvectordb_spark.ann.ivf as ivf_mod
+    from fastpyvectordb_spark.ann import kmeans
     from fastpyvectordb_spark.ann.ivf import ivf_build, ivf_search
 
-    monkeypatch.setattr(ivf_mod, "_MLLIB_ASSIGN_MAX_WORK", 1)
+    monkeypatch.setattr(kmeans, "_KMEANS_PARALLEL_MAX_WORK", 1)
     idx = ivf_build(embeddings, n_lists=8, max_iter=10, train_rows=200)
     assert idx.centroids.shape[0] == 8
     n = embeddings.count()
@@ -707,11 +679,8 @@ def test_opq_trainer_properties():
     deterministic in its seed."""
     import numpy as np
 
-    from fastpyvectordb_spark.ann.ivfpq import (
-        _pq_assign_all,
-        _train_opq,
-        _kmeanspp_init,
-    )
+    from fastpyvectordb_spark.ann.ivfpq import _train_opq
+    from fastpyvectordb_spark.ann.kmeans import _kmeanspp_init, assign
 
     rng = np.random.RandomState(3)
     n, dims, m, kc = 4000, 16, 4, 16
@@ -725,9 +694,10 @@ def test_opq_trainer_properties():
 
     def recon_err(sample, rotation, codebooks):
         xr = sample if rotation is None else sample @ rotation.T
-        codes = _pq_assign_all(xr.reshape(len(xr), m, dims // m), codebooks)
+        x3 = xr.reshape(len(xr), m, dims // m).transpose(1, 0, 2)
+        codes = assign(np.ascontiguousarray(x3, dtype=np.float32), codebooks)
         dec = np.concatenate(
-            [codebooks[j][codes[:, j]] for j in range(m)], axis=1
+            [codebooks[j][codes[j]] for j in range(m)], axis=1
         )
         return ((xr - dec) ** 2).sum()
 
@@ -783,7 +753,7 @@ def test_pq_assign_matches_naive_reference():
     conversion is slice-order-independent)."""
     import numpy as np
 
-    from fastpyvectordb_spark.ann.ivfpq import _pq_assign_all
+    from fastpyvectordb_spark.ann.kmeans import assign
 
     rng = np.random.RandomState(5)
     n, m_sub, sub, kc = 20_000, 16, 4, 256
@@ -805,15 +775,17 @@ def test_pq_assign_matches_naive_reference():
             b += cb_n2[None, :]
             ref[s:e, m] = b.argmin(1)
 
-    assert np.array_equal(_pq_assign_all(x3, cbs), ref)
+    xT = np.ascontiguousarray(x3.transpose(1, 0, 2), dtype=np.float32)
+    assert np.array_equal(assign(xT, cbs).T, ref)
 
 
-def test_coarse_gemm_pooled_chunks_match_serial_lloyd():
+def test_coarse_gemm_pooled_chunks_match_serial_lloyd(monkeypatch):
     """The large-k coarse trainer assigns its GEMM chunks on the shared
     pool; chunks write disjoint code slices with the serial loop's
     GEMM shapes, so centroids are bit-identical to the serial Lloyd."""
-    from fastpyvectordb_spark.ann.ivf import _train_coarse_gemm
-    from fastpyvectordb_spark.session import driver_pool_workers
+    from fastpyvectordb_spark.ann import kmeans
+
+    monkeypatch.setattr(kmeans, "_KMEANS_PARALLEL_MAX_WORK", 1)
 
     rng = np.random.RandomState(11)
     n, d, k, iters, seed = 12_000, 8, 4000, 3, 3
@@ -823,7 +795,7 @@ def test_coarse_gemm_pooled_chunks_match_serial_lloyd():
     r = np.random.RandomState(seed)
     cents = sample[r.choice(n, size=k, replace=False)].astype(np.float64)
     x32 = np.ascontiguousarray(sample, dtype=np.float32)
-    chunk = 16_000_000 // (k * driver_pool_workers())
+    chunk = kmeans._SCORE_BUDGET // k
     assert n > 2 * chunk  # several chunks, so the pool has work to split
     codes = np.empty(n, dtype=np.int64)
     for _ in range(iters):
@@ -843,7 +815,7 @@ def test_coarse_gemm_pooled_chunks_match_serial_lloyd():
         nz = cnt > 0
         cents[nz] = acc[nz] / cnt[nz][:, None]
 
-    got = _train_coarse_gemm(sample, k, iters, seed)
+    got = kmeans.train(sample, k, iters, seed)
     assert np.array_equal(got, cents)
 
 

@@ -374,15 +374,15 @@ def test_list_id_udf_matches_codegen(spark, db):
     with the codegen argmin on non-boundary data."""
     from pyspark.sql import functions as F
 
+    from fastpyvectordb_spark.ann.kmeans import _assign_udf, _list_id_expr
+
     c = _mk(db, spark, n=200, name="udfassign", seed=6)
     c.build_ann_index(n_lists=8, max_iter=10)
     st = c._ann()
     df = c.df()
     both = df.select(
-        st._list_id(F.col("embedding"), st.centroids, prefer_udf=False)
-        .alias("a"),
-        st._list_id(F.col("embedding"), st.centroids, prefer_udf=True)
-        .alias("b"),
+        _list_id_expr(F.col("embedding"), st.centroids).alias("a"),
+        _assign_udf(st.centroids)(F.col("embedding")).alias("b"),
     )
     assert both.filter(F.col("a") != F.col("b")).count() == 0
 

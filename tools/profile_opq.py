@@ -1,13 +1,13 @@
-"""Phase-level profile of the OPQ trainer at the bench operating point
-(90k x 64 sample, M=8, K=16, opq_iters=20) — VERDICT r11 #2 evidence.
+"""Phase-level profile of the OPQ trainer (``ann.ivfpq._train_opq``) and
+the shared KMeans kernels it runs on (``ann.kmeans``).
 
-Spark-free: times _train_opq end-to-end, then breaks one assign pass
-into GEMM / add-norms / argmin and one Lloyd update into its bincounts,
-under three BLAS/pool regimes, so the r12 kernel change is aimed at the
-measured wall instead of the assumed one. Run on a quiet host; repeat
-readings (best-of-N) absorb the fleet's >3x in-run swings.
+Spark-free: times k-means|| seeding of all M subspaces, one batched
+assign pass (pooled, then serially split into GEMM / add-norms /
+argmin), one Lloyd update's bincounts, the f32 subspace copy the
+trainer makes per rotation, and then ``_train_opq`` end to end. Run on
+a quiet host; repeat readings (best-of-N) absorb in-run host swings.
 
-Usage: python tools/profile_opq.py [n_rows] [reps]
+Usage: python tools/profile_opq.py [n_rows] [reps] [M] [K]
 """
 
 import os
@@ -19,116 +19,93 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np
 
 
+def _timed(fn, reps, *a):
+    best = float("inf")
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        fn(*a)
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
 def phase_profile(n=90_000, dims=64, M=8, K=16, reps=3):
-    from fastpyvectordb_spark.ann import ivfpq as iq
+    from fastpyvectordb_spark.ann import kmeans
 
     rng = np.random.RandomState(7)
-    sample = rng.randn(n, dims).astype(np.float64)
-    x3 = sample.reshape(n, M, dims // M)
-    xT = iq._pq_prepare(x3)
-    cbs = np.stack([
-        iq._kmeanspp_init(
-            np.ascontiguousarray(x3[:, m]), K, np.random.RandomState(m)
-        )
-        for m in range(M)
-    ])
+    sample = rng.randn(n, dims)
+    x3 = sample.reshape(n, M, dims // M).transpose(1, 0, 2)
+    x32 = np.ascontiguousarray(x3, dtype=np.float32)
 
-    sub = dims // M
-    chunk = 8192
+    t0 = time.perf_counter()
+    cbs = kmeans.train(x3, K, 0, seed=42)  # seeding only
+    t_seed = time.perf_counter() - t0
 
-    def timed(fn, *a):
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(*a)
-            best = min(best, time.perf_counter() - t0)
-        return best
+    t_assign = _timed(kmeans.assign, reps, x32, cbs)
 
-    # one full assign via the production kernel (pooled path)
-    t_assign = timed(iq._pq_assign_prepared, xT, cbs)
-
-    # serial phase split of the same work
+    chunk = kmeans._SCORE_BUDGET // K
     res = {}
 
     def serial_phases():
         g = a = am = 0.0
-        codes = np.empty((n, M), dtype=np.int64)
+        codes = np.empty((M, n), dtype=np.int64)
         for m in range(M):
-            cb_t2 = cbs[m].T.astype(np.float32)
-            cb_t2 *= np.float32(-2.0)
-            cb_n2 = (cbs[m] ** 2).sum(1).astype(np.float32)
-            xm = xT[m]
-            buf = np.empty((min(chunk, n), K), dtype=np.float32)
+            c = cbs[m].astype(np.float32)
+            csq = np.einsum("ij,ij->i", c, c)
+            ct2 = np.ascontiguousarray(c.T)
+            ct2 *= -2.0
             for s in range(0, n, chunk):
-                e = min(s + chunk, n)
-                b = buf[: e - s]
                 t0 = time.perf_counter()
-                np.dot(xm[s:e], cb_t2, out=b)
+                b = x32[m, s:s + chunk] @ ct2
                 t1 = time.perf_counter()
-                b += cb_n2[None, :]
+                b += csq
                 t2 = time.perf_counter()
-                codes[s:e, m] = b.argmin(1)
+                codes[m, s:s + chunk] = b.argmin(1)
                 t3 = time.perf_counter()
                 g += t1 - t0
                 a += t2 - t1
                 am += t3 - t2
-        res["gemm"] = g
-        res["add"] = a
-        res["argmin"] = am
+        res.update(gemm=g, add=a, argmin=am)
         return codes
 
-    t_serial = timed(serial_phases)
+    t_serial = _timed(serial_phases, reps)
     codes = serial_phases()
+    x64 = np.ascontiguousarray(x3)
 
-    # Lloyd update phase (bincounts), serial
     def upd():
+        c = cbs.copy()
         for m in range(M):
-            cm = np.ascontiguousarray(codes[:, m])
-            cnt = np.bincount(cm, minlength=K)
-            xm64 = np.ascontiguousarray(x3[:, m])
-            sums = np.stack(
-                [
-                    np.bincount(cm, weights=xm64[:, j], minlength=K)
-                    for j in range(sub)
-                ],
-                axis=1,
-            )
-            nz = cnt > 0
-            _ = sums[nz] / cnt[nz][:, None]
+            kmeans._lloyd_update(c[m], x64[m], codes[m])
 
-    t_upd = timed(upd)
+    t_upd = _timed(upd, reps)
+    t_copy = _timed(np.ascontiguousarray, reps, x3, np.float32)
 
-    t_prep = timed(iq._pq_prepare, x3)
-
-    print(f"assign pooled(best of {reps}):  {t_assign*1e3:8.1f} ms")
-    print(f"assign serial(best of {reps}):  {t_serial*1e3:8.1f} ms "
+    print(f"k-means|| seeding, M={M}:        {t_seed*1e3:8.1f} ms")
+    print(f"assign pooled(best of {reps}):     {t_assign*1e3:8.1f} ms")
+    print(f"assign serial(best of {reps}):     {t_serial*1e3:8.1f} ms "
           f"(gemm {res['gemm']*1e3:.1f}, add {res['add']*1e3:.1f}, "
           f"argmin {res['argmin']*1e3:.1f})")
-    print(f"lloyd update serial:            {t_upd*1e3:8.1f} ms")
-    print(f"_pq_prepare:                    {t_prep*1e3:8.1f} ms")
-    return t_assign, t_serial
+    print(f"lloyd update serial:               {t_upd*1e3:8.1f} ms")
+    print(f"f32 subspace copy:                 {t_copy*1e3:8.1f} ms")
 
 
 def full_trainer(n=90_000, dims=64, M=8, K=16, iters=20):
-    from fastpyvectordb_spark.ann import ivfpq as iq
+    from fastpyvectordb_spark.ann.ivfpq import _train_opq
 
     rng = np.random.RandomState(7)
-    sample = rng.randn(n, dims).astype(np.float64)
+    sample = rng.randn(n, dims)
     t0 = time.perf_counter()
-    rot, cbs = iq._train_opq(sample, M, K, seed=42, opq_iters=iters)
+    _train_opq(sample, M, K, seed=42, opq_iters=iters)
     t = time.perf_counter() - t0
     print(f"_train_opq({n}x{dims}, M={M}, K={K}, {iters} iters): {t:8.1f} s")
-    return t, rot, cbs
 
 
 if __name__ == "__main__":
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 90_000
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    import threadpoolctl  # noqa: F401 — may not exist; fall back below
+    argv = [int(a) for a in sys.argv[1:]]
+    n, reps, M, K = argv + [90_000, 3, 8, 16][len(argv):]
+    from fastpyvectordb_spark.session import pin_blas_to_one_thread
 
-    print("== BLAS env:", {
-        k: os.environ.get(k)
-        for k in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS")
-    })
-    phase_profile(n=n, reps=reps)
-    full_trainer(n=n)
+    # the driver runs OpenBLAS on one thread (session.get_spark); the
+    # pool is the only parallelism
+    pin_blas_to_one_thread()
+    phase_profile(n=n, M=M, K=K, reps=reps)
+    full_trainer(n=n, M=M, K=K)
