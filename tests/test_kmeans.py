@@ -8,10 +8,8 @@ import os
 import re
 
 import numpy as np
-from pyspark.sql import functions as F
-
 from fastpyvectordb_spark.ann import kmeans
-from fastpyvectordb_spark.ann.kmeans import assign, assign_col, train
+from fastpyvectordb_spark.ann.kmeans import assign, train
 
 
 def _blobs(seed, n, dims, n_blobs=16, noise=0.1, n_queries=64):
@@ -90,27 +88,11 @@ def test_pooled_matches_serial(monkeypatch):
             assert np.array_equal(p, s)
 
 
-def test_assign_col_arms_match_assign(spark):
-    """Both arms of the Spark column form pick the f64 kernel's list on
-    a tie-free corpus: the codegen expression (8×16 = 128 centroid
-    floats) and the Arrow UDF (80×16 = 1,280 floats)."""
-    r = np.random.RandomState(9)
-    x = r.randn(400, 16)
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in row]) for i, row in enumerate(x)],
-        "vec_id long, embedding array<double>",
-    )
-    for n_cents in (8, 80):
-        cents = r.randn(n_cents, 16)
-        got = df.select(
-            "vec_id", assign_col(F.col("embedding"), cents).alias("l")
-        ).toPandas().sort_values("vec_id")["l"].to_numpy()
-        assert np.array_equal(got, assign(x, cents))
-
-
 def test_ivf_build_assignment_is_assign(embeddings):
-    """``ivf_build``'s list column equals the driver kernel on the
-    centroids it trained, on both arms of ``assign_col``."""
+    """``ivf_build``'s list column (``assign_col``) equals the f64
+    driver kernel on the centroids it trained, on a tie-free corpus and
+    on both arms: the codegen expression (8 lists × 64 dims = 512
+    centroid floats) and the Arrow UDF (32 × 64 = 2,048)."""
     from fastpyvectordb_spark.ann.ivf import ivf_build
 
     rows = embeddings.select("vec_id", "embedding").toPandas()
