@@ -128,7 +128,7 @@ def _lloyd_update(
     cents[nz] = acc[nz] / cnt[nz][:, None]
 
 
-def _kmeanspp_init(
+def _kmeanspp(
     xs: np.ndarray, k: int, r: np.random.RandomState, w=None
 ) -> np.ndarray:
     """(Weighted) k-means++ seeding (Arthur & Vassilvitskii 2007): each
@@ -182,7 +182,7 @@ def _seed(
             assign(x32, x[cands]), minlength=len(cands)
         ).astype(np.float64)
     xc, xc32 = x[cands], x32[cands]
-    cents = _kmeanspp_init(xc, k, r, w)
+    cents = _kmeanspp(xc, k, r, w)
     for _ in range(_SEED_LLOYD_PASSES):
         _lloyd_update(cents, xc, assign(xc32, cents), w)
     return cents

@@ -680,7 +680,7 @@ def test_opq_trainer_properties():
     import numpy as np
 
     from fastpyvectordb_spark.ann.ivfpq import _train_opq
-    from fastpyvectordb_spark.ann.kmeans import _kmeanspp_init, assign
+    from fastpyvectordb_spark.ann.kmeans import _kmeanspp, assign
 
     rng = np.random.RandomState(3)
     n, dims, m, kc = 4000, 16, 4, 16
@@ -711,7 +711,7 @@ def test_opq_trainer_properties():
 
     # ++ seeding handles fewer distinct points than centroids
     tiny = np.repeat(rng.randn(3, 4), 2, axis=0)
-    cents = _kmeanspp_init(tiny, 8, np.random.RandomState(0))
+    cents = _kmeanspp(tiny, 8, np.random.RandomState(0))
     assert cents.shape == (8, 4) and np.isfinite(cents).all()
 
 
