@@ -43,26 +43,6 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
-    bench_fns: dict[str, object] = {}
-
-    # previous round's compact record (driver-written BENCH_r*.json) —
-    # the reference point for the noise auto-confirm below
-    def _load_prev_parsed():
-        import glob
-
-        best = None
-        here = os.path.dirname(os.path.abspath(__file__))
-        for p in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-            try:
-                with open(p) as f:
-                    d = json.load(f)
-                if isinstance(d.get("parsed"), dict):
-                    best = d["parsed"]
-            except (OSError, ValueError):
-                continue
-        return best
-
-    _prev = _load_prev_parsed()
 
     # Environment calibration: this host's effective memory bandwidth
     # swings >100x with noisy neighbors (observed 0.1-37 GB/s across a
@@ -126,68 +106,13 @@ def main() -> None:
                 finally:
                     _bgc.enable()
             timings[name] = round(best, 3)
-            bench_fns[name] = fn
             return fn
 
         return deco
 
-    def qps_row(row, qname, numerator, digits=1, cal_key="cal2_gemm_gflops"):
-        """Set ``extras[row] = numerator / timings[qname]``, then
-        noise-auto-confirm (VERDICT r9 #4): if the row moved >2× vs
-        the previous round's recorded value while its ADJACENT
-        calibration probe moved <1.3×, the swing is not host-explained
-        — re-run the block once and keep the better pass, recording
-        the row name + the re-run's own qps in ``extras["reran"]``
-        (so a lucky-fast outlier that fails to reproduce is visible,
-        ADVICE r10). Round 9's tape carried an
-        −88% ``auto_qps`` that a single targeted re-run would have
-        disproved at the source; this kills such false signals before
-        they reach the tape. Only READ-ONLY blocks route through this
-        helper — ingest/DML rows mutate collection state and are
-        deliberately excluded (their host normalization lives in
-        ``norm_per_gbps``)."""
+    def qps_row(row, qname, numerator, digits=1):
+        """``extras[row] = numerator / timings[qname]``."""
         extras[row] = round(numerator / timings[qname], digits)
-        pv = (_prev or {}).get(row)
-        pc = (_prev or {}).get(cal_key)
-        cc = extras.get(cal_key)
-        if not (pv and pc and cc and extras[row]):
-            return
-        ratio = extras[row] / pv
-        cal_ratio = cc / pc
-        # trigger when the row CONTRADICTS its probe: a >2× row swing
-        # the probe doesn't echo (probe within 1.3×), or the row and
-        # probe moving apart by >2× overall (covers a row swinging
-        # AGAINST the probe's direction). A row tracking its probe is
-        # host-explained and stands.
-        big_row_swing = (ratio > 2.0 or ratio < 0.5) and (
-            1.0 / 1.3 < cal_ratio < 1.3
-        )
-        rel = ratio / cal_ratio
-        if not (big_row_swing or rel > 2.0 or rel < 0.5):
-            return
-        import gc as _cgc
-
-        _cgc.collect()
-        _cgc.disable()
-        try:
-            t0 = time.perf_counter()
-            bench_fns[qname]()
-            dt = time.perf_counter() - t0
-        finally:
-            _cgc.enable()
-        # best-of-repeats semantics: keep the faster pass. Record the
-        # re-run's own throughput either way (ADVICE r10): a
-        # noise-SLOW first reading beaten by the re-run shows as
-        # kept > rerun-replaced-original, while a lucky-FAST first
-        # reading the re-run fails to reproduce shows as
-        # rerun ≪ kept — distinguishable on the tape, not just "reran".
-        rerun_qps = round(numerator / dt, digits)
-        if dt < timings[qname]:
-            timings[qname] = round(dt, 3)
-            extras[row] = round(numerator / timings[qname], digits)
-        extras.setdefault("reran", []).append(
-            {"row": row, "rerun_qps": rerun_qps, "kept_qps": extras[row]}
-        )
 
     # -- vector search ------------------------------------------------
     qvec = emb.filter(F.col("vec_id") == 0).head()["embedding"]
@@ -228,10 +153,8 @@ def main() -> None:
         n = knn_batch_gemm(emb, qpdf, k=K, metric="cosine").count()
         assert n == n_queries * K
 
-    qps_row("gemm_qps", "q_knn_batch_gemm", n_queries,
-             cal_key="cal_gemm_gflops")
-    qps_row("auto_qps", "q_knn_batch_auto", n_queries,
-             cal_key="cal_gemm_gflops")
+    qps_row("gemm_qps", "q_knn_batch_gemm", n_queries)
+    qps_row("auto_qps", "q_knn_batch_auto", n_queries)
 
     # -- reference-scale vector bench (100K×64, the BASELINE's own
     # workload size) — synthesized deterministically executor-side
@@ -291,8 +214,7 @@ def main() -> None:
         n = knn_batch_gemm(big, qpdf_big, k=K, metric="cosine").count()
         assert n == n_queries * K
 
-    qps_row("gemm_100k_qps", "q_knn_batch_gemm_100k", n_queries,
-            cal_key="cal_big_gemm_gflops")
+    qps_row("gemm_100k_qps", "q_knn_batch_gemm_100k", n_queries)
 
     @bench("q_knn_batch_auto_100k", repeats=2)
     def _():
@@ -301,8 +223,7 @@ def main() -> None:
         res = knn_batch_auto(big, qpdf_big, k=K, metric="cosine")
         assert len(res) == n_queries * K
 
-    qps_row("auto_100k_qps", "q_knn_batch_auto_100k", n_queries,
-            cal_key="cal_big_gemm_gflops")
+    qps_row("auto_100k_qps", "q_knn_batch_auto_100k", n_queries)
 
     @bench("q_knn_exact_100k")
     def _():
@@ -428,8 +349,7 @@ def main() -> None:
         for _i in range(N_SERVE):
             _http_search()
 
-    qps_row("server_search_qps", "q_server_search_300", N_SERVE,
-            cal_key="cal_srv_gemm_gflops")
+    qps_row("server_search_qps", "q_server_search_300", N_SERVE)
 
     # the ANN route over HTTP ("ann": true — the reference server's
     # always-index regime): exact /search reads the full 25.6 MB pack
@@ -456,8 +376,7 @@ def main() -> None:
         for _i in range(N_SERVE):
             _http_search_ann()
 
-    qps_row("server_search_ann_qps", "q_server_search_ann_300", N_SERVE,
-            cal_key="cal_srv_gemm_gflops")
+    qps_row("server_search_ann_qps", "q_server_search_ann_300", N_SERVE)
 
     # concurrent-client capacity (round 7): the single-client loops
     # above measure LATENCY (each request waits for the previous);
@@ -482,8 +401,7 @@ def main() -> None:
     def _():
         _hammer()
 
-    qps_row("server_search_c8_qps", "q_server_search_c8", 8 * 64,
-            cal_key="cal_srv_gemm_gflops")
+    qps_row("server_search_c8_qps", "q_server_search_c8", 8 * 64)
 
     # point-lookup route (round 7): GET /vectors/{id} serves through
     # the pack's binary-search index — zero Spark jobs (was a ~300 ms
@@ -502,8 +420,7 @@ def main() -> None:
         for _i in range(N_SERVE):
             _http_get(5000 + _i)
 
-    qps_row("server_get_qps", "q_server_get_300", N_SERVE,
-            cal_key="cal_srv_gemm_gflops")
+    qps_row("server_get_qps", "q_server_get_300", N_SERVE)
 
     # serving-pack refresh under point DML (round 6): the manifest
     # delta lets pack_serving() refresh incrementally — pyarrow reads
@@ -555,8 +472,7 @@ def main() -> None:
         res = _h.search_ann_batch(_qvl, k=K, nprobe=8)
         assert res["query_id"].nunique() == n_queries
 
-    qps_row("collection_ann_batch_qps", "q_collection_ann_batch", n_queries,
-            cal_key="cal_srv_gemm_gflops")
+    qps_row("collection_ann_batch_qps", "q_collection_ann_batch", n_queries)
     _hits = _tot = 0
     for _q in _qvl[:32]:
         _ex = {i for i, _ in _h.search_local(_q, k=K)}
@@ -731,27 +647,32 @@ def main() -> None:
     # vectorized scan, 6 ms/query"): one GEMV + argpartition per call
     N_EXACT_LOCAL = 256
 
+    from fastpyvectordb_spark.operators.knn import exact_scan, exact_scan_batch
+
     @bench("q_knn_exact_local_100k", repeats=7)
     def _():
-        from fastpyvectordb_spark.ann.ivf import exact_search_packed
-
         for i in range(N_EXACT_LOCAL):
-            res = exact_search_packed(
-                ivf_packed, qpdf_big["query_vec"].iloc[i], k=K
+            ids, _d = exact_scan(
+                ivf_packed.vmat, ivf_packed.ids, ivf_packed.norms,
+                ivf_packed.sqnorms, qpdf_big["query_vec"].iloc[i], K,
+                "cosine",
             )
-            assert len(res) == K
+            assert len(ids) == K
 
     qps_row("exact_local_qps", "q_knn_exact_local_100k", N_EXACT_LOCAL)
 
     # batch exact scan over the packed matrix (reference batch-GEMM
     # search, 1.66 ms/query at 100K): pack once, thread-fanned GEMM
-    from fastpyvectordb_spark.ann.ivf import exact_search_packed_batch
+    def _exact_batch(qpdf, metric="cosine"):
+        return exact_scan_batch(
+            ivf_packed.vmat, ivf_packed.ids, qpdf, K, metric
+        )
 
-    exact_search_packed_batch(ivf_packed, qpdf_big, k=K)  # warm
+    _exact_batch(qpdf_big)  # warm
 
     @bench("q_knn_exact_batch_local_100k", repeats=3)
     def _():
-        res = exact_search_packed_batch(ivf_packed, qpdf_big, k=K)
+        res = _exact_batch(qpdf_big)
         assert len(res) == n_queries * K
 
     qps_row("exact_batch_local_qps", "q_knn_exact_batch_local_100k", n_queries)
@@ -882,7 +803,7 @@ def main() -> None:
     # 256 queries (round 10, was 64): at 64 the ±0.015 sampling noise
     # was as big as a whole round's genuine recall movement.
     sample_pq = qpdf_big.head(256)
-    exact_pq = exact_search_packed_batch(ivf_packed, sample_pq, k=K, metric="l2")
+    exact_pq = _exact_batch(sample_pq, metric="l2")
 
     def _recall_vs_exact(df):
         hits = 0
@@ -1044,8 +965,7 @@ def main() -> None:
             for q in qtexts:
                 assert len(_kw_packed.search(q, k=K)) > 0
 
-    qps_row("bm25_local_qps", "q_bm25_local", 4 * len(qtexts), digits=2,
-            cal_key="cal_txt_gemm_gflops")
+    qps_row("bm25_local_qps", "q_bm25_local", 4 * len(qtexts), digits=2)
 
     from fastpyvectordb_spark.ann.ivf import ivf_build, ivf_pack
 
@@ -1068,8 +988,7 @@ def main() -> None:
                     )
                 ) > 0
 
-    qps_row("hybrid_local_qps", "q_hybrid_local", 4 * len(qtexts), digits=2,
-            cal_key="cal_txt_gemm_gflops")
+    qps_row("hybrid_local_qps", "q_hybrid_local", 4 * len(qtexts), digits=2)
 
     # -- dedup pipeline ----------------------------------------------
     @bench("q_dedup_minhash_lsh")
@@ -1408,7 +1327,7 @@ def compact_tape(total, sf, timings, extras, budget: int = 1995) -> str:
     scaling block): per-query timings are packed FIRST (all 51 at
     bench scale; never fewer than 16 — extras are sacrificed before
     queries), then optional extras fill the remaining budget in
-    priority order. Recalls, host_index and the reran count are
+    priority order. Recalls and host_index are
     mandatory (not derivable from the timings); most *_qps rows ARE
     derivable from their timing twin (qps = n/sec) and every shed key
     stays on the full first line with full precision.
@@ -1420,10 +1339,6 @@ def compact_tape(total, sf, timings, extras, budget: int = 1995) -> str:
             "host_index", "ann_files_skipped_frac", "ivfpq_build_sec",
         )
     }
-    if "reran" in extras:
-        # the full first line carries the row list; the tail-window
-        # line only needs the count
-        mandatory["reran"] = len(extras["reran"])
 
     # Optional extras, most-important first: the primary calibration
     # probe pair, the six baseline-gate serving rows + the gemm_100k

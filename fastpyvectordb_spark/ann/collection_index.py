@@ -36,9 +36,10 @@ scale the persisted form is the list-partitioned table
 (:meth:`ann.ivf.IVFIndex.save`), not a driver artifact.
 
 String ids: the packed kernel ranks by int64 ids, so rows carry their
-POSITION in the label array (the reference's ``_id_to_label`` mapping,
-``vectordb_optimized.py:227``); positions are assigned in (list,
-id-ascending) order so in-list distance ties still resolve by id.
+POSITION in the serving pack, whose id array is the label array (the
+reference's ``_id_to_label`` mapping, ``vectordb_optimized.py:227``);
+the pack is id-ascending, so position order is id order and distance
+ties resolve by id.
 """
 
 from __future__ import annotations
@@ -252,33 +253,20 @@ class CollectionANN:
         removed = max(0, self.meta["n_train"] - surviving)
         return (newer + removed) / n
 
-    def _assign_pack(self, pack) -> tuple:
+    def _assign_pack(self, pack) -> IVFPacked:
         """Group the serving pack's rows by nearest centroid — the
         fixed-centroid equivalent of ``add_items`` for every row that
         arrived since the last refresh (per-row independent, so the
         re-derivation is exact, and killed rows are already absent
-        from the pack = ``mark_deleted``). Returns ``(packed, labels)``
-        for the caller to publish atomically."""
+        from the pack = ``mark_deleted``). Row ids are positions in
+        the pack, so ``pack["ids"]`` maps them to labels."""
         vmat = pack["vmat"]  # (N, D) f32, id-ascending
-        n = vmat.shape[0]
-        lists = kmeans.assign(vmat, self.centroids)
-        # stable sort by list keeps the pack's id-ascending order
-        # inside each list — ivf_pack's (list, id) contract
-        order = np.argsort(lists, kind="stable")
-        lists = lists[order]
-        vmat = np.ascontiguousarray(vmat[order])
-        n_lists = self.centroids.shape[0]
-        offsets = np.searchsorted(lists, np.arange(n_lists + 1))
-        sqnorms = np.einsum("ij,ij->i", vmat, vmat)
-        packed = IVFPacked(
-            centroids=self.centroids,
-            vmat=vmat,
-            ids=np.arange(n, dtype=np.int64),  # positions → labels
-            offsets=offsets,
-            norms=np.sqrt(sqnorms).astype(np.float32) + np.float32(1e-10),
-            sqnorms=sqnorms.astype(np.float32),
+        return IVFPacked.build(
+            self.centroids,
+            kmeans.assign(vmat, self.centroids),
+            np.arange(vmat.shape[0], dtype=np.int64),
+            vmat,
         )
-        return packed, pack["ids"][order]
 
     def ensure(self, auto_build: bool = True) -> tuple | None:
         """Bring the index to the current committed version and return
@@ -310,7 +298,7 @@ class CollectionANN:
                 return None
             if self._drift(pack) > REBUILD_THRESHOLD:
                 self.train()
-            packed, labels = self._assign_pack(pack)
+            packed, labels = self._assign_pack(pack), pack["ids"]
             # meta rides in the snapshot so a concurrent drop_ann_index
             # (which nulls self.meta) can't fail a search that already
             # holds a consistent serving state

@@ -28,7 +28,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fastpyvectordb_spark.ann.kmeans import assign_col, fit_sample, train
-from fastpyvectordb_spark.operators.knn import knn
+from fastpyvectordb_spark.operators.knn import (
+    as_matrix,
+    fix_distances,
+    knn,
+    prep_queries,
+    topk_rows_tied,
+)
 
 
 def centroid_probe_scores(centroids: np.ndarray, qmat) -> np.ndarray:
@@ -140,6 +146,24 @@ class IVFPacked:
     norms: np.ndarray      # (N,) float32 — ||v|| + 1e-10 (cosine)
     sqnorms: np.ndarray    # (N,) float32 — ||v||² (l2)
 
+    @classmethod
+    def build(cls, centroids, lists, ids, vmat) -> "IVFPacked":
+        """The one pack builder: rows sorted by (list, id) — id-ascending
+        inside each list, so stable partial cuts resolve distance ties
+        by id — with per-list offsets and precomputed norms."""
+        order = np.lexsort((ids, lists))
+        lists = lists[order]
+        vmat = np.ascontiguousarray(vmat[order])
+        sqnorms = np.einsum("ij,ij->i", vmat, vmat)
+        return cls(
+            centroids=centroids,
+            vmat=vmat,
+            ids=np.ascontiguousarray(ids[order]),
+            offsets=np.searchsorted(lists, np.arange(centroids.shape[0] + 1)),
+            norms=np.sqrt(sqnorms).astype(np.float32) + np.float32(1e-10),
+            sqnorms=sqnorms.astype(np.float32),
+        )
+
 
 def ivf_build(
     df: DataFrame,
@@ -224,15 +248,8 @@ def ivf_search_batch(
     from fastpyvectordb_spark.operators.knn import _gemm_topk_chunked
 
     nprobe = _resolve_nprobe(nprobe, index.centroids.shape[0])
-    eps = 1e-10
     qids = queries_pdf["query_id"].to_numpy()
-    qmat = np.stack(
-        [np.asarray(v, dtype=np.float32) for v in queries_pdf["query_vec"]]
-    )
-    if metric == "cosine":
-        qn = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True) + eps)
-    else:
-        qn = qmat
+    qmat = as_matrix(queries_pdf["query_vec"])
     # per-query probe lists against the centroids (driver-side, tiny)
     cd = centroid_probe_scores(index.centroids, qmat)
     probe = np.argsort(cd, axis=1)[:, :nprobe]  # (Q, nprobe)
@@ -260,7 +277,7 @@ def ivf_search_batch(
                 {"query_id": [], id_col: [], "dist": []}
             ).astype({"query_id": "int64", id_col: id_np, "dist": "float64"})
         ids = pdf[id_col].to_numpy()
-        vmat = np.stack([np.asarray(v, dtype=np.float32) for v in pdf[vec_col]])
+        vmat = as_matrix(pdf[vec_col])
         o = np.argsort(ids, kind="stable")  # ties-by-id in kernel cuts
         ids, vmat = ids[o], vmat[o]
         kk = min(k, len(ids))
@@ -268,7 +285,7 @@ def ivf_search_batch(
         # so position ties == id ties, and the int64 position buffer
         # works for string ids too (mapped back through ids[...])
         pos = np.arange(len(ids), dtype=np.int64)
-        d, i = _gemm_topk_chunked(qn[qidx], vmat, pos, kk, metric)
+        d, i = _gemm_topk_chunked(qmat[qidx], vmat, pos, kk, metric)
         return pd.DataFrame(
             {
                 "query_id": np.repeat(qids[qidx], kk),
@@ -303,28 +320,11 @@ def ivf_pack(
     """Collect the assigned table once (Arrow, zero Python-object churn)
     into list-grouped contiguous arrays with precomputed norms."""
     tbl = index.assigned.select("list_id", id_col, vec_col).toArrow()
-    lists = tbl["list_id"].to_numpy()
     ids = tbl[id_col].to_numpy()
     flat = tbl[vec_col].combine_chunks()
-    n = len(ids)
-    vmat = np.asarray(flat.flatten(), dtype=np.float32).reshape(n, -1)
-    # (list, id) order — id-ascending within each list so stable
-    # partial cuts resolve distance ties by id
-    order = np.lexsort((ids, lists))
-    lists = lists[order]
-    vmat = np.ascontiguousarray(vmat[order])
-    ids = np.ascontiguousarray(ids[order])
-    n_lists = index.centroids.shape[0]
-    offsets = np.searchsorted(lists, np.arange(n_lists + 1))
-    sqnorms = np.einsum("ij,ij->i", vmat, vmat)
-    norms = np.sqrt(sqnorms).astype(np.float32) + np.float32(1e-10)
-    return IVFPacked(
-        centroids=index.centroids,
-        vmat=vmat,
-        ids=ids,
-        offsets=offsets,
-        norms=norms,
-        sqnorms=sqnorms.astype(np.float32),
+    vmat = np.asarray(flat.flatten(), dtype=np.float32).reshape(len(ids), -1)
+    return IVFPacked.build(
+        index.centroids, tbl["list_id"].to_numpy(), ids, vmat
     )
 
 
@@ -352,34 +352,19 @@ def ivf_search_local_one(
     ``Collection.search_ann``) calls this directly to skip two
     DataFrame constructions per request."""
     nprobe = _resolve_nprobe(nprobe, packed.centroids.shape[0])
-    eps = 1e-10
-    qmat = np.stack([np.asarray(query_vec, dtype=np.float32)])
-    if metric == "cosine":
-        qn = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True) + eps)
-    else:
-        qn = qmat
+    qmat = as_matrix([query_vec])
+    qn, q_sq = prep_queries(qmat, metric)
     cd = centroid_probe_scores(packed.centroids, qmat)
     probe = np.argsort(cd, axis=1)[:, :nprobe]
-    if metric == "l2":
-        q_sq = np.einsum("ij,ij->i", qn, qn)
-    from fastpyvectordb_spark.operators.knn import topk_rows_tied
-
     ds, iss = [], []
     for lid in probe[0]:
         s, e = int(packed.offsets[lid]), int(packed.offsets[lid + 1])
         if e <= s:
             continue
-        d = qn[0:1] @ packed.vmat[s:e].T
-        if metric == "cosine":
-            d /= packed.norms[s:e][None, :]
-            np.subtract(1.0, d, out=d)
-        elif metric == "l2":
-            d *= -2.0
-            d += packed.sqnorms[s:e][None, :]
-            d += q_sq[0]
-            np.sqrt(np.maximum(d, 0.0, out=d), out=d)
-        else:  # ip
-            np.negative(d, out=d)
+        d = fix_distances(
+            qn @ packed.vmat[s:e].T, metric,
+            packed.norms[s:e], packed.sqnorms[s:e], q_sq,
+        )
         ds.append(d[0])
         iss.append(packed.ids[s:e])
     if not ds:
@@ -419,7 +404,6 @@ def ivf_search_local(
     import pandas as pd
 
     nprobe = _resolve_nprobe(nprobe, packed.centroids.shape[0])
-    eps = 1e-10
     qids = queries_pdf["query_id"].to_numpy()
     nq = len(qids)
 
@@ -443,23 +427,12 @@ def ivf_search_local(
             }
         )
 
-    qmat = np.stack(
-        [np.asarray(v, dtype=np.float32) for v in queries_pdf["query_vec"]]
-    )
-    if metric == "cosine":
-        qn = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True) + eps)
-    else:
-        qn = qmat
+    qmat = as_matrix(queries_pdf["query_vec"])
+    qn, q_sq = prep_queries(qmat, metric)
     # probe selection: same expression as the distributed path, so both
     # paths pick identical lists (incl. tie order from argsort)
     cd = centroid_probe_scores(packed.centroids, qmat)
     probe = np.argsort(cd, axis=1)[:, :nprobe]  # (Q, nprobe)
-
-    if metric == "l2":
-        q_sq = np.einsum("ij,ij->i", qn, qn)
-
-    from fastpyvectordb_spark.operators.knn import topk_rows_tied
-
     out_d = np.full((nq, nprobe * k), np.inf, dtype=np.float32)
     out_i = np.full((nq, nprobe * k), -1, dtype=np.int64)
 
@@ -471,17 +444,11 @@ def ivf_search_local(
         if e <= s:
             return
         qidx, jidx = np.nonzero(probe == lid)
-        d = qn[qidx] @ packed.vmat[s:e].T  # (Q_l, n_l)
-        if metric == "cosine":
-            d /= packed.norms[s:e][None, :]
-            np.subtract(1.0, d, out=d)
-        elif metric == "l2":
-            d *= -2.0
-            d += packed.sqnorms[s:e][None, :]
-            d += q_sq[qidx][:, None]
-            np.sqrt(np.maximum(d, 0.0, out=d), out=d)
-        else:  # ip
-            np.negative(d, out=d)
+        d = fix_distances(
+            qn[qidx] @ packed.vmat[s:e].T,  # (Q_l, n_l)
+            metric, packed.norms[s:e], packed.sqnorms[s:e],
+            None if q_sq is None else q_sq[qidx],
+        )
         kk = min(k, e - s)
         # tie-aware cut: argpartition speed, (dist, id) exactness when
         # a distance tie crosses the boundary
@@ -540,58 +507,6 @@ def ivf_search_local(
     )
 
 
-def exact_search_packed(
-    packed: IVFPacked,
-    query_vec: Sequence[float],
-    k: int = 10,
-    metric: str = "cosine",
-):
-    """Single-query exact brute-force scan over the packed matrix — the
-    reference's BLAS vectorized scan (``vectordb_optimized.py:650-721``,
-    kernel ``parallel_search.py:105-134``) in its in-memory regime: one
-    GEMV over the contiguous float32 matrix with precomputed norms,
-    O(n) ``argpartition`` top-k. Returns ``[(id, dist), ...]`` sorted by
-    (dist, id). Same values as :func:`operators.knn.knn` modulo the
-    6-decimal rounding that operator applies.
-    """
-    if packed.vmat.shape[0] == 0:  # empty index: the kk cut raises
-        return []
-    from fastpyvectordb_spark.operators.knn import matvec, topk_rows_tied
-
-    eps = 1e-10
-    q = np.asarray(query_vec, dtype=np.float32)
-    if metric == "cosine":
-        q = q / (np.linalg.norm(q) + eps)
-    d = matvec(packed.vmat, q)  # (N,)
-    # over-select so boundary distance ties resolve by id inside the
-    # candidate set; the (dist, id)-exact sampled cut (topk_rows_tied,
-    # round 9) replaces the bare argpartition — same candidate-superset
-    # contract, ~4× less selection time over 100k rows, and boundary
-    # ties now keep the smaller id instead of an arbitrary member
-    cand = min(max(4 * k, 64), d.shape[0])
-    if metric == "cosine":
-        d /= packed.norms
-        d = 1.0 - d
-        p = topk_rows_tied(d[None, :], packed.ids, cand)[0]
-    elif metric == "l2":
-        d = packed.sqnorms - 2.0 * d + np.float32(q @ q)
-        d = np.sqrt(np.maximum(d, 0.0))
-        # the fp32 dot-expansion loses ~1e-3 absolute near zero
-        # (catastrophic cancellation); over-select, then recompute the
-        # candidates' distances exactly in float64 before the final cut
-        p = topk_rows_tied(d[None, :], packed.ids, cand)[0]
-        diff = packed.vmat[p].astype(np.float64) - q.astype(np.float64)
-        d = d.astype(np.float64)
-        d[p] = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-    else:  # ip
-        d = -d
-        p = topk_rows_tied(d[None, :], packed.ids, cand)[0]
-    kk = min(k, d.shape[0])
-    order = np.lexsort((packed.ids[p], d[p]))[:kk]
-    sel = p[order]
-    return [(int(i), float(v)) for i, v in zip(packed.ids[sel], d[sel])]
-
-
 # same driver-memory regime as Collection.SERVING_PACK_MAX_FLOATS:
 # below this many floats the packed index is cheaper than task
 # scheduling (round 7: sized to the reference's always-in-RAM model —
@@ -637,55 +552,6 @@ def ivf_search_auto(
         index, queries_pdf, k=k, nprobe=nprobe, metric=metric,
         id_col=id_col, vec_col=vec_col,
     ).toPandas()
-
-
-def exact_search_packed_batch(
-    packed: IVFPacked,
-    queries_pdf,
-    k: int = 10,
-    metric: str = "cosine",
-    id_col: str = "vec_id",
-):
-    """Batched exact scan over the packed matrix — the reference's
-    batch-GEMM search (``parallel_search.py:246-311``) in its in-memory
-    regime: the thread-fanned chunked GEMM kernel over the whole
-    matrix, then the same vectorized (dist, id) sort as
-    ``operators.knn.knn_batch_auto``. Returns pandas
-    ``(query_id, rank, <id_col>, dist)`` with identical values/order to
-    the distributed exact plan."""
-    import pandas as pd
-
-    from fastpyvectordb_spark.operators.knn import (
-        _gemm_topk_chunked,
-        query_blocks,
-    )
-
-    eps = 1e-10
-    qids = queries_pdf["query_id"].to_numpy()
-    qmat = np.stack(
-        [np.asarray(v, dtype=np.float32) for v in queries_pdf["query_vec"]]
-    )
-    if metric == "cosine":
-        qn = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True) + eps)
-    else:
-        qn = qmat
-    nq = len(qids)
-    kk = min(k, len(packed.ids))
-    d_sel, i_sel = _gemm_topk_chunked(
-        qn, packed.vmat, packed.ids, kk, metric,
-        n_threads=query_blocks(nq, 8),
-    )
-    order = np.lexsort((i_sel, d_sel), axis=1)
-    d_sorted = np.take_along_axis(d_sel, order, axis=1)
-    i_sorted = np.take_along_axis(i_sel, order, axis=1)
-    return pd.DataFrame(
-        {
-            "query_id": np.repeat(qids, kk),
-            "rank": np.tile(np.arange(1, kk + 1), nq),
-            id_col: i_sorted.ravel(),
-            "dist": d_sorted.ravel().astype("float64"),
-        }
-    )
 
 
 def ivf_add(

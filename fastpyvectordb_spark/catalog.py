@@ -181,6 +181,23 @@ class _RowIndex:
 _ANN_CLUSTER_MIN_FPB = 8
 
 
+def pack_rows(pack, ids, include_vector: bool = True) -> list[dict]:
+    """Row dicts of ``ids`` (input order, missing ids skipped) sliced
+    from a serving pack's resident Arrow table (see
+    :meth:`Collection.pack_serving`)."""
+    tbl, idx = pack["tbl"], pack["rows"]
+    out = []
+    for rid in ids:
+        pos = idx.get(rid)
+        if pos is None:
+            continue
+        row = tbl.slice(pos, 1).to_pylist()[0]
+        if not include_vector:
+            row.pop("embedding", None)
+        out.append(row)
+    return out
+
+
 @dataclass
 class CollectionConfig:
     """Schema contract + index knobs. ``m``/``ef_construction``/
@@ -1899,19 +1916,7 @@ class Collection:
         above the pack threshold — callers fall back to the
         distributed :meth:`get`."""
         pack = self.pack_serving()
-        if pack is None:
-            return None
-        tbl, idx = pack["tbl"], pack["rows"]
-        out = []
-        for rid in ids:
-            pos = idx.get(rid)
-            if pos is None:
-                continue
-            row = tbl.slice(pos, 1).to_pylist()[0]
-            if not include_vector:
-                row.pop("embedding", None)
-            out.append(row)
-        return out
+        return None if pack is None else pack_rows(pack, ids, include_vector)
 
     def count(self) -> int:
         # answer from the CACHED version-current pack when warm (zero
@@ -2448,9 +2453,7 @@ class Collection:
         concurrent commit swaps ``_serving_pack`` under multi-threaded
         servers, so callers that enrich hits afterwards must fetch the
         pack once and hand the SAME object here (server.py does)."""
-        import numpy as np
-
-        from fastpyvectordb_spark.operators.knn import matvec
+        from fastpyvectordb_spark.operators.knn import exact_scan
 
         if len(query_vec) != self.config.dimensions:
             raise ValueError(
@@ -2460,35 +2463,11 @@ class Collection:
             pack = self.pack_serving()
         if pack is None:
             return None
-        vmat = pack["vmat"]
-        if vmat.shape[0] == 0:
-            return []
-        metric = self.config.metric
-        eps = 1e-10
-        q = np.asarray(list(query_vec), dtype=np.float32)
-        if metric == "cosine":
-            qn = q / (np.linalg.norm(q) + eps)
-            d = 1.0 - matvec(vmat, qn) / pack["norms"]
-        elif metric == "l2":
-            d = pack["sqnorms"] - 2.0 * matvec(vmat, q) + np.float32(q @ q)
-            d = np.sqrt(np.maximum(d, 0.0))
-        else:  # ip
-            d = -matvec(vmat, q)
-        cand = min(max(4 * k, 64), d.shape[0])
-        p = np.argpartition(d, cand - 1)[:cand]
-        if metric == "l2":
-            # recompute candidates in float64: the fp32 dot expansion
-            # loses ~1e-3 absolute near zero (cancellation)
-            diff = vmat[p].astype(np.float64) - q.astype(np.float64)
-            d = d.astype(np.float64)
-            d[p] = np.sqrt(np.einsum("ij,ij->i", diff, diff))
-        kk = min(k, d.shape[0])
-        dr = np.round(d[p].astype(np.float64), 6)
-        order = np.lexsort((pack["ids"][p], dr))[:kk]
-        sel = p[order]
-        return [
-            (str(i), float(v)) for i, v in zip(pack["ids"][sel], dr[order])
-        ]
+        ids, dists = exact_scan(
+            pack["vmat"], pack["ids"], pack["norms"], pack["sqnorms"],
+            query_vec, k, self.config.metric,
+        )
+        return [(str(i), float(v)) for i, v in zip(ids, dists)]
 
     # -- ANN index lifecycle (reference vectordb_optimized.py:271-309:
     # a live per-collection index maintained through DML and persisted

@@ -282,10 +282,58 @@ def query_blocks(nq: int, per_block: int) -> int:
     return max(1, min(16, os.cpu_count() or 1, nq // per_block))
 
 
+def as_matrix(vecs):
+    """``(n, D)`` float32 matrix of a sequence of vectors (lists, arrays
+    or a pandas column of either)."""
+    import numpy as np
+
+    return np.stack([np.asarray(v, dtype=np.float32) for v in vecs])
+
+
+def prep_queries(qmat, metric):
+    """The one query preparation of every packed kernel: ``(qn, q_sq)``
+    for a ``(Q, D)`` float32 query matrix. ``qn`` is the GEMM operand
+    (unit rows for cosine, ``qmat`` itself otherwise); ``q_sq`` is the
+    ``(Q, 1)`` squared norm :func:`fix_distances` adds for l2, else
+    None. Rows are prepared independently, so a query's values do not
+    depend on the batch it arrives in."""
+    import numpy as np
+
+    if metric == "cosine":
+        qn = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True) + 1e-10)
+    else:
+        qn = qmat
+    q_sq = np.einsum("ij,ij->i", qn, qn)[:, None] if metric == "l2" else None
+    return qn, q_sq
+
+
+def fix_distances(d, metric, norms, sqnorms, q_sq):
+    """Turn a raw ``(Q, n)`` float32 dot block ``d = qn·vᵀ`` into
+    metric distances, in place: cosine ``1 − d/‖v‖`` (``norms`` holds
+    ``‖v‖ + 1e-10``), l2 ``√max(‖v‖² − 2d + ‖q‖², 0)``, ip ``−d``.
+    ``norms``/``sqnorms`` are the block's per-row values (only the
+    metric's own one is read); each caller computes them its own way,
+    which keeps its distances what they were."""
+    import numpy as np
+
+    if metric == "cosine":
+        d /= norms
+        np.subtract(1.0, d, out=d)
+    elif metric == "l2":
+        d *= -2.0
+        d += sqnorms
+        d += q_sq
+        np.sqrt(np.maximum(d, 0.0, out=d), out=d)
+    else:  # ip
+        np.negative(d, out=d)
+    return d
+
+
 def _gemm_topk_chunked(
-    qn, vmat, ids, k, metric, chunk_floats=8_000_000, n_threads=1
+    qmat, vmat, ids, k, metric, chunk_floats=8_000_000, n_threads=1
 ):
-    """Q-major chunked GEMM top-k: returns (dist (Q,k) f32, idx (Q,k) i64).
+    """Q-major chunked GEMM top-k of the raw ``(Q, D)`` query matrix:
+    returns (dist (Q,k) f32, idx (Q,k) i64).
 
     The distance matrix is never materialized whole — work proceeds in
     vector chunks sized so the per-chunk ``(Q, ch)`` buffer stays a few
@@ -304,7 +352,7 @@ def _gemm_topk_chunked(
     """
     import numpy as np
 
-    eps = 1e-10
+    qn, q_sq = prep_queries(qmat, metric)
     nq = qn.shape[0]
     n = vmat.shape[0]
     kk = min(k, n)
@@ -313,29 +361,23 @@ def _gemm_topk_chunked(
 
     def run_queries(qlo: int, qhi: int) -> None:
         qb = qn[qlo:qhi]
+        qb_sq = None if q_sq is None else q_sq[qlo:qhi]
         nqb = qhi - qlo
         ch = max(kk, chunk_floats // max(nqb, 1))
         rows = np.arange(nqb)[:, None]
         bd = best_d[qlo:qhi]
         bi = best_i[qlo:qhi]
-        if metric == "l2":
-            q_sq = np.einsum("ij,ij->i", qb, qb)[:, None]
         for s in range(0, n, ch):
             e = min(s + ch, n)
             vc = np.ascontiguousarray(vmat[s:e], dtype=np.float32)
             d = qb @ vc.T  # (Qb, ch)
-            if metric == "cosine":
-                vn = np.linalg.norm(vc, axis=1) + eps
-                d /= vn[None, :]
-                np.subtract(1.0, d, out=d)
-            elif metric == "l2":
-                v_sq = np.einsum("ij,ij->i", vc, vc)[None, :]
-                d *= -2.0
-                d += v_sq
-                d += q_sq
-                np.sqrt(np.maximum(d, 0.0, out=d), out=d)
-            else:  # ip
-                np.negative(d, out=d)
+            fix_distances(
+                d, metric,
+                np.linalg.norm(vc, axis=1) + 1e-10 if metric == "cosine"
+                else None,
+                np.einsum("ij,ij->i", vc, vc) if metric == "l2" else None,
+                qb_sq,
+            )
             kc = min(kk, e - s)
             # tie-aware cut + (dist, id) merge: distance ties at every
             # boundary keep the smaller id — the ORDER BY dist, id
@@ -366,6 +408,82 @@ def _gemm_topk_chunked(
     return best_d, best_i
 
 
+# rows from which the exact single-query scan over-selects with the
+# sampled cut of topk_rows_tied instead of a bare argpartition. Per
+# query on one core of a 4-core Xeon, whole scan: 10K×128 rows 0.65 ms
+# with argpartition against 0.80 ms sampled, level near 30K rows,
+# 100K×64 rows 2.7 ms against 2.0 ms
+_SAMPLED_CUT_MIN_ROWS = 32_768
+
+
+def exact_scan(vmat, ids, norms, sqnorms, query_vec, k, metric):
+    """The one exact single-query scan over a driver-resident packed
+    matrix (the serving pack behind ``Collection.search_local``, or an
+    ``ann.ivf.IVFPacked``) — the reference's BLAS vectorized scan
+    (``vectordb_optimized.py:650-721``): a pooled :func:`matvec`, the
+    shared fixup, an over-select of max(4k, 64) candidates, float64 l2
+    distances for the candidates, then ROUND 6 and (dist, id) order —
+    the values and order of :func:`knn`. Returns ``(ids, dists)``
+    arrays of at most ``k`` hits."""
+    import numpy as np
+
+    n = vmat.shape[0]
+    if n == 0:
+        return ids[:0], np.empty(0, dtype=np.float64)
+    q = np.asarray(query_vec, dtype=np.float32)
+    qn, q_sq = prep_queries(q[None, :], metric)
+    d = matvec(vmat, qn[0])  # (N,)
+    fix_distances(d[None, :], metric, norms, sqnorms, q_sq)
+    cand = min(max(4 * k, 64), n)
+    if n < _SAMPLED_CUT_MIN_ROWS:
+        p = np.argpartition(d, cand - 1)[:cand]
+    else:
+        p = topk_rows_tied(d[None, :], ids, cand)[0]
+    if metric == "l2":
+        # the fp32 dot expansion loses ~1e-3 absolute near zero
+        # (cancellation): the candidates' distances are recomputed
+        # exactly in float64 before the final cut
+        diff = vmat[p].astype(np.float64) - q.astype(np.float64)
+        dp = np.sqrt(np.einsum("ij,ij->i", diff, diff))
+    else:
+        dp = d[p].astype(np.float64)
+    dr = np.round(dp, ROUND_DIGITS)
+    order = np.lexsort((ids[p], dr))[:k]
+    return ids[p[order]], dr[order]
+
+
+def exact_scan_batch(vmat, ids, queries_pdf, k, metric, id_col="vec_id"):
+    """The one exact batch scan over a driver-resident matrix — the
+    reference's batch-GEMM search (``parallel_search.py:246-311``):
+    :func:`_gemm_topk_chunked` fanned over query blocks, then a
+    vectorized per-query (dist, id) sort. ``queries_pdf`` has
+    ``query_id`` and ``query_vec``; returns pandas ``(query_id, rank,
+    <id_col>, dist)`` with unrounded distances, like
+    :func:`knn_batch_gemm`."""
+    import numpy as np
+
+    qids = queries_pdf["query_id"].to_numpy()
+    nq = len(qids)
+    kk = min(k, len(ids))
+    # ≥ 8 queries per block (4-core Xeon, 100K×128: 32 queries
+    # 69 → 55 ms at 4 blocks; 256 queries 369 → 128 ms)
+    d_sel, i_sel = _gemm_topk_chunked(
+        as_matrix(queries_pdf["query_vec"]), vmat, ids, kk, metric,
+        n_threads=query_blocks(nq, 8),
+    )
+    order = np.lexsort((i_sel, d_sel), axis=1)
+    return pd.DataFrame(
+        {
+            "query_id": np.repeat(qids, kk),
+            "rank": np.tile(np.arange(1, kk + 1), nq),
+            id_col: np.take_along_axis(i_sel, order, axis=1).ravel(),
+            "dist": np.take_along_axis(d_sel, order, axis=1)
+            .ravel()
+            .astype("float64"),
+        }
+    )
+
+
 def knn_batch_gemm(
     vectors: DataFrame,
     queries_pdf: pd.DataFrame,
@@ -382,15 +500,8 @@ def knn_batch_gemm(
     """
     import numpy as np
 
-    eps = 1e-10
     qids = queries_pdf["query_id"].to_numpy()
-    qmat = np.stack(
-        [np.asarray(v, dtype=np.float32) for v in queries_pdf["query_vec"]]
-    )
-    if metric == "cosine":
-        qnorm = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True) + eps)
-    else:
-        qnorm = qmat
+    qmat = as_matrix(queries_pdf["query_vec"])
 
     id_type = vectors.schema[id_col].dataType
     out_schema = StructType(
@@ -407,9 +518,7 @@ def knn_batch_gemm(
             if pdf.empty:
                 continue
             ids = pdf[id_col].to_numpy()
-            vmat = np.stack(
-                [np.asarray(v, dtype=np.float32) for v in pdf[vec_col]]
-            )
+            vmat = as_matrix(pdf[vec_col])
             # ascending ids → the kernel's stable cuts break distance
             # ties by id, matching the global window's ORDER BY; the
             # kernel itself ranks by POSITION (== id order here), so
@@ -418,9 +527,8 @@ def knn_batch_gemm(
             ids, vmat = ids[o], vmat[o]
             kk = min(k, len(ids))
             pos = np.arange(len(ids), dtype=np.int64)
-            best_d, best_i = _gemm_topk_chunked(qnorm, vmat, pos, kk, metric)
+            best_d, best_i = _gemm_topk_chunked(qmat, vmat, pos, kk, metric)
             best_i = ids[best_i]
-            nq = len(qids)
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(qids, kk),
@@ -505,31 +613,4 @@ def knn_batch_auto(
     vmat = np.asarray(flat.flatten(), dtype=np.float32).reshape(len(ids), dims)
     o = np.argsort(ids, kind="stable")  # ties-by-id in the kernel cuts
     ids, vmat = ids[o], np.ascontiguousarray(vmat[o])
-    qmat = np.stack(
-        [np.asarray(v, dtype=np.float32) for v in queries_pdf["query_vec"]]
-    )
-    qids = queries_pdf["query_id"].to_numpy()
-    eps = 1e-10
-    if metric == "cosine":
-        qn = qmat / (np.linalg.norm(qmat, axis=1, keepdims=True) + eps)
-    else:
-        qn = qmat
-    kk = min(k, len(ids))
-    nq = len(qids)
-    # ≥ 8 queries per block (4-core Xeon, 100K×128: 32 queries
-    # 69 → 55 ms at 4 blocks; 256 queries 369 → 128 ms)
-    d_sel, i_sel = _gemm_topk_chunked(
-        qn, vmat, ids, kk, metric, n_threads=query_blocks(nq, 8)
-    )  # (Q, kk)
-    # per-query (dist, id) sort, vectorized across all queries at once
-    order = np.lexsort((i_sel, d_sel), axis=1)  # (Q, kk)
-    d_sorted = np.take_along_axis(d_sel, order, axis=1)
-    i_sorted = np.take_along_axis(i_sel, order, axis=1)
-    return pd.DataFrame(
-        {
-            "query_id": np.repeat(qids, kk),
-            "rank": np.tile(np.arange(1, kk + 1), nq),
-            id_col: i_sorted.ravel(),
-            "dist": d_sorted.ravel().astype("float64"),
-        }
-    )
+    return exact_scan_batch(vmat, ids, queries_pdf, k, metric, id_col)

@@ -25,7 +25,7 @@ import urllib.parse
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from fastpyvectordb_spark.catalog import VectorDB
+from fastpyvectordb_spark.catalog import VectorDB, pack_rows
 from fastpyvectordb_spark.session import blas_threads
 
 _INTERNAL = ("id", "embedding")
@@ -310,136 +310,72 @@ class _Handler(BaseHTTPRequestHandler):
         # the reference's per-request quality override (server.py:75,
         # 373) — mapped to nprobe by Collection.nprobe_from_ef; the
         # exact path ignores it (exact needs no quality knob).
+        #
+        # Unfiltered searches of a resident collection read ONE pack
+        # snapshot and enrich from it: under ThreadingHTTPServer a
+        # concurrent commit can swap in a new pack between scoring and
+        # enrichment. The exact route scores against that snapshot too
+        # (Collection.search_local), with zero Spark jobs per request —
+        # per-query distributed jobs would pay the ~0.3 s scheduling
+        # floor. search_ann refreshes its own state, so an ANN hit the
+        # snapshot predates is dropped by the enrichment.
+        pack = c.pack_serving() if where is None else None
+        hits = None
         if ann and where is None:
-            pack = c.pack_serving()
+            # an oversize collection has no pack: search_ann serves the
+            # distributed probed fallback and enrichment the distributed
+            # get (one bounded k-id job)
             hits = c.search_ann(vector, k=k, ef_search=ef_search)
-            if hits is not None:
-                if pack is not None:
-                    return self._enrich_pack_hits(
-                        c, pack, hits, include_vectors
-                    )
-                # oversize collection: search_ann served the distributed
-                # probed fallback — enrich through the distributed get
-                # (one bounded k-id job; no pack exists at this size)
-                return self._enrich_distributed_hits(
-                    c, hits, include_vectors
-                )
-        return self._run_search_exact(c, vector, k, where, include_vectors)
+        if hits is None and pack is not None:
+            hits = c.search_local(vector, k=k, pack=pack)
+        if hits is None:
+            # filtered or oversize: the distributed kNN plan prunes to
+            # (id, dist); enrichment is a k-row lookup by id afterwards
+            # (reference server.py:374-390 returns metadata per hit and
+            # vectors on request)
+            hits = [
+                (r["id"], r["dist"])
+                for r in c.search(vector, k=k, where=where).collect()
+            ]
+        return self._enrich(c, [hits], include_vectors, pack)[0]
 
     @staticmethod
-    def _enrich_distributed_hits(c, hits, include_vectors):
-        dists = {rid: d for rid, d in hits}
-        rows = {
-            r["id"]: r.asDict()
-            for r in c.get(list(dists), include_vector=True).collect()
-        }
-        out = []
-        for rid, dist in hits:  # preserve rank order
-            row = rows.get(rid)
-            if row is None:  # deleted by a concurrent commit
-                continue
-            out.append(
-                {
-                    "id": rid,
-                    "score": float(dist),
-                    "metadata": _meta(row),
-                    **(
-                        {"vector": [float(x) for x in row["embedding"]]}
-                        if include_vectors
-                        else {}
-                    ),
-                }
-            )
-        return out
-
-    @staticmethod
-    def _enrich_pack_hits(c, pack, hits, include_vectors):
-        """Metadata/vector enrichment of (id, dist) hits against the
-        handler-held pack snapshot (commit-race-safe). On the exact
-        path the hits were scored against this same snapshot; on the
-        ANN path search_ann refreshes its own state, so a concurrent
-        commit can surface an id the handler's snapshot predates —
-        such a hit is skipped rather than KeyErroring the request."""
-        tbl, idx = pack["tbl"], pack["rows"]
-        out = []
-        for rid, dist in hits:
-            pos = idx.get(rid)
-            if pos is None:
-                continue
-            row = tbl.slice(pos, 1).to_pylist()[0]
-            out.append(
-                {
-                    "id": rid,
-                    "score": float(dist),
-                    "metadata": _meta(row),
-                    **(
-                        {"vector": [float(x) for x in row["embedding"]]}
-                        if include_vectors
-                        else {}
-                    ),
-                }
-            )
-        return out
-
-    def _run_search_exact(self, c, vector, k, where, include_vectors):
-        # Unfiltered single-query search serves from the driver-resident
-        # pack (Collection.search_local): zero Spark jobs per request —
-        # the interactive-serving regime where per-query distributed
-        # jobs would pay the ~0.3 s scheduling floor. Metadata/vector
-        # enrichment reads the SAME pack. Filtered queries (pre-filter
-        # needs the metadata predicate pushed into the scan) and
-        # over-threshold collections stay on the distributed plan.
-        if where is None:
-            # fetch the pack ONCE and score against that same snapshot:
-            # under ThreadingHTTPServer a concurrent commit can swap in
-            # a new pack between scoring and enrichment, and a hit id
-            # deleted in the new version would KeyError on idx[rid]
-            # only take the local path when the pack snapshot itself is
-            # available: with pack=None, search_local re-fetches
-            # internally, and a concurrent commit between the two calls
-            # could yield non-None hits against a None handler-local
-            # pack (TypeError at pack["tbl"] below)
-            pack = c.pack_serving()
-            hits = (
-                c.search_local(vector, k=k, pack=pack)
-                if pack is not None
-                else None
-            )
-            if hits is not None:
-                return self._enrich_pack_hits(c, pack, hits, include_vectors)
-        # the kNN plan prunes to (id, dist) — the right scan shape; the
-        # response's metadata/vector enrichment is a k-row lookup by id
-        # afterwards (reference server.py:374-390 returns metadata per
-        # hit and vectors on request)
-        rows = [r.asDict() for r in c.search(vector, k=k, where=where).collect()]
-        detail: dict = {}
-        if rows:
-            detail = {
-                d["id"]: d
-                for d in (
-                    x.asDict()
-                    for x in c.get(
-                        [r["id"] for r in rows], include_vector=True
-                    ).collect()
-                )
-            }
+    def _enrich(c, hit_lists, include_vectors, pack=None):
+        """Response rows for ranked hits, one ``[(id, dist), ...]`` list
+        per query, with ONE lookup across every hit id: the
+        handler-held ``pack`` snapshot when given, else the resident
+        pack (:meth:`Collection.get_local`, zero jobs), else the
+        distributed bucket-pruned :meth:`Collection.get`. A hit whose
+        row is gone (deleted by a concurrent commit) is dropped."""
+        ids = sorted({rid for hits in hit_lists for rid, _ in hits})
+        if not ids:
+            rows = []
+        elif pack is not None:
+            rows = pack_rows(pack, ids, include_vectors)
+        else:
+            rows = c.get_local(ids, include_vector=include_vectors)
+            if rows is None:
+                rows = [
+                    r.asDict()
+                    for r in c.get(ids, include_vector=include_vectors).collect()
+                ]
+        detail = {r["id"]: r for r in rows}
         return [
-            {
-                "id": r["id"],
-                "score": float(r["dist"]),
-                "metadata": _meta(detail.get(r["id"], {})),
-                **(
-                    {
-                        "vector": [
-                            float(x)
-                            for x in detail[r["id"]]["embedding"]
-                        ]
-                    }
-                    if include_vectors and r["id"] in detail
-                    else {}
-                ),
-            }
-            for r in rows
+            [
+                {
+                    "id": rid,
+                    "score": float(dist),
+                    "metadata": _meta(detail[rid]),
+                    **(
+                        {"vector": [float(x) for x in detail[rid]["embedding"]]}
+                        if include_vectors
+                        else {}
+                    ),
+                }
+                for rid, dist in hits
+                if rid in detail
+            ]
+            for hits in hit_lists
         ]
 
     def search(self, name: str):
@@ -472,39 +408,18 @@ class _Handler(BaseHTTPRequestHandler):
         c = self._collection(name)
         t0 = time.perf_counter()
         vectors = b["vectors"]
-        rows = [
-            r.asDict()
-            for r in c.search_batch(
+        hits: list[list] = [[] for _ in vectors]
+        for r in sorted(
+            c.search_batch(
                 vectors, k=int(b.get("k", 10)), where=b.get("filter")
-            ).collect()
-        ]
-        detail: dict = {}
-        hit_ids = sorted({r["id"] for r in rows})
-        if hit_ids:
-            # pack-backed enrichment when resident (zero extra jobs);
-            # distributed bucket-pruned lookup above the threshold
-            local = c.get_local(hit_ids)
-            detail = {
-                d["id"]: d
-                for d in (
-                    local
-                    if local is not None
-                    else (x.asDict() for x in c.get(hit_ids).collect())
-                )
-            }
-        out: list[list] = [[] for _ in vectors]
-        for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
-            out[int(r["query_id"])].append(
-                {
-                    "id": r["id"],
-                    "score": float(r["dist"]),
-                    "metadata": _meta(detail.get(r["id"], {})),
-                }
-            )
+            ).collect(),
+            key=lambda r: (r["query_id"], r["rank"]),
+        ):
+            hits[int(r["query_id"])].append((r["id"], r["dist"]))
         self._send(
             200,
             {
-                "results": out,
+                "results": self._enrich(c, hits, False),
                 "took_ms": round((time.perf_counter() - t0) * 1e3, 3),
             },
         )

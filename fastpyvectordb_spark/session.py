@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults target the local[32] test harness but every knob is the one
-you'd set on a 1000-executor cluster too: AQE on (runtime re-planning,
+Local mode gets one task slot per core unless ``SPARK_GRAFT_CPUS``
+says otherwise; every other knob is the one you'd set on a
+1000-executor cluster too: AQE on (runtime re-planning,
 skew-join splitting, partition coalescing), Arrow on (vectorized
 pandas-UDF exchange), sensible shuffle parallelism.
 """
@@ -109,7 +110,9 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # one task slot per core by default: a fixed local[32] on a 4-core
+    # host started 32-64 Python workers per stage and OOM-killed the JVM
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     blas_pin = {
         var: "1"
@@ -139,6 +142,15 @@ def get_spark(
     # GEMM finishes).
     for var, val in blas_pin.items():
         builder = builder.config(f"spark.executorEnv.{var}", val)
+    # Python workers unpickle package functions by reference (the UDFs
+    # of ann.kmeans, ann.ivf and ann.ivfpq), so every worker must import
+    # this package whatever the driver's working directory is: its
+    # parent dir goes ahead of any PYTHONPATH already set
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pypath = (root, os.environ.get("PYTHONPATH"))
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH", os.pathsep.join(p for p in pypath if p)
+    )
     # The driver gets the same policy. Its BLAS calls are per-request
     # matvecs and small GEMMs: a multi-threaded OpenBLAS wakes every
     # worker for each one, and the workers then spin-wait between

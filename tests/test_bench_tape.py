@@ -60,7 +60,6 @@ def _extras_like_r11():
         for k, v in rec.items()
         if k not in ("metric", "value", "unit", "sf", "queries")
     }
-    extras["reran"] = ["row"] * 22
     extras.update(
         ivfpq_build_sec=121.3, ivf_build_sec=9.1,
         collection_ann_build_sec=14.2, ann_cluster_optimize_sec=5.5,
@@ -83,7 +82,6 @@ def test_all_queries_survive_at_bench_shape(bench_mod):
     assert d["host_index"] == 0.385
     assert d["ivfpq_recall_at_k"] == 0.9008, "recall must keep 4 decimals"
     assert d["ann_files_skipped_frac"] == 0.7939
-    assert d["reran"] == 22
     # baseline-gate rows present (compressed to ints >= 100)
     for k in ("serving_local_qps", "collection_ann_batch_qps",
               "exact_local_qps", "bq_local_qps", "sq_local_qps",

@@ -134,7 +134,8 @@ def test_traverse_zero_depth_returns_empty_dataframe(spark):
 def test_exact_search_packed_empty_index(spark):
     import numpy as np
 
-    from fastpyvectordb_spark.ann.ivf import IVFPacked, exact_search_packed
+    from fastpyvectordb_spark.ann.ivf import IVFPacked
+    from fastpyvectordb_spark.operators.knn import exact_scan
 
     packed = IVFPacked(
         centroids=np.zeros((1, 4)),
@@ -144,4 +145,8 @@ def test_exact_search_packed_empty_index(spark):
         sqnorms=np.empty((0,), dtype=np.float32),
         norms=np.empty((0,), dtype=np.float32),
     )
-    assert exact_search_packed(packed, [1.0, 0.0, 0.0, 0.0], k=5) == []
+    ids, dists = exact_scan(
+        packed.vmat, packed.ids, packed.norms, packed.sqnorms,
+        [1.0, 0.0, 0.0, 0.0], 5, "cosine",
+    )
+    assert len(ids) == 0 and len(dists) == 0

@@ -37,23 +37,94 @@ def test_hybrid_indexed_equals_oneshot(spark, corpus):
         assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
-def test_exact_search_packed_matches_knn(spark, corpus):
-    from fastpyvectordb_spark.ann.ivf import exact_search_packed, ivf_build, ivf_pack
-    from fastpyvectordb_spark.operators.knn import knn
+def test_exact_search_packed_matches_knn(spark, corpus, tmp_path, monkeypatch):
+    """Every packed kernel equals the distributed ``knn`` exactly — ids,
+    order and ROUND 6 distances — for every metric, on a table where
+    the queries' nearest rows each have a duplicate under a larger id
+    (distance ties the (dist, id) order must break): the one exact
+    scan with either over-select cut, ``Collection.search_local``
+    (against ``Collection.search``, the same operator over string ids),
+    and the IVF kernels ``ivf_search_local_one`` and
+    ``ivf_search_local`` probing every list (their l2 distances stay
+    float32, see below)."""
+    import pandas as pd
 
-    emb = corpus.select(F.col("doc_id").alias("vec_id"), "embedding")
-    packed = ivf_pack(ivf_build(emb, n_lists=4, max_iter=2))
-    qvec = emb.filter(F.col("vec_id") == 7).head()["embedding"]
+    from fastpyvectordb_spark.ann.ivf import (
+        ivf_build,
+        ivf_pack,
+        ivf_search_local,
+        ivf_search_local_one,
+    )
+    from fastpyvectordb_spark.catalog import VectorDB
+    from fastpyvectordb_spark.operators import knn as knn_mod
+    from fastpyvectordb_spark.operators.knn import exact_scan, knn
+
+    base = corpus.select(F.col("doc_id").alias("vec_id"), "embedding")
+    qvecs = [
+        base.filter(F.col("vec_id") == i).head()["embedding"] for i in (7, 3)
+    ]
+    near = {
+        r["vec_id"]
+        for q in qvecs
+        for m in ("cosine", "l2", "ip")
+        for r in knn(base, q, k=10, metric=m).collect()
+    }
+    emb = base.unionByName(
+        base.filter(F.col("vec_id").isin(sorted(near))).withColumn(
+            "vec_id", F.col("vec_id") + 1_000_000
+        )
+    ).cache()
+    n_lists = 4
+    packed = ivf_pack(ivf_build(emb, n_lists=n_lists, max_iter=2))
+    qpdf = pd.DataFrame({"query_id": [0, 1], "query_vec": qvecs})
+    db = VectorDB(spark, str(tmp_path / "vdb"))
     for metric in ("cosine", "l2", "ip"):
-        got = exact_search_packed(packed, qvec, k=10, metric=metric)
-        want = [
-            (r["vec_id"], r["dist"])
-            for r in knn(emb, qvec, k=10, metric=metric).collect()
-        ]
-        assert [i for i, _ in got] == [i for i, _ in want], metric
-        assert np.allclose(
-            [d for _, d in got], [d for _, d in want], atol=1e-5
-        ), metric
+        batch = ivf_search_local(
+            packed, qpdf, k=10, nprobe=n_lists, metric=metric
+        )
+        for qi, qvec in enumerate(qvecs):
+            want = [
+                (r["vec_id"], r["dist"])
+                for r in knn(emb, qvec, k=10, metric=metric).collect()
+            ]
+            assert len({d for _, d in want}) < len(want), "no tie in top-10"
+            for min_rows in (1 << 30, 0):  # argpartition, sampled cut
+                monkeypatch.setattr(knn_mod, "_SAMPLED_CUT_MIN_ROWS", min_rows)
+                ids, dists = exact_scan(
+                    packed.vmat, packed.ids, packed.norms, packed.sqnorms,
+                    qvec, 10, metric,
+                )
+                got = list(zip(ids.tolist(), dists.tolist()))
+                assert got == want, (metric, min_rows)
+            monkeypatch.undo()
+            ids, dists = ivf_search_local_one(
+                packed, qvec, k=10, nprobe=n_lists, metric=metric
+            )
+            b = batch[batch["query_id"] == qi].sort_values("rank")
+            for name, got_ids, got_d in (
+                ("one", ids, dists),
+                ("batch", b["vec_id"].to_numpy(), b["dist"].to_numpy()),
+            ):
+                assert got_ids.tolist() == [i for i, _ in want], (metric, name)
+                # the IVF kernels keep float32 l2 (no float64 recompute):
+                # off by up to ~1e-6 from the exact expression
+                tol = 2e-6 if metric == "l2" else 0.0
+                assert np.allclose(
+                    np.round(got_d, 6), [d for _, d in want], rtol=0, atol=tol
+                ), (metric, name)
+
+        c = db.create_collection(f"c_{metric}", dimensions=len(qvecs[0]),
+                                 metric=metric)
+        c.insert_batch(
+            emb.select(F.col("vec_id").cast("string").alias("id"),
+                       "embedding")
+        )
+        for qvec in qvecs:
+            want = [
+                (r["id"], r["dist"])
+                for r in c.search(qvec, k=10).collect()
+            ]
+            assert c.search_local(qvec, k=10) == want, (metric, "local")
 
 
 @pytest.mark.slow
@@ -154,20 +225,17 @@ def test_hybrid_local_matches_distributed(spark, corpus):
             assert g[1:] == pytest.approx(w[1:], abs=2e-6), (qtext, g, w)
 
 
-def test_exact_batch_packed_matches_auto(spark, corpus):
-    """Packed batch exact scan must reproduce knn_batch_auto (which is
-    itself parity-checked against the oracle-gated knn_batch plan)."""
+def test_exact_batch_local_matches_gemm(spark, corpus):
+    """``knn_batch_auto``'s driver-local arm (the one exact batch scan)
+    must reproduce the distributed ``knn_batch_gemm`` plan."""
     import pandas as pd
 
-    from fastpyvectordb_spark.ann.ivf import (
-        exact_search_packed_batch,
-        ivf_build,
-        ivf_pack,
+    from fastpyvectordb_spark.operators.knn import (
+        knn_batch_auto,
+        knn_batch_gemm,
     )
-    from fastpyvectordb_spark.operators.knn import knn_batch_auto
 
     emb = corpus.select(F.col("doc_id").alias("vec_id"), "embedding")
-    packed = ivf_pack(ivf_build(emb, n_lists=4, max_iter=2))
     rows = emb.filter(F.col("vec_id") < 6).orderBy("vec_id").collect()
     qpdf = pd.DataFrame(
         {
@@ -175,9 +243,9 @@ def test_exact_batch_packed_matches_auto(spark, corpus):
             "query_vec": [list(r["embedding"]) for r in rows],
         }
     )
-    for metric in ("cosine", "ip"):
-        got = exact_search_packed_batch(packed, qpdf, k=10, metric=metric)
-        want = knn_batch_auto(emb, qpdf, k=10, metric=metric)
+    for metric in ("cosine", "l2", "ip"):
+        got = knn_batch_auto(emb, qpdf, k=10, metric=metric)
+        want = knn_batch_gemm(emb, qpdf, k=10, metric=metric).toPandas()
         g = got.sort_values(["query_id", "rank"]).reset_index(drop=True)
         w = want.sort_values(["query_id", "rank"]).reset_index(drop=True)
         assert g["vec_id"].tolist() == w["vec_id"].tolist(), metric

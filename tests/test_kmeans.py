@@ -147,3 +147,42 @@ def test_package_has_no_mllib_import():
                     if pat.search(fh.read()):
                         hits.append(os.path.join(d, f))
     assert not hits, hits
+
+
+def test_assign_col_runs_in_workers_from_any_directory():
+    """The ``pandas_udf`` arm of ``assign_col`` unpickles package
+    functions in Spark's Python workers, so a driver started outside
+    the repo, without ``PYTHONPATH``, must still ship the package's
+    location to them (``session.get_spark``)."""
+    import subprocess
+    import sys
+    import tempfile
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+import numpy as np
+from pyspark.sql import functions as F
+from fastpyvectordb_spark.ann import kmeans
+from fastpyvectordb_spark.session import get_spark
+
+spark = get_spark("worker-import", master="local[2]", shuffle_partitions=2)
+c = np.random.RandomState(0).randn(64, 32)  # 2,048 floats: the UDF arm
+df = spark.createDataFrame(
+    [(i, [float(x) for x in c[i % 64]]) for i in range(256)],
+    "i int, v array<float>",
+)
+got = [r["l"] for r in df.select(
+    "i", kmeans.assign_col(F.col("v"), c).alias("l")
+).orderBy("i").collect()]
+assert got == [i % 64 for i in range(256)], got
+print("ASSIGNED", len(got))
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tempfile.gettempdir(), env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert "ASSIGNED 256" in out.stdout, out.stderr[-3000:]

@@ -30,12 +30,12 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from fastpyvectordb_spark.ann.ivf import (
-        exact_search_packed,
         ivf_build,
         ivf_pack,
         ivf_search_local,
         ivf_search_local_one,
     )
+    from fastpyvectordb_spark.operators.knn import exact_scan
     from fastpyvectordb_spark.session import get_spark
 
     spark = get_spark()
@@ -66,7 +66,11 @@ def main() -> None:
         np.float64
     )
     truth = [
-        {i for i, _ in exact_search_packed(packed, q, k=10)} for q in qmat
+        set(exact_scan(
+            packed.vmat, packed.ids, packed.norms, packed.sqnorms, q, 10,
+            "cosine",
+        )[0])
+        for q in qmat
     ]
     qpdf = pd.DataFrame(
         {"query_id": range(len(qmat)), "query_vec": [list(q) for q in qmat]}
